@@ -12,13 +12,9 @@ are assigned in arrival order).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -27,9 +23,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pyspark.sql.types import ArrayType
-
-from ._util import coalesce_chunks
+from ._util import keyed_state_stream
 from ..functions.text import doc_hash60, normalized_text
 
 _OUT_SCHEMA = StructType(
@@ -42,13 +36,6 @@ _OUT_SCHEMA = StructType(
 )
 
 _STATE_SCHEMA = StructType([StructField("canonical_id", LongType())])
-
-_SHARD_EXACT_STATE_SCHEMA = StructType(
-    [
-        StructField("hashes", ArrayType(LongType())),
-        StructField("canonicals", ArrayType(LongType())),
-    ]
-)
 
 
 def streaming_exact_dedup(
@@ -65,102 +52,46 @@ def streaming_exact_dedup(
 
     ``shard_state``: with None (default) state is keyed per content
     hash — one long per distinct content, the unbounded-scale layout.
-    With an integer N, hashes are HASH-SHARDED into N state keys and
+    With an integer N, hashes are hash-sharded into N state keys and
     each shard keeps a {content_hash -> canonical} map: the per-batch
-    Python handler runs N times instead of once per distinct content
-    seen in the batch (the streaming-MinHash shard rule — r13 profile:
-    the per-key handler round-trips, not the state store, were the
-    micro-batch floor). Output is IDENTICAL in both modes (exact hash
-    keys in the shard map, batch rows processed in the same doc_id
-    order), so the same oracle gates both. Stay with None when
-    distinct-content cardinality per shard would grow without bound.
+    Python handler runs once per touched shard instead of once per
+    distinct content seen in the batch. A shard that gains a content
+    rewrites its whole map, O(contents per shard) per batch; a shard
+    that sees only known contents writes nothing. Output is IDENTICAL
+    in both modes (one kernel, exact hash keys, rows in doc_id order),
+    so the same oracle gates both. Stay with None when distinct-content
+    cardinality per shard would grow without bound.
     """
     hashed = docs.select(
         F.col(id_col).cast("long").alias("doc_id"),
         doc_hash60(normalized_text(F.col(text_col))).alias("content_hash"),
     )
 
-    def handle(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        content_hash = key[0]
-        canonical = state.get[0] if state.exists else None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values("doc_id")
-            ids = [int(x) for x in pdf["doc_id"]]
-            out_canon, out_dup = [], []
-            for doc_id in ids:
-                if canonical is None:
-                    canonical = doc_id
-                out_canon.append(canonical)
-                out_dup.append(doc_id != canonical)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "content_hash": [content_hash] * len(ids),
-                    "canonical_id": out_canon,
-                    "is_duplicate": out_dup,
-                }
-            )
-        if canonical is not None:
-            state.update((int(canonical),))
-
-    if shard_state is None:
-        return hashed.groupBy("content_hash").applyInPandasWithState(
-            handle,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    def kernel(rows: pd.DataFrame, claim: dict) -> pd.DataFrame:
+        ids, hashes = rows["doc_id"].tolist(), rows["content_hash"].tolist()
+        canon = []
+        for doc_id, h in zip(ids, hashes):
+            c = claim.get(h)
+            if c is None:
+                c = claim[h] = doc_id
+            canon.append(c)
+        return pd.DataFrame(
+            {
+                "doc_id": ids,
+                "content_hash": hashes,
+                "canonical_id": canon,
+                "is_duplicate": [d != c for d, c in zip(ids, canon)],
+            }
         )
 
-    def handle_shard(key, pdfs, state: GroupState):
-        if state.exists:
-            hs, cs = state.get
-            claim = dict(zip(hs, cs))
-        else:
-            claim = {}
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            # doc_id order: within a batch the smallest id claims the
-            # content first — exactly the per-key handler's sort
-            whole = whole.sort_values("doc_id")
-            out_ids, out_hash, out_canon, out_dup = [], [], [], []
-            for doc_id, h in zip(whole["doc_id"], whole["content_hash"]):
-                doc_id, h = int(doc_id), int(h)
-                c = claim.get(h)
-                if c is None:
-                    c = doc_id
-                    claim[h] = c
-                out_ids.append(doc_id)
-                out_hash.append(h)
-                out_canon.append(c)
-                out_dup.append(doc_id != c)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "content_hash": out_hash,
-                    "canonical_id": out_canon,
-                    "is_duplicate": out_dup,
-                }
-            )
-        state.update(
-            (
-                [int(k) for k in claim.keys()],
-                [int(v) for v in claim.values()],
-            )
-        )
-
-    sharded = hashed.withColumn(
-        "__shard", F.abs(F.hash("content_hash")) % shard_state
-    )
-    return sharded.groupBy("__shard").applyInPandasWithState(
-        handle_shard,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_SHARD_EXACT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        hashed,
+        kernel,
+        keys=["content_hash"],
+        order=["doc_id"],
+        out_schema=_OUT_SCHEMA,
+        value_schema=_STATE_SCHEMA,
+        shards=shard_state,
     )
 
 
@@ -175,14 +106,6 @@ _SPAN_OUT_SCHEMA = StructType(
 
 _SPAN_STATE_SCHEMA = StructType(
     [StructField("first_doc", LongType()), StructField("first_pos", LongType())]
-)
-
-_SHARD_SPAN_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(StringType())),
-        StructField("first_docs", ArrayType(LongType())),
-        StructField("first_poss", ArrayType(LongType())),
-    ]
 )
 
 
@@ -210,16 +133,17 @@ def streaming_span_dedup(
     128-bit md5 of the span instead (the batch twin's knob): long
     boilerplate spans then cost 32 state-key bytes rather than their
     full text, and the span text is carried only in the output rows.
-    ``shard_state``: with an integer N, state keys are HASH-SHARDED
+    ``shard_state``: with an integer N, state keys are hash-sharded
     into N shards, each keeping a {span_key -> (first_doc, first_pos)}
-    map — the per-batch Python handler then runs N times instead of
-    once per distinct span in the batch (the streaming-MinHash shard
-    rule; r13 profile measured the per-key handler round-trips as the
-    micro-batch floor, ~4s/batch at 14k distinct spans). Rows are
-    processed in the same (doc_id, pos) order and the shard map keys
-    are the exact span keys, so output is IDENTICAL in both modes —
-    the same oracle gates both. Stay with None when distinct-span
-    cardinality per shard would grow without bound."""
+    map — the per-batch Python handler then runs once per touched
+    shard instead of once per distinct span in the batch (the per-key
+    handler round trips measured ~4 s/batch at 14k distinct spans).
+    A shard that gains a span rewrites its whole map, O(spans per
+    shard) per batch. Rows are processed in the same (doc_id, pos)
+    order by the same kernel and the shard map keys are the exact span
+    keys, so output is IDENTICAL in both modes — the same oracle gates
+    both. Stay with None when distinct-span cardinality per shard would
+    grow without bound."""
     if span_tokens < 1:
         raise ValueError("streaming_span_dedup needs span_tokens >= 1")
     from ..functions.text import tokens
@@ -249,88 +173,9 @@ def streaming_span_dedup(
     else:
         ex = ex.withColumn("__k", F.col("span"))
 
-    def handle(key, pdfs, state: GroupState):
-        first = tuple(state.get) if state.exists else None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(["doc_id", "pos"])
-            docs_, poss, dropped = [], [], []
-            for doc_id, pos in zip(pdf["doc_id"], pdf["pos"]):
-                if first is None:
-                    first = (int(doc_id), int(pos))
-                    dropped.append(False)
-                else:
-                    dropped.append((int(doc_id), int(pos)) != first)
-                docs_.append(int(doc_id))
-                poss.append(int(pos))
-            yield pd.DataFrame(
-                {
-                    "doc_id": docs_,
-                    "pos": poss,
-                    "span": list(pdf["span"]),
-                    "is_dropped": dropped,
-                }
-            )
-        if first is not None:
-            state.update((int(first[0]), int(first[1])))
-
-    if shard_state is None:
-        return ex.groupBy("__k").applyInPandasWithState(
-            handle,
-            outputStructType=_SPAN_OUT_SCHEMA,
-            stateStructType=_SPAN_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def handle_shard(key, pdfs, state: GroupState):
-        if state.exists:
-            ks, fd, fp = state.get
-            first_of = dict(zip(ks, zip(fd, fp)))
-        else:
-            first_of = {}
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            # (doc_id, pos) order: the first-seen rule within a batch —
-            # exactly the per-key handler's sort
-            whole = whole.sort_values(["doc_id", "pos"])
-            docs_, poss, spans_, dropped = [], [], [], []
-            for doc_id, pos, span, k in zip(
-                whole["doc_id"], whole["pos"], whole["span"], whole["__k"]
-            ):
-                doc_id, pos = int(doc_id), int(pos)
-                f = first_of.get(k)
-                if f is None:
-                    first_of[k] = (doc_id, pos)
-                    dropped.append(False)
-                else:
-                    dropped.append((doc_id, pos) != f)
-                docs_.append(doc_id)
-                poss.append(pos)
-                spans_.append(span)
-            yield pd.DataFrame(
-                {
-                    "doc_id": docs_,
-                    "pos": poss,
-                    "span": spans_,
-                    "is_dropped": dropped,
-                }
-            )
-        state.update(
-            (
-                list(first_of.keys()),
-                [int(v[0]) for v in first_of.values()],
-                [int(v[1]) for v in first_of.values()],
-            )
-        )
-
-    sharded = ex.withColumn("__shard", F.abs(F.hash("__k")) % shard_state)
-    return sharded.groupBy("__shard").applyInPandasWithState(
-        handle_shard,
-        outputStructType=_SPAN_OUT_SCHEMA,
-        stateStructType=_SHARD_SPAN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _first_seen_stream(
+        ex, at="pos", text="span", out_schema=_SPAN_OUT_SCHEMA,
+        value_schema=_SPAN_STATE_SCHEMA, shards=shard_state,
     )
 
 
@@ -345,14 +190,6 @@ _LINE_OUT_SCHEMA = StructType(
 
 _LINE_STATE_SCHEMA = StructType(
     [StructField("first_doc", LongType()), StructField("first_line", LongType())]
-)
-
-_SHARD_LINE_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", ArrayType(StringType())),
-        StructField("first_docs", ArrayType(LongType())),
-        StructField("first_lines", ArrayType(LongType())),
-    ]
 )
 
 
@@ -380,8 +217,10 @@ def streaming_line_dedup(
     32 state-key bytes, text rides only in output rows.
 
     ``shard_state``: hash-shard the state keys into N shards, one
-    {line_key -> (first_doc, first_line)} map per shard — same rule,
-    same output-identity argument as :func:`streaming_span_dedup`."""
+    {line_key -> (first_doc, first_line)} map per shard; a shard that
+    gains a line rewrites its whole map, O(lines per shard) per batch.
+    Same rule, same output-identity argument as
+    :func:`streaming_span_dedup`."""
     if not sep:
         raise ValueError("streaming_line_dedup needs a non-empty separator")
     import re as _re
@@ -404,86 +243,43 @@ def streaming_line_dedup(
     else:
         ex = ex.withColumn("__k", F.col("line"))
 
-    def handle(key, pdfs, state: GroupState):
-        first = tuple(state.get) if state.exists else None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(["doc_id", "line_no"])
-            docs_, nos, dropped = [], [], []
-            for doc_id, no in zip(pdf["doc_id"], pdf["line_no"]):
-                if first is None:
-                    first = (int(doc_id), int(no))
-                    dropped.append(False)
-                else:
-                    dropped.append((int(doc_id), int(no)) != first)
-                docs_.append(int(doc_id))
-                nos.append(int(no))
-            yield pd.DataFrame(
-                {
-                    "doc_id": docs_,
-                    "line_no": nos,
-                    "line": list(pdf["line"]),
-                    "is_dropped": dropped,
-                }
-            )
-        if first is not None:
-            state.update((int(first[0]), int(first[1])))
+    return _first_seen_stream(
+        ex, at="line_no", text="line", out_schema=_LINE_OUT_SCHEMA,
+        value_schema=_LINE_STATE_SCHEMA, shards=shard_state,
+    )
 
-    if shard_state is None:
-        return ex.groupBy("__k").applyInPandasWithState(
-            handle,
-            outputStructType=_LINE_OUT_SCHEMA,
-            stateStructType=_LINE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+
+def _first_seen_stream(
+    ex: DataFrame,
+    *,
+    at: str,
+    text: str,
+    out_schema: StructType,
+    value_schema: StructType,
+    shards: int | None,
+) -> DataFrame:
+    """First-seen-wins over ``(doc_id, at, text, __k)`` rows: state maps
+    the key ``__k`` to its first ``(doc_id, at)``, and a row is dropped
+    iff an earlier ``(doc_id, at)`` holds its key."""
+
+    def kernel(rows: pd.DataFrame, first_of: dict) -> pd.DataFrame:
+        ids, ats = rows["doc_id"].tolist(), rows[at].tolist()
+        dropped = []
+        for k, here in zip(rows["__k"].tolist(), zip(ids, ats)):
+            f = first_of.get(k)
+            if f is None:
+                first_of[k] = f = here
+            dropped.append(here != f)
+        return pd.DataFrame(
+            {"doc_id": ids, at: ats, text: rows[text].tolist(), "is_dropped": dropped}
         )
 
-    def handle_shard(key, pdfs, state: GroupState):
-        if state.exists:
-            ks, fd, fl = state.get
-            first_of = dict(zip(ks, zip(fd, fl)))
-        else:
-            first_of = {}
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            # (doc_id, line_no) order: the first-seen rule within a
-            # batch — exactly the per-key handler's sort
-            whole = whole.sort_values(["doc_id", "line_no"])
-            docs_, nos, lines_, dropped = [], [], [], []
-            for doc_id, no, line, k in zip(
-                whole["doc_id"], whole["line_no"], whole["line"], whole["__k"]
-            ):
-                doc_id, no = int(doc_id), int(no)
-                f = first_of.get(k)
-                if f is None:
-                    first_of[k] = (doc_id, no)
-                    dropped.append(False)
-                else:
-                    dropped.append((doc_id, no) != f)
-                docs_.append(doc_id)
-                nos.append(no)
-                lines_.append(line)
-            yield pd.DataFrame(
-                {
-                    "doc_id": docs_,
-                    "line_no": nos,
-                    "line": lines_,
-                    "is_dropped": dropped,
-                }
-            )
-        state.update(
-            (
-                list(first_of.keys()),
-                [int(v[0]) for v in first_of.values()],
-                [int(v[1]) for v in first_of.values()],
-            )
-        )
-
-    sharded = ex.withColumn("__shard", F.abs(F.hash("__k")) % shard_state)
-    return sharded.groupBy("__shard").applyInPandasWithState(
-        handle_shard,
-        outputStructType=_LINE_OUT_SCHEMA,
-        stateStructType=_SHARD_LINE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        ex,
+        kernel,
+        keys=["__k"],
+        order=["doc_id", at],
+        out_schema=out_schema,
+        value_schema=value_schema,
+        shards=shards,
     )

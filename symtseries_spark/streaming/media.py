@@ -27,17 +27,13 @@ reproduces it bit-for-bit, which is what the registered query gates.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..operators.multimodal import media_dhash
-from ._util import coalesce_chunks
+from ._util import keyed_state_stream
 
 __all__ = ["streaming_dhash_dedup"]
 
@@ -53,15 +49,6 @@ _STATE_SCHEMA = StructType(
     [
         StructField("claimant", LongType()),
         StructField("claimant_dhash", LongType()),
-    ]
-)
-
-_SHARD_STATE_SCHEMA = StructType(
-    [
-        StructField("bands", ArrayType(LongType())),
-        StructField("chunks", ArrayType(LongType())),
-        StructField("claimants", ArrayType(LongType())),
-        StructField("claimant_dhashes", ArrayType(LongType())),
     ]
 )
 
@@ -87,13 +74,14 @@ def streaming_dhash_dedup(
     assumed assigned in arrival order, as in the sibling stream
     dedups.
 
-    ``shard_state``: with an integer N, buckets are HASH-SHARDED into
+    ``shard_state``: with an integer N, buckets are hash-sharded into
     N state keys, each shard keeping a {(band, chunk) -> (claimant,
-    dhash)} map — the per-batch Python handler runs N times instead of
-    once per occupied bucket (the streaming-MinHash shard rule; the
-    r13 stream profile measured per-key handler round-trips as the
-    addBatch floor). Exact (band, chunk) keys in the shard map and the
-    same media_id batch order make output IDENTICAL in both modes."""
+    dhash)} map — the per-batch Python handler runs once per touched
+    shard instead of once per occupied bucket. A shard that gains or
+    re-claims a bucket rewrites its whole map, O(buckets per shard)
+    per batch. One kernel, exact (band, chunk) keys in the shard map
+    and the same media_id order within a bucket make output IDENTICAL
+    in both modes."""
     if max_hamming < 0:
         raise ValueError("streaming_dhash_dedup needs max_hamming >= 0")
     if bands <= max_hamming:
@@ -137,109 +125,37 @@ def streaming_dhash_dedup(
         F.col("s.chunk").alias("chunk"),
     )
 
-    def handle(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        band = int(key[0])
-        if state.exists:
-            claimant, chash = (int(v) for v in state.get)
-        else:
-            claimant, chash = None, None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            whole = whole.sort_values("media_id")
-            out_ids: list[int] = []
-            out_dup: list[int | None] = []
-            for mid, dh in zip(whole["media_id"], whole["dhash"]):
-                mid, dh = int(mid), int(dh)
-                if (
-                    claimant is not None
-                    and claimant < mid
-                    and bin(chash ^ dh).count("1") <= max_hamming
-                ):
-                    out_dup.append(claimant)
-                else:
-                    out_dup.append(None)
-                if claimant is None or mid < claimant:
-                    claimant, chash = mid, dh
-                out_ids.append(mid)
-            yield pd.DataFrame(
-                {
-                    "media_id": out_ids,
-                    "band": [band] * len(out_ids),
-                    "dup_of": pd.array(out_dup, dtype="Int64"),
-                }
-            )
-        if claimant is not None:
-            state.update((int(claimant), int(chash)))
-
-    if shard_state is None:
-        return chunks.groupBy("band", "chunk").applyInPandasWithState(
-            handle,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def handle_shard(key, pdfs, state: GroupState):
-        if state.exists:
-            bs, cs, cl, ch = state.get
-            claim = {
-                (int(b), int(c)): (int(m), int(d))
-                for b, c, m, d in zip(bs, cs, cl, ch)
-            }
-        else:
-            claim = {}
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            # bucket-then-id order: within each bucket the smaller id
-            # claims first, exactly like the per-bucket handler
-            whole = whole.sort_values(["band", "chunk", "media_id"])
-            out_ids: list[int] = []
-            out_bands: list[int] = []
-            out_dup: list[int | None] = []
-            for band, chunk, mid, dh in zip(
-                whole["band"], whole["chunk"], whole["media_id"], whole["dhash"]
+    def kernel(rows: pd.DataFrame, claim: dict) -> pd.DataFrame:
+        ids, bands = rows["media_id"].tolist(), rows["band"].tolist()
+        dup_of: list[int | None] = []
+        for bucket, mid, dh in zip(
+            zip(bands, rows["chunk"].tolist()), ids, rows["dhash"].tolist()
+        ):
+            got = claim.get(bucket)
+            if (
+                got is not None
+                and got[0] < mid
+                and bin(got[1] ^ dh).count("1") <= max_hamming
             ):
-                bucket = (int(band), int(chunk))
-                mid, dh = int(mid), int(dh)
-                got = claim.get(bucket)
-                if (
-                    got is not None
-                    and got[0] < mid
-                    and bin(got[1] ^ dh).count("1") <= max_hamming
-                ):
-                    out_dup.append(got[0])
-                else:
-                    out_dup.append(None)
-                if got is None or mid < got[0]:
-                    claim[bucket] = (mid, dh)
-                out_ids.append(mid)
-                out_bands.append(bucket[0])
-            yield pd.DataFrame(
-                {
-                    "media_id": out_ids,
-                    "band": out_bands,
-                    "dup_of": pd.array(out_dup, dtype="Int64"),
-                }
-            )
-        state.update(
-            (
-                [k[0] for k in claim.keys()],
-                [k[1] for k in claim.keys()],
-                [v[0] for v in claim.values()],
-                [v[1] for v in claim.values()],
-            )
+                dup_of.append(got[0])
+            else:
+                dup_of.append(None)
+            if got is None or mid < got[0]:
+                claim[bucket] = (mid, dh)
+        return pd.DataFrame(
+            {
+                "media_id": ids,
+                "band": bands,
+                "dup_of": pd.array(dup_of, dtype="Int64"),
+            }
         )
 
-    sharded = chunks.withColumn(
-        "__shard", F.abs(F.hash("band", "chunk")) % shard_state
-    )
-    return sharded.groupBy("__shard").applyInPandasWithState(
-        handle_shard,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_SHARD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        chunks,
+        kernel,
+        keys=["band", "chunk"],
+        order=["media_id"],
+        out_schema=_OUT_SCHEMA,
+        value_schema=_STATE_SCHEMA,
+        shards=shard_state,
     )

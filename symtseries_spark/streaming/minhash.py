@@ -22,24 +22,14 @@ sharing a band", so a plain SQL oracle can reproduce it.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.text import HASH_PRIME, hash_mod_prime, shingles
 from ..operators.dedup import minhash_coefficients
-from ._util import coalesce_chunks
+from ._util import keyed_state_stream
 
 __all__ = ["minhash_band_structs", "streaming_minhash_dedup"]
 
@@ -52,13 +42,6 @@ _OUT_SCHEMA = StructType(
 )
 
 _STATE_SCHEMA = StructType([StructField("min_id", LongType())])
-
-_SHARD_STATE_SCHEMA = StructType(
-    [
-        StructField("bucket_keys", ArrayType(StringType())),
-        StructField("claimants", ArrayType(LongType())),
-    ]
-)
 
 
 def minhash_band_structs(
@@ -131,14 +114,16 @@ def streaming_minhash_dedup(
     ``shard_state``: with None (default), state is keyed per LSH bucket
     — one long per bucket, the unbounded-scale layout (buckets spread
     across state partitions; no per-key structure ever grows). With an
-    integer N, buckets are HASH-SHARDED into N state keys and each shard
+    integer N, buckets are hash-sharded into N state keys and each shard
     keeps a {bucket -> claimant} map in its state: the per-batch Python
-    handler runs N times instead of once per occupied bucket (measured
-    7.2 -> 5.9 s on the 8-band sf0.1 replay — ~18%; scan-stage signature
-    math dominates at this scale, so the win grows with occupied-bucket
-    count per batch), at the cost of shard state growing with occupied
-    buckets/shard. Output is IDENTICAL in both modes (exact composite
-    string keys, no hashing of bucket identity into state), so the same
+    handler runs once per touched shard instead of once per occupied
+    bucket (measured 7.2 -> 5.9 s on the 8-band sf0.1 replay — ~18%;
+    scan-stage signature math dominates at this scale, so the win grows
+    with occupied-bucket count per batch), at the cost of shard state
+    growing with occupied buckets/shard: a shard that gains a bucket
+    rewrites its whole map, O(buckets per shard) per batch. Output is
+    IDENTICAL in both modes (one kernel, exact (band_id, band_key)
+    keys, no hashing of bucket identity into state), so the same
     oracle gates both. Pick N >= cluster parallelism for throughput;
     stay with None when bucket cardinality is unbounded.
 
@@ -163,88 +148,28 @@ def streaming_minhash_dedup(
         F.col("bk.band_key").alias("band_key"),
     )
 
-    def handle(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        band_id = int(key[0])
-        claimant = int(state.get[0]) if state.exists else None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole
-            ids = sorted(int(x) for x in pdf["doc_id"])
-            out_dup: list[int | None] = []
-            for doc_id in ids:
-                if claimant is not None and claimant < doc_id:
-                    out_dup.append(claimant)
-                else:
-                    out_dup.append(None)
-                if claimant is None or doc_id < claimant:
-                    claimant = doc_id
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "band_id": [band_id] * len(ids),
-                    "dup_of": pd.array(out_dup, dtype="Int64"),
-                }
-            )
-        if claimant is not None:
-            state.update((int(claimant),))
-
-    if shard_state is None:
-        return banded.groupBy("band_id", "band_key").applyInPandasWithState(
-            handle,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    def kernel(rows: pd.DataFrame, claim: dict) -> pd.DataFrame:
+        ids, bands = rows["doc_id"].tolist(), rows["band_id"].tolist()
+        dup_of: list[int | None] = []
+        for bucket, doc_id in zip(zip(bands, rows["band_key"].tolist()), ids):
+            c = claim.get(bucket)
+            dup_of.append(c if c is not None and c < doc_id else None)
+            if c is None or doc_id < c:
+                claim[bucket] = doc_id
+        return pd.DataFrame(
+            {
+                "doc_id": ids,
+                "band_id": bands,
+                "dup_of": pd.array(dup_of, dtype="Int64"),
+            }
         )
 
-    def handle_shard(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            keys, vals = state.get
-            claim = dict(zip(keys, vals))
-        else:
-            claim = {}
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            # bucket-then-id order: within each bucket the smaller id
-            # claims first, exactly like the per-bucket handler
-            whole = whole.sort_values(["band_id", "band_key", "doc_id"])
-            out_ids, out_bands, out_dup = [], [], []
-            for band_id, band_key, doc_id in zip(
-                whole["band_id"], whole["band_key"], whole["doc_id"]
-            ):
-                bucket = f"{band_id}|{band_key}"
-                doc_id = int(doc_id)
-                c = claim.get(bucket)
-                out_ids.append(doc_id)
-                out_bands.append(int(band_id))
-                out_dup.append(c if (c is not None and c < doc_id) else None)
-                if c is None or doc_id < c:
-                    claim[bucket] = doc_id
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "band_id": out_bands,
-                    "dup_of": pd.array(out_dup, dtype="Int64"),
-                }
-            )
-        state.update(
-            (list(claim.keys()), [int(v) for v in claim.values()])
-        )
-
-    sharded = banded.withColumn(
-        "__shard", F.abs(F.hash("band_id", "band_key")) % shard_state
-    )
-    return (
-        sharded.groupBy("__shard")
-        .applyInPandasWithState(
-            handle_shard,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_SHARD_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_state_stream(
+        banded,
+        kernel,
+        keys=["band_id", "band_key"],
+        order=["doc_id"],
+        out_schema=_OUT_SCHEMA,
+        value_schema=_STATE_SCHEMA,
+        shards=shard_state,
     )

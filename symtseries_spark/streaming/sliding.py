@@ -16,34 +16,62 @@ semantics with ``applyInPandasWithState``:
 Checkpointing of the state (the reference's ``serialize_sax``,
 lua/lua_sax.c:293-342) comes free from the streaming checkpoint dir.
 
-Scale notes: state is partitioned by series key across executors —
-identical to the batch shuffle key. The per-batch encode is vectorized
-with numpy (one O(batch * n) pass per series, Arrow-transferred); the
-word computation itself reuses the same breakpoint tables as the batch
-path, so batch ≡ streaming by construction (the reference's own
-metamorphic test, src/symtseries.c:816-850).
+The word computation reuses the batch path's breakpoint tables, so
+batch ≡ streaming by construction (the reference's own metamorphic
+test, src/symtseries.c:816-850).
+
+Scale notes.
+
+* Layout: series keys are hash-sharded into a fixed 16 state keys
+  (:data:`_SHARDS`, ``pmod(hash(key), 16)``). Each shard stores its
+  series' keys as one array plus all their buffers packed into one
+  float64 ``BinaryType`` blob; ``array<array<double>>`` would move
+  every value as its own pickled float and boxed JVM ``Double`` on each
+  state write. Per micro-batch the handler runs once per touched
+  shard, not once per touched series, and encodes all of the shard's
+  new events in one vectorized ``_encode_windows`` call over the
+  series' ``[buffer ‖ new values]`` segments laid end to end.
+* Why a constant: the shard count is baked into the plan and into the
+  checkpoint's state keys, so it cannot follow the data without a
+  restart-safe record of the old count. 16 is four shards per core on
+  a 4-core host. In saxbench ``stream_sliding`` runs there (seeds 3
+  and 7), 8 shards cost 0–9 % less CPU per batch but cap state
+  parallelism at 8 partitions, and 64 shards cost 13–16 % more: each
+  handler call has a fixed cost of about 7 ms, of which the kernel
+  itself is under 2 ms.
+* State rewrite: a touched shard rewrites its whole blob, which is
+  O(series per shard × n × 8 B) per batch (400 series at n = 64 make
+  about 13 kB per shard).
+* The floor this layout cannot remove: every Python task of a batch
+  pays about 0.1–0.16 CPU-s in pyspark's
+  ``worker_util.setup_spark_files``, where
+  ``importlib.invalidate_caches()`` re-reads the directory of
+  ``pyspark.zip`` once for each of its cached zipimporters (14–18 in a
+  worker); at 4 state partitions that is up to about 0.65 CPU-s per
+  batch, whatever the shard count.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
-from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     DoubleType,
     StringType,
     StructField,
     StructType,
 )
 
-from ._util import coalesce_chunks
+from ._util import ShardLayout, keyed_state_stream
 from ..constants import BREAKPOINTS, LETTERS, MISSING, STAT_EPS, validate_params
+
+#: state shards of :func:`sliding_sax_stream` (see "Scale notes")
+_SHARDS = 16
 
 
 def _seqsum(a: np.ndarray, axis: int) -> np.ndarray:
@@ -56,12 +84,17 @@ def _seqsum(a: np.ndarray, axis: int) -> np.ndarray:
     return np.cumsum(a, axis=axis).take(-1, axis=axis)
 
 
-def _encode_windows(history: np.ndarray, n: int, w: int, c: int) -> list[str]:
-    """Words for every suffix window of ``history`` (length >= n), i.e.
-    for positions n-1 .. len-1. Vectorized: one strided view + per-frame
-    nan-aware means; matches pykernel.encode exactly."""
+def _encode_windows(
+    history: np.ndarray, n: int, w: int, c: int, starts: np.ndarray | None = None
+) -> list[str]:
+    """Words for the length-``n`` windows of ``history`` that begin at
+    ``starts`` (default: every window, i.e. positions n-1 .. len-1).
+    Vectorized: one strided view + per-frame nan-aware means; matches
+    pykernel.encode exactly."""
     f = n // w
     windows = np.lib.stride_tricks.sliding_window_view(history, n)  # (m, n)
+    if starts is not None:
+        windows = windows[starts]
     finite = np.isfinite(windows)
     cnt = finite.sum(axis=1)
     vals = np.where(finite, windows, 0.0)
@@ -78,7 +111,6 @@ def _encode_windows(history: np.ndarray, n: int, w: int, c: int) -> list[str]:
         has_pinf = np.logical_and(nonnan, np.isposinf(frames)).any(axis=2)
         has_ninf = np.logical_and(nonnan, np.isinf(frames) & (frames < 0)).any(axis=2)
     breaks = np.array(BREAKPOINTS[c])
-    letters = np.empty((frames.shape[0], w), dtype="U1")
     flat_std = std[:, None]
     flat_mu = mu[:, None]
     z = np.where(
@@ -93,7 +125,8 @@ def _encode_windows(history: np.ndarray, n: int, w: int, c: int) -> list[str]:
     letters = np.where((fcnt == 0) | (has_pinf & has_ninf), MISSING, letters)
     letters = np.where(has_pinf & ~has_ninf, LETTERS[c - 1], letters)
     letters = np.where(has_ninf & ~has_pinf, LETTERS[0], letters)
-    return ["".join(row) for row in letters]
+    # each row's w one-letter cells, read as one w-letter string
+    return np.ascontiguousarray(letters).view(f"<U{w}").ravel().tolist()
 
 
 def sliding_sax_stream(
@@ -112,52 +145,50 @@ def sliding_sax_stream(
     covers the last ``n`` values of that series (NaN-padded while the
     series is shorter than ``n``)."""
     validate_params(n, w, c)
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
+    key_type = events.schema[key].dataType
     out_schema = StructType(
         [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
+            StructField(key, key_type),
+            *[StructField(o, events.schema[o].dataType) for o in order],
             StructField(value, DoubleType()),
             StructField(out, StringType()),
         ]
     )
-    state_schema = StructType([StructField("buf", ArrayType(DoubleType()))])
-    cols = [key, *order, value]
+    blank = np.full(n, math.nan)
+    layout = ShardLayout(
+        StructType(
+            [StructField("keys", ArrayType(key_type)), StructField("bufs", BinaryType())]
+        ),
+        lambda row: dict(zip(row[0], np.frombuffer(row[1], "float64").reshape(-1, n))),
+        lambda bufs: (list(bufs), np.concatenate(list(bufs.values())).tobytes()),
+    )
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        buf = list(state.get[0]) if state.exists else [math.nan] * n
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = (
-                pdf[value].astype("float64").to_numpy(na_value=math.nan).copy()
-            )
-            history = np.concatenate([np.asarray(buf, dtype="float64"), vals])
-            words = _encode_windows(history, n, w, c)[-len(vals):]
-            # plain Python floats: the JVM-side state unpickler rejects
-            # numpy scalars
-            buf = [float(x) for x in history[-n:]]
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    out: words,
-                }
-            )
-        state.update((buf,))
-
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    def kernel(rows: pd.DataFrame, bufs: dict) -> pd.DataFrame:
+        vals = rows[value].to_numpy(dtype="float64", na_value=math.nan)
+        seg = pd.factorize(rows[key], use_na_sentinel=False)[0]
+        counts = np.bincount(seg)
+        series = rows[key].iloc[np.cumsum(counts) - counts].tolist()
+        # every series' [buffer ‖ new values], laid end to end
+        begins = np.cumsum(counts + n) - counts - n
+        buf_at = begins[:, None] + np.arange(n)
+        history = np.empty(len(vals) + n * len(series))
+        history[buf_at] = np.stack([bufs.get(s, blank) for s in series])
+        at = np.arange(len(vals)) + n * (seg + 1)
+        history[at] = vals
+        # only windows ending on a new value, so none straddles two series
+        words = _encode_windows(history, n, w, c, starts=at - n + 1)
+        for s, buf in zip(series, history[buf_at + counts[:, None]]):
+            bufs[s] = buf
+        return pd.DataFrame(
+            {key: rows[key], **{o: rows[o] for o in order}, value: vals, out: words}
         )
+
+    return keyed_state_stream(
+        events.select(key, *order, value),
+        kernel,
+        keys=[key],
+        order=order,
+        out_schema=out_schema,
+        shards=_SHARDS,
+        layout=layout,
     )

@@ -376,66 +376,148 @@ class TestStreamingDedup:
             shutil.rmtree(chk_dir, ignore_errors=True)
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
+class TestShardedSlidingStream:
+    """``sliding_sax_stream`` keeps its series' buffers in 16 hash
+    shards; words must match a per-series ``pk.SlidingWindow`` across
+    micro-batches and a stop/restart from the same checkpoint."""
 
-        return True
-    except ImportError:
-        return False
+    KEYS = 24  # plus a NULL key: several series per shard
 
+    def _events(self):
+        """Three batches of ``(sid, t, v)``. Series 0-2 get fewer than N
+        events; the values carry NaN and ±Inf."""
+        rng = np.random.default_rng(11)
+        sid = rng.integers(3, self.KEYS, size=900).astype(object)
+        sid[rng.random(900) < 0.05] = None
+        sid[[5, 300, 301, 650, 700, 701, 702]] = [0, 1, 1, 2, 2, 2, 2]
+        v = rng.standard_normal(900)
+        v[rng.random(900) < 0.04] = math.nan
+        v[rng.random(900) < 0.02] = math.inf
+        v[rng.random(900) < 0.02] = -math.inf
+        return [(sid[i:i + 300], np.arange(i, i + 300), v[i:i + 300]) for i in (0, 300, 600)]
 
-@pytest.mark.slow
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf "
-    "(not shipped in this container); applyInPandasWithState covers parity",
-)
-class TestTransformWithStateParity:
-    def test_tws_equals_batch(self, spark, sf_dir):
-        """Same metamorphic check against the Spark 4
-        transformWithStateInPandas implementation."""
-        from symtseries_spark.sources import load
-        from symtseries_spark.streaming.sliding_tws import sliding_sax_stream_tws
+    @pytest.mark.parametrize("key_type", ["long", "string"])
+    def test_matches_pykernel_across_restart(self, spark, key_type):
+        import os
 
-        events = (
-            load(spark, sf_dir, "events")
-            .where(F.col("user_id") < 10)
-            .select("user_id", "ts", "event_id", "value")
-        )
-        in_dir = tempfile.mkdtemp(prefix="sax_tws_in_")
-        chk_dir = tempfile.mkdtemp(prefix="sax_tws_chk_")
-        try:
-            events.coalesce(1).write.parquet(f"{in_dir}/b0")
-            stream = spark.readStream.schema(events.schema).parquet(f"{in_dir}/b*")
-            words = sliding_sax_stream_tws(
-                stream, key="user_id", order=["ts", "event_id"],
-                value="value", n=N, w=W, c=C,
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        batches = self._events()
+        # long keys past 2**53, where a float64 round trip loses them
+        as_key = (lambda k: (1 << 60) + k) if key_type == "long" else (lambda k: f"s{k:02d}")
+        root = tempfile.mkdtemp(prefix="sax_shard_")
+        in_dir, out_dir, chk = f"{root}/in", f"{root}/out", f"{root}/chk"
+        os.makedirs(in_dir)
+
+        def feed(j):
+            sid, t, v = batches[j]
+            keys = [None if k is None else as_key(int(k)) for k in sid]
+            path = f"{in_dir}/b{j}.parquet"
+            pq.write_table(
+                pa.table({
+                    "sid": pa.array(keys, pa.int64() if key_type == "long" else pa.string()),
+                    "t": pa.array(t, pa.int64()),
+                    "v": pa.array(v, pa.float64()),
+                }),
+                path,
+            )
+            os.utime(path, (1_000_000_000 + j, 1_000_000_000 + j))
+
+        def run():
+            stream = (
+                spark.readStream.schema(f"sid {key_type}, t long, v double")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(in_dir)
             )
             q = (
-                words.writeStream.format("memory")
-                .queryName("sax_tws_out")
-                .outputMode("append")
-                .option("checkpointLocation", chk_dir)
+                sliding_sax_stream(stream, key="sid", order=["t"], value="v", n=N, w=W, c=C)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", chk)
                 .start()
             )
             q.processAllAvailable()
             q.stop()
+
+        try:
+            feed(0)
+            feed(1)
+            run()
+            feed(2)
+            run()
             got = {
-                (r.user_id, r.event_id): r.sax_word
-                for r in spark.sql("SELECT * FROM sax_tws_out").collect()
+                (r.sid, r.t): r.sax_word
+                for r in spark.read.parquet(out_dir).collect()
             }
-            expected = {
-                (r.user_id, r.event_id): r.sax_word
-                for r in sliding_sax(
-                    events, key="user_id", order=["ts", "event_id"],
-                    value="value", n=N, w=W, c=C,
-                ).collect()
-            }
-            assert got == expected and len(got) > 0
+            expected, windows = {}, {}
+            for sid, t, v in batches:
+                for k, ti, vi in zip(sid, t, v):
+                    k = None if k is None else as_key(int(k))
+                    win = windows.setdefault(k, [pk.SlidingWindow(N, W, C), 0])
+                    word = win[0].append(float(vi))
+                    win[1] += 1
+                    if win[1] >= N:
+                        expected[(k, int(ti))] = word
+            assert len(got) == sum(len(b[1]) for b in batches)
+            assert None in {k for k, _ in got} and len(windows) > 20
+            wrong = {k: (got.get(k), w) for k, w in expected.items() if got.get(k) != w}
+            assert not wrong, list(wrong.items())[:5]
         finally:
-            shutil.rmtree(in_dir, ignore_errors=True)
-            shutil.rmtree(chk_dir, ignore_errors=True)
+            shutil.rmtree(root, ignore_errors=True)
+
+
+class TestKeyedStateHelper:
+    @pytest.mark.parametrize("shards", [7, 16, 64])
+    def test_integer_min_hash_lands_in_range(self, spark, shards):
+        from symtseries_spark.streaming._util import shard_of
+
+        got = spark.range(1).select(
+            shard_of(F.lit(-2147483648), shards).alias("s")
+        ).first().s
+        assert 0 <= got < shards
+
+    @pytest.mark.parametrize("shard_state", [None, 4])
+    def test_unchanged_state_is_not_rewritten(self, spark, shard_state):
+        """A batch of already-seen contents leaves every first-seen map
+        as it was, so no state row is written."""
+        import os
+
+        from symtseries_spark.streaming import streaming_exact_dedup
+
+        root = tempfile.mkdtemp(prefix="keyed_state_")
+        in_dir = f"{root}/in"
+        os.makedirs(in_dir)
+        try:
+            for j, rows in enumerate([[(0, "a"), (1, "b"), (2, "c")], [(3, "a"), (4, "b")]]):
+                spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+                    1
+                ).write.parquet(f"{root}/b{j}")
+                part = next(f for f in os.listdir(f"{root}/b{j}") if f.endswith(".parquet"))
+                dst = f"{in_dir}/b{j}.parquet"
+                os.rename(f"{root}/b{j}/{part}", dst)
+                os.utime(dst, (1_000_000_000 + j, 1_000_000_000 + j))
+            stream = (
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(in_dir)
+            )
+            q = (
+                streaming_exact_dedup(stream, shard_state=shard_state)
+                .writeStream.format("noop")
+                .option("checkpointLocation", f"{root}/chk")
+                .start()
+            )
+            q.processAllAvailable()
+            q.stop()
+            updated = [
+                p.stateOperators[0].numRowsUpdated
+                for p in q.recentProgress
+                if p.numInputRows
+            ]
+            assert updated[0] > 0 and updated[1:] == [0]
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 class TestStreamToBucketedIndex:
