@@ -1,9 +1,14 @@
 #!/usr/bin/env python3
-"""Local simulation of the driver's correctness gate: run every
-``queries()`` entry on Spark AND its ``oracle_sql()`` twin on DuckDB at
+"""Local simulation of the correctness gate: run every ``queries()``
+entry on Spark AND its ``oracle_sql()`` twin on DuckDB at
 $SPARK_GRAFT_SF_DIR (default sf0.01), compare row counts, column sets,
-and an order-insensitive value hash. Exits loudly on any mismatch."""
-import sys, time, hashlib
+and an order-insensitive value hash.
+
+Usage: ``python3 scripts/check_oracle.py [PATTERN ...]`` — each PATTERN is
+a query name or an ``fnmatch`` pattern (``'sax_*'``); no pattern checks
+every query. Exits 2 if a pattern matches no query, 1 on any mismatch or
+error, 0 when every selected query agrees with its oracle."""
+import fnmatch, sys, time, hashlib
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -35,11 +40,18 @@ def canon(df: pd.DataFrame) -> str:
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return hashlib.md5(df.to_csv(index=False, float_format=HASH_FMT).encode()).hexdigest()
 
+def selected(name: str, pats: list[str]) -> bool:
+    return any(fnmatch.fnmatchcase(name, p) for p in pats)
+
 qs = E.queries(); osql = E.oracle_sql()
-only = set(sys.argv[1:])
+patterns = sys.argv[1:]
+unmatched = [p for p in patterns if not any(selected(n, [p]) for n in qs)]
+if unmatched:
+    print(f"no query matches: {' '.join(unmatched)}", file=sys.stderr)
+    sys.exit(2)
 fails = []
 for name, fn in qs.items():
-    if only and name not in only:
+    if patterns and not selected(name, patterns):
         continue
     t0 = time.time()
     try:
@@ -61,3 +73,4 @@ for name, fn in qs.items():
     print(f"{name}: {status} ({time.time()-t0:.1f}s)")
     if not hash_ok: fails.append(name)
 print("FAILS:", fails)
+sys.exit(1 if fails else 0)

@@ -78,15 +78,28 @@ def _stats(arr: Column) -> Column:
     return _let(_finite(arr), with_finite)
 
 
-def _breaks_lit(c: int) -> Column:
-    return F.array(*[F.lit(b) for b in BREAKPOINTS[c]])
+def frame_letter_index(fsum: Column, fcnt: Column, mu: Column, sigma: Column, c: int) -> Column:
+    """Letter index (0..c-1, ``c`` = '#') of a PAA frame from its sum and
+    count of non-NaN values and the window's finite-only mean and sigma
+    — the one letter rule of every encoder (src/symtseries.c:245-254,
+    358-396): empty or NaN-sum frame -> '#'; ±Inf sum -> extreme letter;
+    flat window (sigma < STAT_EPS) -> z = 0; else #breakpoints <= z."""
+    z = F.when(sigma < STAT_EPS, F.lit(0.0)).otherwise((fsum - fcnt * mu) / (fcnt * sigma))
+    bucket = F.when(z < BREAKPOINTS[c][0], F.lit(0))
+    for i, b in enumerate(BREAKPOINTS[c][1:], start=1):
+        bucket = bucket.when(z < b, F.lit(i))
+    return (
+        F.when((fcnt == 0) | F.isnan(fsum), F.lit(c))
+        .when(fsum == F.lit(_INF), F.lit(c - 1))
+        .when(fsum == F.lit(-_INF), F.lit(0))
+        .otherwise(bucket.otherwise(F.lit(c - 1)))
+    )
 
 
-def _bucket(z: Column, c: int) -> Column:
-    """Letter index of a z-scored value: #breakpoints <= z (strict
-    ``value < break`` boundary rule, src/symtseries.c:245-254). ±Inf
-    saturates to the extreme buckets naturally."""
-    return F.size(F.filter(_breaks_lit(c), lambda b: b <= z))
+def frame_letter(fsum: Column, fcnt: Column, mu: Column, sigma: Column, c: int) -> Column:
+    """:func:`frame_letter_index` as its SAX character."""
+    idx = frame_letter_index(fsum, fcnt, mu, sigma, c)
+    return F.lit(LETTERS[:c] + MISSING).substr(idx + 1, F.lit(1))
 
 
 def sax_letters(arr: Column, w: int, c: int) -> Column:
@@ -103,22 +116,14 @@ def sax_letters(arr: Column, w: int, c: int) -> Column:
         mu, std = stats["mu"], stats["std"]
         f = F.floor(F.size(arr) / w).cast("int")  # frame size n/w
 
-        def frame_letter(i: Column) -> Column:
-            frame = F.slice(arr, i * f + 1, f)
-            nonnan = F.filter(frame, lambda x: ~F.isnan(x))
-            fcnt = F.size(nonnan)
+        def letter_at(i: Column) -> Column:
+            nonnan = F.filter(F.slice(arr, i * f + 1, f), lambda x: ~F.isnan(x))
             fsum = F.aggregate(nonnan, F.lit(0.0), lambda acc, x: acc + x)
-            z = F.when(std < F.lit(STAT_EPS), F.lit(0.0)).otherwise(
-                (fsum - fcnt * mu) / (fcnt * std)
-            )
-            return (
-                F.when((fcnt == 0) | F.isnan(fsum), F.lit(c))  # '#'
-                .when(fsum == F.lit(_INF), F.lit(c - 1))
-                .when(fsum == F.lit(-_INF), F.lit(0))
-                .otherwise(_bucket(z, c))
-            )
+            # bound once: the letter rule reads the partials in every branch
+            part = F.struct(fsum.alias("s"), F.size(nonnan).alias("n"))
+            return _let(part, lambda p: frame_letter_index(p["s"], p["n"], mu, std, c))
 
-        return F.transform(F.sequence(F.lit(0), F.lit(w - 1)), frame_letter)
+        return F.transform(F.sequence(F.lit(0), F.lit(w - 1)), letter_at)
 
     result = _let(_stats(arr), encode_with)
     valid = arr.isNotNull() & (F.size(arr) % w == 0) & (F.size(arr) > 0)

@@ -244,9 +244,11 @@ def isax_topk(
 ) -> DataFrame:
     """Indexed (approximate) top-k: prune to the query's iSAX bucket —
     words whose coarse form equals the pattern's — then refine with exact
-    mindist. Because coarsening only merges adjacent buckets, coarse
-    INEQUALITY implies mindist > 0, so the prune only drops candidates
-    that cannot be exact matches; ranking within the bucket is exact.
+    mindist. The probe is approximate across bucket edges: neighbouring
+    fine letters on opposite sides of a coarse boundary have mindist 0
+    yet land in different buckets (at c=8, ``AAAD``/``AAAE`` coarsen to
+    ``AAAB``/``AAAC`` at c=4), so the prune can drop exact matches and
+    return fewer than ``k`` rows. Ranking is exact only within the bucket.
     The prefilter is a plan-time string constant -> parquet-pushable
     predicate; the scan reads ~1/coarse_c^w of the data."""
     coarse_pattern = pk.coarsen(pattern, c, coarse_c)

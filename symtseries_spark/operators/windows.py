@@ -8,9 +8,10 @@ Scale notes (the 100 TB contract):
 * Each operator shuffles **once**, on the series key — the same hash
   partitioning a 1000-executor cluster would use; no driver-side
   collection anywhere.
-* The per-row state after windowing is an ``array<double>`` of length
-  n <= 4096 (reference cap) that immediately collapses to a <=2048-char
-  word, so shuffle width is bounded and small.
+* The encoders build no per-window ``array<double>``: sliding windows
+  are window aggregates per frame, tumbling windows and whole series
+  are long-form frame partials (``_frame_words``); only w <= 2048
+  letters are collected per word, so shuffle width is bounded and small.
 * Skew: series keys with pathological row counts can be salted upstream;
   AQE skew-join handling covers the join consumers downstream.
 * All expressions are JVM-side (no Python UDFs) — see functions/sax.py.
@@ -21,17 +22,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..constants import BREAKPOINTS, LETTERS, MISSING, STAT_EPS, validate_params
-from ..functions.sax import is_finite, sax_encode
+from ..constants import MISSING, validate_params
+from ..functions.sax import frame_letter, is_finite
 
 _NAN = float("nan")
-_INF = float("inf")
 
 
 def _value_as_double(value: str | Column) -> Column:
     # NULL measurements behave like the reference's NaN ("missing") inputs
     col = F.col(value) if isinstance(value, str) else value
     return F.coalesce(col.cast("double"), F.lit(_NAN))
+
+
+def _staged_values(value: str | Column) -> list[Column]:
+    v = _value_as_double(value)
+    return [
+        F.when(is_finite(v), v).alias("__vf"),  # stats see only finite values
+        F.when(~F.isnan(v), v).alias("__vn"),  # frames skip NaN but keep ±Inf
+    ]
 
 
 def sliding_sax(
@@ -65,18 +73,16 @@ def sliding_sax(
     # Implementation note: this is NOT the array collect_list + sax_encode
     # form — Spark evaluates higher-order array functions interpreted,
     # which costs ~1ms/row. Instead each PAA frame is its own window
-    # aggregate over a row sub-frame and the bucketing is a CASE chain.
+    # aggregate over a row sub-frame, lettered by the shared
+    # functions.sax.frame_letter rule (a codegen'd CASE).
     # CRITICAL plan shape: the raw window aggregates are materialized as
     # columns in their OWN projection before the letter arithmetic —
     # Spark does not common-subexpression-eliminate repeated window
-    # expressions, so inlining them into the CASE chain multiplies the
+    # expressions, so inlining them into the letter rule multiplies the
     # WindowExec work ~9x (observed _we0.._we89 for w=4, c=8). Split this
     # way, WindowExec computes exactly 2w+2 running aggregates in one
     # sorted pass and the letter CASEs run codegen'd over plain columns.
-    v = _value_as_double(value)
-    vf = F.when(is_finite(v), v)  # stats see only finite values
-    vn = F.when(~F.isnan(v), v)  # frames skip NaN but keep ±Inf
-    stage = df.withColumn("__vf", vf).withColumn("__vn", vn)
+    stage = df.select("*", *_staged_values(value))
 
     aggs = {
         "__mu": F.avg("__vf").over(full),
@@ -92,23 +98,9 @@ def sliding_sax(
     stage = stage.withColumns(aggs)
 
     mu, sigma = F.col("__mu"), F.col("__sigma")
-    letters = []
-    for j in range(w):
-        s, cnt = F.col(f"__s{j}"), F.col(f"__c{j}")
-        z = F.when(sigma < STAT_EPS, F.lit(0.0)).otherwise(
-            (s - cnt * mu) / (cnt * sigma)
-        )
-        bucket = F.when(z < BREAKPOINTS[c][0], LETTERS[0])
-        for i, b in enumerate(BREAKPOINTS[c][1:], start=1):
-            bucket = bucket.when(z < b, LETTERS[i])
-        bucket = bucket.otherwise(LETTERS[c - 1])
-        letters.append(
-            F.when((cnt == 0) | F.isnan(s), MISSING)
-            .when(s == F.lit(_INF), LETTERS[c - 1])
-            .when(s == F.lit(-_INF), LETTERS[0])
-            .otherwise(bucket)
-        )
-
+    letters = [
+        frame_letter(F.col(f"__s{j}"), F.col(f"__c{j}"), mu, sigma, c) for j in range(w)
+    ]
     result = stage.withColumn(out, F.concat(*letters))
     if not emit_partial:
         result = result.where(F.col("__cnt") == n)
@@ -219,6 +211,30 @@ def tumbling_values(
     return grouped.select("series_key", "window_id", vals.alias(out))
 
 
+def _frame_words(rows: DataFrame, keys: list[str], w: int, c: int, out: str) -> DataFrame:
+    """Rows ``(*keys, frame_id, __vf, __vn)`` -> ``(*keys, __n, out)``:
+    one SAX word per key, ``__n`` = its row count, ``frame_id`` in 0..w-1.
+
+    Long form, no per-key array: the stats are window aggregates over
+    ``keys`` (no join back), one groupBy sums each frame and carries the
+    stats along, and the w letters are joined in frame order. Frames with
+    no rows (a partial window's tail) print '#', as if NaN-padded.
+    """
+    per_key = Window.partitionBy(*keys)
+    frames = rows.select(
+        *keys, "frame_id", "__vn",
+        F.avg("__vf").over(per_key).alias("__mu"),
+        F.coalesce(F.stddev_pop("__vf").over(per_key), F.lit(0.0)).alias("__sigma"),
+        F.count(F.lit(1)).over(per_key).alias("__n"),
+    ).groupBy(*keys, "__mu", "__sigma", "__n", "frame_id").agg(
+        F.sum("__vn").alias("__s"), F.count("__vn").alias("__c")
+    )
+    letter = frame_letter(F.col("__s"), F.col("__c"), F.col("__mu"), F.col("__sigma"), c)
+    ordered = F.array_sort(F.collect_list(F.struct("frame_id", letter.alias("l"))))
+    word = F.concat_ws("", F.transform(ordered, lambda x: x["l"]))
+    return frames.groupBy(*keys, "__n").agg(F.rpad(word, w, MISSING).alias(out))
+
+
 def tumbling_sax(
     df: DataFrame,
     *,
@@ -234,16 +250,28 @@ def tumbling_sax(
     """Non-overlapping windows of ``n`` consecutive rows per series key ->
     one row ``(key, window_id, sax_word)`` per window.
 
-    One shuffle (partitionBy key for row_number) + a map-side-combinable
-    groupBy on (key, window_id). Partial trailing windows are dropped by
-    default (their length is not a multiple of w); with
-    ``keep_partial=True`` they are NaN-padded at the *back* to n values.
+    Partial trailing windows are dropped by default; with
+    ``keep_partial=True`` they are encoded as if NaN-padded at the *back*
+    to n values. Plan: one shuffle on the series key (row_number), then
+    the long-form frame builder keyed by (key, window_id); no array of
+    the window's values is built.
     """
     validate_params(n, w, c)
-    return tumbling_values(
-        df, key=key, order=order, value=value, n=n, keep_partial=keep_partial
-    ).select(
-        "series_key", "window_id", sax_encode(F.col("vals"), w, c).alias(out)
+    order_cols = [order] if isinstance(order, str) else list(order)
+    rn = F.row_number().over(Window.partitionBy(key).orderBy(*order_cols)) - 1
+    # the key keeps its name until the end, so the builder's windows reuse
+    # the row_number shuffle instead of re-partitioning on an alias
+    rows = df.select(
+        F.col(key),
+        (rn / n).cast("long").alias("__wid"),
+        ((rn % n) / (n // w)).cast("int").alias("frame_id"),
+        *_staged_values(value),
+    )
+    words = _frame_words(rows, [key, "__wid"], w, c, out)
+    if not keep_partial:
+        words = words.where(F.col("__n") == n)
+    return words.select(
+        F.col(key).alias("series_key"), F.col("__wid").alias("window_id"), out
     )
 
 
@@ -267,62 +295,25 @@ def whole_series_sax(
     Scale design: fully long-form/relational — NO per-series array is
     ever materialized, so a series of any length (billions of points)
     streams through bounded per-row state. Plan: one sort-shuffle on the
-    series key for positions, a map-side-combinable groupBy for the w
-    frame partials, a broadcast-able stats join, and a w-row collect per
-    series for the final word (w <= 2048 by the reference cap).
+    series key for positions, then the frame builder shared with
+    :func:`tumbling_sax` keyed by the series.
     """
     validate_params(w * 2, w, c)
     order_cols = [order] if isinstance(order, str) else list(order)
     win = Window.partitionBy(key).orderBy(*order_cols)
-    v = _value_as_double(value)
     positioned = df.select(
-        F.col(key).alias("series_key"),
-        (F.row_number().over(win) - 1).alias("pos"),
-        F.count(F.lit(1)).over(Window.partitionBy(key)).alias("series_len"),
-        F.when(is_finite(v), v).alias("__vf"),
-        F.when(~F.isnan(v), v).alias("__vn"),
+        F.col(key),
+        (F.row_number().over(win) - 1).alias("__pos"),
+        F.count(F.lit(1)).over(Window.partitionBy(key)).alias("__len"),
+        *_staged_values(value),
     )
-    usable = (F.floor(F.col("series_len") / w) * w).cast("long")
-    truncated = positioned.where(
-        (F.col("series_len") >= w) & (F.col("pos") < usable)
-    ).withColumn("frame_id", (F.col("pos") / (usable / w)).cast("int"))
-
-    frames = truncated.groupBy("series_key", "frame_id").agg(
-        F.sum("__vn").alias("fsum"),
-        F.count("__vn").alias("fcnt"),
+    usable = (F.floor(F.col("__len") / w) * w).cast("long")
+    rows = positioned.where((F.col("__len") >= w) & (F.col("__pos") < usable))
+    rows = rows.withColumn("frame_id", (F.col("__pos") / (usable / w)).cast("int"))
+    words = _frame_words(rows, [key], w, c, out)
+    return words.select(
+        F.col(key).alias("series_key"), F.col("__n").cast("int").alias("n"), out
     )
-    stats = truncated.groupBy("series_key").agg(
-        F.avg("__vf").alias("mu"),
-        F.coalesce(F.stddev_pop("__vf"), F.lit(0.0)).alias("sigma"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-    s, cnt = F.col("fsum"), F.col("fcnt")
-    z = F.when(F.col("sigma") < STAT_EPS, F.lit(0.0)).otherwise(
-        (s - cnt * F.col("mu")) / (cnt * F.col("sigma"))
-    )
-    bucket = F.when(z < BREAKPOINTS[c][0], LETTERS[0])
-    for i, b in enumerate(BREAKPOINTS[c][1:], start=1):
-        bucket = bucket.when(z < b, LETTERS[i])
-    bucket = bucket.otherwise(LETTERS[c - 1])
-    letter = (
-        F.when((cnt == 0) | F.isnan(s), MISSING)
-        .when(s == F.lit(_INF), LETTERS[c - 1])
-        .when(s == F.lit(-_INF), LETTERS[0])
-        .otherwise(bucket)
-    )
-    lettered = frames.join(stats, "series_key").select(
-        "series_key", "n", "frame_id", letter.alias("letter")
-    )
-    return lettered.groupBy("series_key", "n").agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("frame_id", "letter"))),
-                lambda x: x["letter"],
-            ),
-        ).alias(out)
-    ).select("series_key", F.col("n").cast("int").alias("n"), out)
 
 
 def numerosity_reduce(

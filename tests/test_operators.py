@@ -79,42 +79,97 @@ def test_sliding_full_windows_only(spark, long_df):
         assert counts.get(key, 0) == expected
 
 
-def test_tumbling_matches_pykernel(spark, long_df):
-    df, rows = long_df
-    n, w, c = 8, 2, 5
+def _encoder_rows(kind, long_df):
+    """(key, seq, value) rows for the batch-encoder tests: ``dirty`` is the
+    shared NaN/±Inf fixture; ``nulls`` has NULL measurements; ``flat`` has
+    constant series (one with an Inf); ``long`` is three random walks long
+    enough for n=4096 windows."""
+    if kind == "dirty":
+        return long_df[1]
+    rng = random.Random(7)
+    if kind == "nulls":
+        return [
+            (k, i, None if rng.random() < 0.2 else rng.uniform(-5, 5))
+            for k in range(3) for i in range(rng.choice([9, 16, 30]))
+        ]
+    if kind == "flat":
+        vals = {0: [2.5] * 16, 1: [-1.0] * 7 + [INF] + [-1.0] * 8, 2: [0.0] * 24}
+        return [(k, i, v) for k, series in vals.items() for i, v in enumerate(series)]
+    rows = []
+    for k, length in enumerate([4096 * 2, 4096 + 1000, 4096]):
+        x = 0.0
+        for i in range(length):
+            x += rng.gauss(0, 1)
+            rows.append((k, i, x))
+    return rows
+
+
+def _by_key(rows):
+    by_key: dict[int, list] = {}
+    for key, seq, v in sorted(rows, key=lambda r: (r[0], r[1])):
+        by_key.setdefault(key, []).append(NAN if v is None else v)
+    return by_key
+
+
+@pytest.mark.parametrize(
+    "kind,n,w,c,keep_partial",
+    [
+        pytest.param("dirty", 8, 2, 5, False, id="dirty-n8-w2-c5"),
+        pytest.param("dirty", 8, 2, 5, True, id="dirty-n8-w2-c5-partial"),
+        pytest.param("dirty", 8, 8, 4, True, id="dirty-w_eq_n"),
+        pytest.param("dirty", 16, 4, 16, True, id="dirty-c16"),
+        pytest.param("nulls", 8, 4, 8, True, id="nulls"),
+        pytest.param("flat", 8, 4, 8, True, id="flat"),
+        pytest.param("long", 4096, 2048, 8, False, id="long-n4096-w2048"),
+        pytest.param("long", 4096, 256, 8, True, id="long-n4096-w256"),
+    ],
+)
+def test_tumbling_matches_pykernel(spark, long_df, kind, n, w, c, keep_partial):
+    rows = _encoder_rows(kind, long_df)
+    df = spark.createDataFrame(rows, "key int, seq int, v double")
     got = {
         (r["series_key"], r["window_id"]): r["sax_word"]
-        for r in tumbling_sax(df, key="key", order="seq", value="v", n=n, w=w, c=c).collect()
+        for r in tumbling_sax(
+            df, key="key", order="seq", value="v", n=n, w=w, c=c, keep_partial=keep_partial
+        ).collect()
     }
-    by_key: dict[int, list] = {}
-    for key, seq, v in sorted(rows):
-        by_key.setdefault(key, []).append(v)
-    expected_count = 0
-    for key, series in by_key.items():
-        for wid in range(len(series) // n):
-            chunk = series[wid * n : (wid + 1) * n]
-            assert got[(key, wid)] == pk.encode(chunk, w, c), (key, wid)
-            expected_count += 1
-    assert len(got) == expected_count
+    expected = {}
+    for key, series in _by_key(rows).items():
+        for wid in range(0, len(series), n):
+            chunk = series[wid : wid + n]
+            if len(chunk) == n or keep_partial:
+                # a kept partial window reads as NaN-padded at the back
+                expected[(key, wid // n)] = pk.encode(chunk + [NAN] * (n - len(chunk)), w, c)
+    assert got == expected
 
 
-def test_whole_series_matches_pykernel(spark, long_df):
-    df, rows = long_df
-    w, c = 4, 8
+@pytest.mark.parametrize(
+    "kind,w,c",
+    [
+        pytest.param("dirty", 4, 8, id="dirty-w4-c8"),
+        pytest.param("dirty", 17, 4, id="dirty-w_eq_n"),
+        pytest.param("dirty", 8, 16, id="dirty-c16"),
+        pytest.param("nulls", 3, 8, id="nulls"),
+        pytest.param("flat", 4, 8, id="flat"),
+        pytest.param("long", 2048, 8, id="long-w2048"),
+        pytest.param("long", 256, 16, id="long-w256"),
+    ],
+)
+def test_whole_series_matches_pykernel(spark, long_df, kind, w, c):
+    rows = _encoder_rows(kind, long_df)
+    if kind == "long":  # pykernel encodes at most 4096 points; keep ragged lengths
+        rows = [r for r in rows if r[1] < 4096 - 37 * r[0]]
+    df = spark.createDataFrame(rows, "key int, seq int, v double")
     got = {
         r["series_key"]: (r["n"], r["sax_word"])
         for r in whole_series_sax(df, key="key", order="seq", value="v", w=w, c=c).collect()
     }
-    by_key: dict[int, list] = {}
-    for key, seq, v in sorted(rows):
-        by_key.setdefault(key, []).append(v)
-    for key, series in by_key.items():
+    expected = {}
+    for key, series in _by_key(rows).items():
         usable = (len(series) // w) * w
-        if usable < w:
-            assert key not in got
-            continue
-        assert got[key][0] == usable
-        assert got[key][1] == pk.encode(series[:usable], w, c)
+        if usable >= w:
+            expected[key] = (usable, pk.encode(series[:usable], w, c))
+    assert got == expected
 
 
 def test_codegen_mindist_variants_match_pykernel(spark):

@@ -281,6 +281,17 @@ class TestISax:
                     vals, c, c2,
                 )
 
+    def test_coarse_inequality_allows_zero_mindist(self):
+        """Pins why isax_topk's bucket probe is approximate: adjacent fine
+        letters across a coarse boundary are at mindist 0 but fall into
+        different buckets."""
+        from symtseries_spark import pykernel as pk
+
+        a, b = "AAAD", "AAAE"
+        assert pk.mindist(pk.parse(a, 8), pk.parse(b, 8), c=8) == 0.0
+        assert (pk.coarsen(a, 8, 4), pk.coarsen(b, 8, 4)) == ("AAAB", "AAAC")
+        assert (pk.coarsen(a, 8, 2), pk.coarsen(b, 8, 2)) == ("AAAA", "AAAB")
+
     def test_sax_coarsen_column(self, spark):
         from pyspark.sql import Row
         from symtseries_spark.functions.sax import sax_coarsen
