@@ -237,6 +237,68 @@ def _resolve_n(
     return n_eff, conflict
 
 
+def _contrib_const(c: int) -> tuple[tuple[float | None, ...], tuple[float | None, ...]]:
+    """The MINDIST pair table of cardinality ``c``, built at plan time
+    (src/symtseries.c:585-636): flat row-major (c+2)x(c+2) tuples of the
+    squared distance a letter pair adds to ``above`` and to ``below``,
+    indexed ``slot_a * (c+2) + slot_b`` (slots as in
+    :func:`_letter_slot`). The '#' substitution (a missing letter counts
+    as the bucket furthest from the other side) and the orientation
+    (``above`` when a's bucket is the higher one) are baked into the
+    values. Row and column 0 are NULL: one invalid letter makes the
+    word's sums NULL."""
+    size = c + 2
+    above: list[float | None] = [None] * (size * size)
+    below: list[float | None] = [None] * (size * size)
+    for la in range(c + 1):
+        for lb in range(c + 1):
+            la2, lb2 = la, lb
+            if la == c:
+                la2 = c - 1 if lb < c - 1 - lb else 0
+            elif lb == c:
+                lb2 = c - 1 if la < c - 1 - la else 0
+            d = 0.0 if la == lb else MINDIST_LUT[c][la2 * c + lb2]
+            d2 = d * d
+            k = (la + 1) * size + lb + 1
+            above[k], below[k] = (d2, 0.0) if la2 > lb2 else (0.0, d2)
+    return tuple(above), tuple(below)
+
+
+def _letter_slot(word: Column, i: int, c: int) -> Column:
+    """Pair-table slot of the ``i``-th letter (1-based) of a SAX string:
+    1..c for the letters, c+1 for '#', 0 for anything else (NULL word,
+    foreign letter). Never NULL and never out of range, so the
+    ``element_at`` lookups cannot raise under ANSI mode."""
+    alphabet = F.lit(LETTERS[:c] + MISSING)
+    return F.coalesce(F.instr(alphabet, F.substring(word, i, 1)), F.lit(0))
+
+
+def _mindist_struct(
+    above: Column,
+    below: Column,
+    *,
+    w: Column,
+    len_a: Column,
+    len_b: Column,
+    n_a: Column | int | None,
+    n_b: Column | int | None,
+) -> Column:
+    """The one validity gate and scale of every MINDIST form: NULL
+    unless both words have ``w`` > 0 letters and their n values agree
+    (:func:`_resolve_n`); else STRUCT(dist, above, below) scaled by
+    √(n/w) (src/symtseries.c:591-636)."""
+    n_eff, conflict = _resolve_n(n_a, n_b, w)
+    comp = F.sqrt(n_eff.cast("double") / w)
+    return F.when(
+        (w > 0) & (len_a == w) & (len_b == w) & ~conflict,
+        F.struct(
+            (comp * F.sqrt(above + below)).alias("dist"),
+            (comp * F.sqrt(above)).alias("above"),
+            (comp * F.sqrt(below)).alias("below"),
+        ),
+    )
+
+
 def sax_mindist_parts(
     a: Column,
     b: Column,
@@ -252,65 +314,44 @@ def sax_mindist_parts(
     (the compression scale √(n/w)), with the reference's wildcard rule
     (src/symtseries.c:591-601): 0 (or NULL) adopts the other side's n;
     both 0 -> compression 1 (n = w). Per-row incompatibility gates
-    mirror the reference's NaN returns as NULL: length (w) mismatch, and
-    — when both ``n`` and ``n_b`` are supplied — conflicting nonzero n
-    values. ``above`` accumulates positions where a's bucket is
-    higher-valued than b's.
+    mirror the reference's NaN returns as NULL: NULL or empty arrays,
+    length (w) mismatch, and — when both ``n`` and ``n_b`` are supplied
+    — conflicting nonzero n values. An element outside 0..c (e.g. the
+    NULL a lenient :func:`sax_parse` gives a foreign letter) makes
+    dist, above and below NULL. ``above`` accumulates positions where
+    a's bucket is higher-valued than b's.
 
-    **c-compatibility is plan-time, by construction**: the LUT for ``c``
-    is baked into the expression, and both operands are parsed/encoded
-    against that same ``c`` — two words of different cardinality can
-    only meet in one call through caller error. Coarsen to a common
-    cardinality first (:func:`sax_coarsen`); there is no per-row c gate
-    because a Column cannot carry a conflicting LUT (the reference's
-    per-object ``a->c != b->c`` NaN gate, src/symtseries.c:591, has no
-    row-level analogue here).
+    **c-compatibility is plan-time, by construction**: the pair table
+    for ``c`` is baked into the expression, and both operands are
+    parsed/encoded against that same ``c`` — two words of different
+    cardinality can only meet in one call through caller error. Coarsen
+    to a common cardinality first (:func:`sax_coarsen`); there is no
+    per-row c gate because a Column cannot carry a conflicting table
+    (the reference's per-object ``a->c != b->c`` NaN gate,
+    src/symtseries.c:591, has no row-level analogue here).
     """
-    lut = F.array(*[F.lit(d) for d in MINDIST_LUT[c]])
+    size = c + 2
+    above_t, below_t = (F.array(*map(F.lit, t)) for t in _contrib_const(c))
 
-    def contrib(la: Column, lb: Column) -> Column:
-        la2 = F.when(
-            la == c, F.when(lb < F.lit(c - 1) - lb, F.lit(c - 1)).otherwise(F.lit(0))
-        ).otherwise(la)
-        lb2 = F.when(
-            lb == c, F.when(la < F.lit(c - 1) - la, F.lit(c - 1)).otherwise(F.lit(0))
-        ).otherwise(lb)
+    def slot(x: Column) -> Column:
+        return F.when((x >= 0) & (x <= c), x + 1).otherwise(F.lit(0))
 
-        def with_pair(pair: Column) -> Column:
-            d = F.element_at(lut, pair["x"] * c + pair["y"] + 1)
-            return F.struct(
-                (d * d).alias("d2"), (pair["x"] > pair["y"]).alias("is_above")
-            )
-
-        return F.when(
-            la == lb, F.struct(F.lit(0.0).alias("d2"), F.lit(False).alias("is_above"))
-        ).otherwise(_let(F.struct(la2.alias("x"), lb2.alias("y")), with_pair))
-
-    pairs = F.zip_with(a, b, contrib)
+    keys = F.zip_with(a, b, lambda x, y: slot(x) * size + slot(y) + 1)
     sums = F.aggregate(
-        pairs,
+        keys,
         F.struct(F.lit(0.0).alias("ab"), F.lit(0.0).alias("be")),
-        lambda acc, p: F.struct(
-            (acc["ab"] + F.when(p["is_above"], p["d2"]).otherwise(0.0)).alias("ab"),
-            (acc["be"] + F.when(~p["is_above"], p["d2"]).otherwise(0.0)).alias("be"),
+        lambda acc, k: F.struct(
+            (acc["ab"] + F.element_at(above_t, k)).alias("ab"),
+            (acc["be"] + F.element_at(below_t, k)).alias("be"),
         ),
     )
-
     w = F.size(a)
-    n_eff, conflict = _resolve_n(n, n_b, w)
-
-    def finish(s: Column) -> Column:
-        comp = F.sqrt(n_eff.cast("double") / w)
-        return F.struct(
-            (comp * F.sqrt(s["ab"] + s["be"])).alias("dist"),
-            (comp * F.sqrt(s["ab"])).alias("above"),
-            (comp * F.sqrt(s["be"])).alias("below"),
-        )
-
-    compatible = (
-        a.isNotNull() & b.isNotNull() & (F.size(a) == F.size(b)) & ~conflict
+    return _let(
+        sums,
+        lambda s: _mindist_struct(
+            s["ab"], s["be"], w=w, len_a=w, len_b=F.size(b), n_a=n, n_b=n_b
+        ),
     )
-    return F.when(compatible, _let(sums, finish))
 
 
 def sax_znorm(arr: Column) -> Column:
@@ -411,62 +452,11 @@ def sax_coarsen(word: Column, c: int, c2: int) -> Column:
 # The array/HOF kernels above are the general form, but Spark evaluates
 # higher-order functions interpreted (outside whole-stage codegen), which
 # costs ~µs per call — too slow for per-row sliding windows or per-pair
-# all-pairs joins at scale. The variants below unroll the fixed plan-time
-# (w, c) into flat scalar expressions (substring/ascii/element_at on
-# literal arrays/CASE), which codegen compiles to tight JVM loops.
-
-
-def _contrib_const(la: int, lb: int, c: int) -> tuple[float, bool]:
-    """(d2, is_above) for a known symbol pair (plan-time)."""
-    if la == lb:
-        return 0.0, False
-    la2, lb2 = la, lb
-    if la == c:
-        la2 = c - 1 if lb < c - 1 - lb else 0
-    elif lb == c:
-        lb2 = c - 1 if la < c - 1 - la else 0
-    d = MINDIST_LUT[c][la2 * c + lb2]
-    return d * d, la2 > lb2
-
-
-def sax_mindist_to_literal(
-    word: Column, pattern_indices: list[int], *, c: int, n: Column | int | None = None
-) -> Column:
-    """MINDIST from a SAX-string column to a *literal* pattern ->
-    STRUCT(dist, above, below). Every position's contribution is
-    precomputed per possible letter at plan time, so the expression is a
-    flat sum of CASE lookups — fully inside whole-stage codegen."""
-    w = len(pattern_indices)
-    alphabet = [*LETTERS[:c], MISSING]
-    total_terms: list[Column] = []
-    above_terms: list[Column] = []
-    for i, lb in enumerate(pattern_indices, start=1):
-        ch = F.substring(word, i, 1)
-        t: Column | None = None
-        a: Column | None = None
-        for la_pos, la_ch in enumerate(alphabet):
-            la = c if la_ch == MISSING else la_pos
-            d2, is_above = _contrib_const(la, lb, c)
-            if d2:
-                t = (F.when(ch == la_ch, d2) if t is None else t.when(ch == la_ch, d2))
-                if is_above:
-                    a = (F.when(ch == la_ch, d2) if a is None else a.when(ch == la_ch, d2))
-        if t is not None:
-            total_terms.append(t.otherwise(0.0))
-        if a is not None:
-            above_terms.append(a.otherwise(0.0))
-
-    total = sum(total_terms, F.lit(0.0))
-    above = sum(above_terms, F.lit(0.0))
-    # the literal pattern side is n = 0 (wildcard) by definition, so the
-    # row's n wins; n = 0/NULL rows fall back to compression 1 (n = w)
-    n_eff, _ = _resolve_n(n, None, F.lit(w))
-    comp = F.sqrt(n_eff.cast("double") / F.lit(w))
-    return F.struct(
-        (comp * F.sqrt(total)).alias("dist"),
-        (comp * F.sqrt(above)).alias("above"),
-        (comp * F.sqrt(total - above)).alias("below"),
-    )
+# all-pairs joins at scale. The string forms below unroll the fixed
+# plan-time (w, c) into flat scalar expressions (substring/instr/
+# element_at on literal arrays), which codegen compiles to tight JVM
+# loops. They share the pair table, letter slot and gate of
+# :func:`sax_mindist_parts`.
 
 
 def sax_word_mindist(
@@ -479,55 +469,63 @@ def sax_word_mindist(
     n_b: Column | int | None = None,
 ) -> Column:
     """MINDIST between two SAX-string columns of known (w, c) ->
-    STRUCT(dist, above, below), unrolled per position with literal-array
-    lookups — codegen-friendly for all-pairs joins.
+    STRUCT(dist, above, below), unrolled per position — codegen-friendly
+    for all-pairs joins.
 
-    Letter chars map to letter indices via one CASE each, then a SHARED
-    pair index drives two ``element_at`` lookups into plan-time
-    (c+1)²-entry literal LUTs (src/symtseries.c:585-636). The
-    '#'-substitution rule and the above/below orientation are baked
-    INTO the LUT values at plan time (via :func:`_contrib_const`), not
-    unrolled as per-position CASE logic — ~3x less generated code per
-    position, which keeps janino compile + JIT warm-up of the
-    whole-stage method cheap and stable (the unrolled form made the
-    w=4/c=8 all-pairs plan's first execution swing by multiple seconds
-    on cold code caches). ``n``/``n_b`` follow the same wildcard +
-    per-row conflict rules as :func:`sax_mindist_parts` (conflicting
-    nonzero n values -> NULL).
+    Each position maps its two letters to pair-table slots
+    (:func:`_letter_slot`) and reads the above/below contributions from
+    the plan-time flat tables of :func:`_contrib_const` through one
+    shared pair index (src/symtseries.c:585-636). The '#' rule and the
+    orientation live in the table values, not in per-position CASE
+    logic, which keeps the whole-stage method small (the CASE-unrolled
+    form made the w=4/c=8 all-pairs plan's first run swing by seconds on
+    cold code caches). ``n``/``n_b`` follow the wildcard and per-row
+    conflict rules of :func:`sax_mindist_parts`.
+
+    NULL/malformed contract: a NULL word, a word whose length is not
+    ``w``, or conflicting nonzero n values give a NULL struct; a letter
+    outside the first ``c`` letters and '#' makes dist, above and below
+    NULL. No input raises.
     """
-    size = c + 1  # letter index c encodes '#'
-    d2_flat: list[float] = []
-    ab_flat: list[float] = []
-    for la_i in range(size):
-        for lb_i in range(size):
-            d2v, is_above = _contrib_const(la_i, lb_i, c)
-            d2_flat.append(d2v)
-            ab_flat.append(d2v if is_above else 0.0)
-    lut_d2 = F.array(*[F.lit(v) for v in d2_flat])
-    lut_ab = F.array(*[F.lit(v) for v in ab_flat])
-
-    def letter_idx(ch: Column) -> Column:
-        # '#' -> c, letters -> 0..c-1 (ascii('A') = 65)
-        return F.when(ch == MISSING, F.lit(c)).otherwise(F.ascii(ch) - 65)
-
-    total = F.lit(0.0)
-    above = F.lit(0.0)
+    size = c + 2
+    above_t, below_t = (F.array(*map(F.lit, t)) for t in _contrib_const(c))
+    above = below = F.lit(0.0)
     for i in range(1, w + 1):
-        idx = (
-            letter_idx(F.substring(word_a, i, 1)) * size
-            + letter_idx(F.substring(word_b, i, 1))
-            + 1
-        )
-        total = total + F.element_at(lut_d2, idx)
-        above = above + F.element_at(lut_ab, idx)
+        k = _letter_slot(word_a, i, c) * size + _letter_slot(word_b, i, c) + 1
+        above = above + F.element_at(above_t, k)
+        below = below + F.element_at(below_t, k)
+    return _mindist_struct(
+        above, below, w=F.lit(w), len_a=F.length(word_a), len_b=F.length(word_b),
+        n_a=n, n_b=n_b,
+    )
 
-    n_eff, conflict = _resolve_n(n, n_b, F.lit(w))
-    comp = F.sqrt(n_eff.cast("double") / F.lit(w))
-    return F.when(
-        ~conflict,
-        F.struct(
-            (comp * F.sqrt(total)).alias("dist"),
-            (comp * F.sqrt(above)).alias("above"),
-            (comp * F.sqrt(total - above)).alias("below"),
-        ),
+
+def _pattern_mindist(
+    word: Column, pattern: str, *, c: int, n: Column | int | None = None
+) -> Column:
+    """MINDIST from a SAX-string column to a literal ``pattern`` ->
+    STRUCT(dist, above, below); the expression behind
+    :func:`..operators.search.mindist_to_pattern`. The pattern is parsed
+    eagerly (``ValueError`` on a bad letter) and is n = 0, so each row's
+    ``n`` drives the scale. Each position reads the pattern letter's
+    column of the :func:`_contrib_const` tables as one (c+2)-entry
+    literal array indexed by the word letter's slot — a flat sum that
+    stays inside whole-stage codegen and plans cheaper than indexing
+    the flat table with a literal operand. Same NULL/malformed contract
+    as :func:`sax_word_mindist`.
+    """
+    from ..pykernel import parse
+
+    size = c + 2
+    tables = _contrib_const(c)
+    indices = parse(pattern, c)
+    above = below = F.lit(0.0)
+    for i, lb in enumerate(indices, start=1):
+        slot = _letter_slot(word, i, c) + 1
+        ab, be = (F.array(*map(F.lit, t[lb + 1 :: size])) for t in tables)
+        above = above + F.element_at(ab, slot)
+        below = below + F.element_at(be, slot)
+    w = F.lit(len(indices))
+    return _mindist_struct(
+        above, below, w=w, len_a=F.length(word), len_b=w, n_a=n, n_b=None
     )

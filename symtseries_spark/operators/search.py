@@ -25,9 +25,9 @@ from pyspark.sql import functions as F
 from .. import pykernel as pk
 from ..functions.sax import (
     _let,
+    _pattern_mindist,
     is_finite,
     sax_coarsen,
-    sax_mindist_to_literal,
     sax_word_mindist,
     sax_zeuclidean,
     sax_znorm,
@@ -48,13 +48,14 @@ def mindist_to_pattern(
 
     The pattern is parsed with n=0 (wildcard), so each row's own ``n``
     drives the compression scale — the reference's wildcard rule
-    (src/symtseries.c:594-601). The pattern is validated eagerly and
-    compiled to plan-time CASE lookups (codegen path).
+    (src/symtseries.c:594-601). The pattern is validated eagerly
+    (``ValueError``) and compiled to plan-time literal lookups (codegen
+    path). A NULL word, a word whose length differs from the pattern's,
+    or a word with a letter outside the first ``c`` letters and '#'
+    gets NULL in all three columns; no input raises.
     """
     n_col = F.col(n) if isinstance(n, str) else n
-    parts = sax_mindist_to_literal(
-        F.col(word_col), pk.parse(pattern, c), c=c, n=n_col
-    )
+    parts = _pattern_mindist(F.col(word_col), pattern, c=c, n=n_col)
     return (
         words.withColumn("__m", parts)
         .withColumn(out, F.col("__m")["dist"])
@@ -75,13 +76,16 @@ def topk_nearest(
     tiebreakers: list[str] | None = None,
 ) -> DataFrame:
     """Top-k rows nearest to a literal pattern (global order, deterministic
-    via tiebreakers). A plan-time constant pattern means this is scan ->
-    project -> TakeOrderedAndProject: no shuffle beyond the final top-k
-    reduction, which AQE executes as partial top-k per partition.
+    via tiebreakers). Rows :func:`mindist_to_pattern` cannot score
+    (NULL ``mindist``) are never returned, so fewer than ``k`` rows come
+    back when fewer than ``k`` are scorable. A plan-time constant
+    pattern means this is scan -> project -> TakeOrderedAndProject: no
+    shuffle beyond the final top-k reduction, which AQE executes as
+    partial top-k per partition.
     """
     scored = mindist_to_pattern(words, pattern, c=c, word_col=word_col, n=n)
     order = [F.col("mindist").asc()] + [F.col(t) for t in (tiebreakers or [])]
-    return scored.orderBy(*order).limit(k)
+    return scored.where(F.col("mindist").isNotNull()).orderBy(*order).limit(k)
 
 
 def match_pattern(
@@ -255,9 +259,9 @@ def isax_topk(
     pruned = words.where(
         sax_coarsen(F.col(word_col), c, coarse_c) == coarse_pattern
     )
-    scored = mindist_to_pattern(pruned, pattern, c=c, word_col=word_col, n=n)
-    order = [F.col("mindist").asc()] + [F.col(t) for t in (tiebreakers or [])]
-    return scored.orderBy(*order).limit(k)
+    return topk_nearest(
+        pruned, pattern, c=c, k=k, word_col=word_col, n=n, tiebreakers=tiebreakers
+    )
 
 
 def euclidean_refine(
@@ -368,7 +372,6 @@ def allpairs_within(
     key_col: str = "series_key",
     word_col: str = "sax_word",
     n_col: str | None = "n",
-    broadcast_right: bool = True,
     attach: DataFrame | None = None,
     attach_key: str = "series_key",
     attach_col: str = "payload",
@@ -429,11 +432,9 @@ def allpairs_within(
     da = distinct.select(
         F.col("wd").alias("word_a"), *([F.col("n").alias("n_a")] if n_col else [])
     ).repartition(parallelism)
-    db = distinct.select(
+    db = F.broadcast(distinct.select(
         F.col("wd").alias("word_b"), *([F.col("n").alias("n_b")] if n_col else [])
-    )
-    if broadcast_right:
-        db = F.broadcast(db)
+    ))
     cond = (F.col("word_a") <= F.col("word_b")) & (
         F.length("word_a") == F.length("word_b")
     )

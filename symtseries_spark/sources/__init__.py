@@ -97,32 +97,6 @@ def load_series(
     return reader.options(**options).format(fmt).load(path)
 
 
-def write_words_bucketed(
-    words: DataFrame,
-    path: str,
-    *,
-    c: int,
-    coarse_c: int = 2,
-    word_col: str = "sax_word",
-    mode: str = "overwrite",
-) -> None:
-    """Sink: persist a word table partitioned by its iSAX coarse bucket
-    (``isax_bucket=<coarse word>/`` directories). At rest this is the
-    iSAX prefix-tree root level: similarity queries that prune on the
-    coarse bucket (:func:`..operators.search.isax_topk`'s prefilter)
-    become PARTITION-PRUNED scans — Spark reads only the matching
-    directories, ~1/coarse_c^w of the data, before any row is touched.
-    """
-    from ..functions.sax import sax_coarsen
-
-    (
-        words.withColumn("isax_bucket", sax_coarsen(F.col(word_col), c, coarse_c))
-        .write.mode(mode)
-        .partitionBy("isax_bucket")
-        .parquet(path)
-    )
-
-
 def write_words_multilevel(
     words: DataFrame,
     path: str,
@@ -140,6 +114,8 @@ def write_words_multilevel(
     PartitionFilters on EVERY level at once — the scan opens only the
     single finest-level directory chain matching the pattern
     (~prod(1/c_i^w) of the data) before any row is read.
+    ``levels=(2,)`` is the one-level layout: the tree root alone, one
+    ``isax_l0=`` directory per c=2 word.
     """
     from ..functions.sax import sax_coarsen
 
@@ -173,24 +149,6 @@ def read_words_multilevel(
     return df
 
 
-def read_words_bucket(
-    spark: SparkSession,
-    path: str,
-    pattern: str,
-    *,
-    c: int,
-    coarse_c: int = 2,
-) -> DataFrame:
-    """Read back only the iSAX bucket matching ``pattern``'s coarse form
-    — the filter lands on the partition column, so non-matching
-    directories are never opened (check ``PartitionFilters`` in the
-    scan node)."""
-    from .. import pykernel as pk
-
-    coarse = pk.coarsen(pattern, c, coarse_c)
-    return spark.read.parquet(path).where(F.col("isax_bucket") == coarse)
-
-
 def write_bucketed_table(
     df: DataFrame,
     table: str,
@@ -207,8 +165,8 @@ def write_bucketed_table(
     without a Sort when pre-sorted), which at 100 TB is the difference
     between an exchange of the whole fact table per query and none.
 
-    This is the general-relational sibling of the iSAX layouts above:
-    `write_words_bucketed` prunes SCANS via partition directories;
+    This is the general-relational sibling of the iSAX layout above:
+    `write_words_multilevel` prunes SCANS via partition directories;
     bucketing co-locates JOINS via hash-bucket files. The bucket count
     should match (a multiple of) the cluster's target parallelism.
     """
@@ -231,7 +189,7 @@ def write_ivf_partitioned(
     """Sink: persist an embedding table partitioned by its IVF coarse
     list (``list_id=<n>/`` directories) plus the centroid table as a
     ``_centroids`` subdirectory — the embedding-space analogue of
-    :func:`write_words_bucketed`. At rest, an ANN probe that restricts
+    :func:`write_words_multilevel`. At rest, an ANN probe that restricts
     to ``nprobe`` lists becomes a PARTITION-PRUNED scan: Spark opens
     only the probed directories (~nprobe/num_lists of the data) before
     any vector is read.

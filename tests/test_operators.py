@@ -10,9 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from symtseries_spark import pykernel as pk
-from symtseries_spark.functions.sax import sax_mindist_to_literal, sax_word_mindist
+from symtseries_spark.functions.sax import sax_word_mindist
 from symtseries_spark.operators import (
     allpairs_within,
+    mindist_to_pattern,
     sliding_sax,
     tumbling_sax,
     whole_series_sax,
@@ -199,19 +200,14 @@ def test_codegen_mindist_variants_match_pykernel(spark):
             assert abs(r["m"]["below"] - exp[2]) < 1e-9
 
         pattern = "".join(rng.choice(alphabet) for _ in range(w))
-        got2 = df.select(
-            "wa", "n",
-            sax_mindist_to_literal(
-                F.col("wa"), pk.parse(pattern, c), c=c, n=F.col("n")
-            ).alias("m"),
-        ).collect()
+        got2 = mindist_to_pattern(df, pattern, c=c, word_col="wa", n="n").collect()
         for r in got2:
             exp = pk.mindist_parts(
                 pk.parse(r["wa"], c), pk.parse(pattern, c), c=c, n_a=r["n"], n_b=r["n"]
             )
-            assert abs(r["m"]["dist"] - exp[0]) < 1e-9
-            assert abs(r["m"]["above"] - exp[1]) < 1e-9
-            assert abs(r["m"]["below"] - exp[2]) < 1e-9
+            assert abs(r["mindist"] - exp[0]) < 1e-9
+            assert abs(r["mindist_above"] - exp[1]) < 1e-9
+            assert abs(r["mindist_below"] - exp[2]) < 1e-9
 
 
 def test_allpairs_matches_bruteforce(spark):

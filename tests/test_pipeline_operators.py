@@ -292,6 +292,37 @@ class TestISax:
         assert (pk.coarsen(a, 8, 4), pk.coarsen(b, 8, 4)) == ("AAAB", "AAAC")
         assert (pk.coarsen(a, 8, 2), pk.coarsen(b, 8, 2)) == ("AAAA", "AAAB")
 
+    def test_topk_drops_unscorable_rows(self, spark):
+        """Words mindist cannot score (NULL, empty, short, long, foreign
+        letter) never appear in a top-k, even when k exceeds the scorable
+        rows (ascending order puts NULLs first), and the query does not
+        raise."""
+        from symtseries_spark import pykernel as pk
+        from symtseries_spark.operators import isax_topk, topk_nearest
+
+        c, n, pattern = 8, 32, "AAAA"
+        good = ["AAAA", "AAAB", "AAA#", "BAAA", "HHHH"]
+        bad = [None, "", "AAA", "AAAAH", "AAAZ"]
+        df = spark.createDataFrame(
+            list(enumerate(bad + good)), "series_key int, sax_word string"
+        )
+        p = pk.parse(pattern, c)
+        ranked = sorted(
+            (pk.mindist(p, pk.parse(x, c), c=c, n_b=n), i)
+            for i, x in enumerate(bad + good)
+            if x in good
+        )
+        top = topk_nearest(df, pattern, c=c, k=10, n=n, tiebreakers=["series_key"])
+        assert [(r.mindist, r.series_key) for r in top.collect()] == ranked
+        coarse = pk.coarsen(pattern, c, 2)
+        in_bucket = [
+            (d, i) for d, i in ranked if pk.coarsen((bad + good)[i], c, 2) == coarse
+        ]
+        top = isax_topk(
+            df, pattern, c=c, coarse_c=2, k=10, n=n, tiebreakers=["series_key"]
+        )
+        assert [(r.mindist, r.series_key) for r in top.collect()] == in_bucket
+
     def test_sax_coarsen_column(self, spark):
         from pyspark.sql import Row
         from symtseries_spark.functions.sax import sax_coarsen

@@ -10,23 +10,25 @@ from pyspark.sql import functions as F
 
 from symtseries_spark import pykernel as pk
 from symtseries_spark.operators import tumbling_sax
-from symtseries_spark.sources import load, read_words_bucket, write_words_bucketed
+from symtseries_spark.sources import load, read_words_multilevel, write_words_multilevel
 
 PARAMS = dict(n=16, w=4, c=8)
 
 
 class TestBucketedLayout:
     def test_roundtrip_and_partition_pruning(self, spark, sf_dir):
+        """The one-level layout (``levels=(2,)``): one coarse-bucket
+        directory per c=2 word, read back partition-pruned."""
         words = tumbling_sax(
             load(spark, sf_dir, "events"),
             key="user_id", order=["ts", "event_id"], value="value", **PARAMS,
         )
         out_dir = tempfile.mkdtemp(prefix="sax_bucketed_")
         try:
-            write_words_bucketed(words, out_dir, c=8, coarse_c=2)
+            write_words_multilevel(words, out_dir, c=8, levels=(2,))
             # pick a pattern whose bucket is non-empty
             some_word = words.limit(1).collect()[0].sax_word
-            got = read_words_bucket(spark, out_dir, some_word, c=8, coarse_c=2)
+            got = read_words_multilevel(spark, out_dir, some_word, c=8, levels=(2,))
             expected = {
                 (r.series_key, r.window_id): r.sax_word
                 for r in words.collect()
@@ -39,7 +41,7 @@ class TestBucketedLayout:
             # the filter must land on the partition column, not the rows
             plan = got._jdf.queryExecution().executedPlan().toString()
             assert "PartitionFilters" in plan
-            assert "isax_bucket" in plan.split("PartitionFilters")[1][:200]
+            assert "isax_l0" in plan.split("PartitionFilters")[1][:200]
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
 

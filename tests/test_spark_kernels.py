@@ -230,8 +230,12 @@ def test_per_row_compatibility_gates(spark):
     (src/symtseries.c:591-609): per-row n conflict and w mismatch yield
     NULL, the 0/NULL wildcard adopts the other side's n, both-wildcard
     means compression 1 — and empty/NULL words parse to NULL instead of
-    a fabricated descending-sequence array."""
+    a fabricated descending-sequence array. Malformed words (NULL,
+    empty, short, long, foreign letter) are NULL in the array, string
+    and literal-pattern forms alike, with and without ANSI mode, and
+    never raise."""
     from symtseries_spark.functions.sax import sax_word_mindist
+    from symtseries_spark.operators import mindist_to_pattern
 
     c = 8
     rows = [
@@ -269,8 +273,7 @@ def test_per_row_compatibility_gates(spark):
         r = got[i]
         if expect_null:
             assert r["arr"] is None, (i, r)
-            if len(wa) == len(wb) == 2:  # the unrolled form is fixed-w
-                assert r["lit"] is None, (i, r)
+            assert r["lit"] is None, (i, r)
         else:
             exp = pk.mindist_parts(
                 pk.parse(wa, c), pk.parse(wb, c), c=c,
@@ -285,6 +288,44 @@ def test_per_row_compatibility_gates(spark):
     assert parsed[0]["p"] is None   # empty word -> NULL, not [NULL, NULL]
     assert parsed[1]["p"] is None
     assert parsed[2]["p"] == [5, 2]
+
+    # malformed words against the pattern HHHH (w=4, n=32): every form
+    # gives NULL dist/above/below; valid words match pykernel
+    pattern, n = "HHHH", 32
+    words = [None, "", "AAA", "AAAAH", "AAAZ", "AAAI", "AAAa", "AAAA", "AAA#"]
+    valid = {"AAAA", "AAA#"}
+    wdf = spark.createDataFrame([(i, x) for i, x in enumerate(words)], "id int, wa string")
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            out = mindist_to_pattern(wdf, pattern, c=c, word_col="wa", n=n).select(
+                "id",
+                "wa",
+                F.struct(
+                    F.col("mindist").alias("dist"),
+                    F.col("mindist_above").alias("above"),
+                    F.col("mindist_below").alias("below"),
+                ).alias("pat"),
+                sax_word_mindist(F.col("wa"), F.lit(pattern), w=4, c=c, n=n).alias("str"),
+                sax_mindist_parts(
+                    sax_parse(F.col("wa"), c), sax_parse(F.lit(pattern), c), c=c, n=n
+                ).alias("arr"),
+            ).collect()
+            assert len(out) == len(words)
+            for r in out:
+                for form in ("pat", "str", "arr"):
+                    m = r[form]
+                    got = (None,) * 3 if m is None else (m["dist"], m["above"], m["below"])
+                    if r["wa"] in valid:
+                        exp = pk.mindist_parts(
+                            pk.parse(r["wa"], c), pk.parse(pattern, c), c=c, n_a=n
+                        )
+                        assert all(abs(g - e) < 1e-9 for g, e in zip(got, exp)), (ansi, form, r)
+                    else:
+                        assert got == (None,) * 3, (ansi, form, r)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
 
 
 def test_zeuclidean_fixed_n_matches_generic(spark):
@@ -312,3 +353,35 @@ def test_zeuclidean_fixed_n_matches_generic(spark):
         assert (r["g"] is None) == (r["f"] is None), r
         if r["g"] is not None:
             assert r["g"] == r["f"], r
+
+
+def test_one_pair_table_and_one_letter_rule():
+    """Under ``functions/`` and ``operators/``, the MINDIST table is read
+    only by the pair-table builder and the breakpoints only by the letter
+    rule: every distance form and every encoder goes through those two."""
+    import ast
+    import pathlib
+
+    import symtseries_spark
+
+    owners = {"MINDIST_LUT": {"_contrib_const"}, "BREAKPOINTS": {"frame_letter_index"}}
+    root = pathlib.Path(symtseries_spark.__file__).parent
+    readers: dict[str, set[str]] = {name: set() for name in owners}
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = node.name
+        name = (
+            node.id if isinstance(node, ast.Name)
+            else node.attr if isinstance(node, ast.Attribute)
+            else None
+        )
+        if name in owners:
+            readers[name].add(scope or "<module>")
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    for sub in ("functions", "operators"):
+        for path in sorted((root / sub).glob("*.py")):
+            visit(ast.parse(path.read_text()), None)
+    assert readers == owners

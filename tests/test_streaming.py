@@ -523,15 +523,19 @@ class TestKeyedStateHelper:
 class TestStreamToBucketedIndex:
     def test_foreachbatch_builds_pruned_index(self, spark, sf_dir):
         """End-to-end ingest story: a live word stream lands in the
-        bucketed iSAX layout via foreachBatch (append per micro-batch),
-        and the at-rest table serves partition-pruned bucket reads that
-        match the batch-computed truth."""
+        one-level iSAX layout (``levels=(2,)``) via foreachBatch (append
+        per micro-batch), and the at-rest table serves partition-pruned
+        bucket reads that match the batch-computed truth."""
         import tempfile
         import uuid
 
         from symtseries_spark import pykernel as pk
         from symtseries_spark.operators import tumbling_sax
-        from symtseries_spark.sources import load_events_stream, read_words_bucket
+        from symtseries_spark.sources import (
+            load_events_stream,
+            read_words_multilevel,
+            write_words_multilevel,
+        )
         from symtseries_spark.streaming import sliding_sax_stream
 
         out_dir = tempfile.mkdtemp(prefix="stream_idx_")
@@ -545,10 +549,8 @@ class TestStreamToBucketedIndex:
             "sax_word",
         )
 
-        from symtseries_spark.sources import write_words_bucketed
-
         def sink(batch_df, batch_id):
-            write_words_bucketed(batch_df, out_dir, c=8, coarse_c=2, mode="append")
+            write_words_multilevel(batch_df, out_dir, c=8, levels=(2,), mode="append")
 
         q = (
             words.writeStream.foreachBatch(sink)
@@ -566,9 +568,10 @@ class TestStreamToBucketedIndex:
         ]
         assert full, "no complete windows streamed"
         target = full[0]
-        got = read_words_bucket(spark, out_dir, target, c=8, coarse_c=2)
+        got = read_words_multilevel(spark, out_dir, target, c=8, levels=(2,))
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan
+        assert "isax_l0" in plan.split("PartitionFilters")[1][:200]
         expected_bucket = pk.coarsen(target, 8, 2)
         rows = got.collect()
         assert rows and all(
