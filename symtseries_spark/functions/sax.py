@@ -501,31 +501,57 @@ def sax_word_mindist(
 
 
 def _pattern_mindist(
-    word: Column, pattern: str, *, c: int, n: Column | int | None = None
+    word_col: str, pattern: str, *, c: int, n: str | int | None = None
 ) -> Column:
-    """MINDIST from a SAX-string column to a literal ``pattern`` ->
-    STRUCT(dist, above, below); the expression behind
-    :func:`..operators.search.mindist_to_pattern`. The pattern is parsed
-    eagerly (``ValueError`` on a bad letter) and is n = 0, so each row's
-    ``n`` drives the scale. Each position reads the pattern letter's
-    column of the :func:`_contrib_const` tables as one (c+2)-entry
-    literal array indexed by the word letter's slot — a flat sum that
-    stays inside whole-stage codegen and plans cheaper than indexing
-    the flat table with a literal operand. Same NULL/malformed contract
-    as :func:`sax_word_mindist`.
+    """MINDIST from the SAX-string column named ``word_col`` to a
+    literal ``pattern`` -> STRUCT(dist, above, below); the expression
+    behind :func:`..operators.search.mindist_to_pattern`. The pattern is
+    parsed eagerly (``ValueError`` on a bad letter) and is n = 0, so each
+    row's ``n`` (a column name, an int, or ``None`` for n = w) drives
+    the scale. Each position reads the pattern letter's column of the
+    :func:`_contrib_const` tables as one (c+2)-entry literal array
+    indexed by the word letter's slot — a flat sum that stays inside
+    whole-stage codegen. Same slot rule, gate, scale and left-folded
+    sums as :func:`sax_word_mindist`, so the values are bit-identical.
+
+    The expression is rendered as ONE SQL string and handed to
+    ``F.expr`` once, because a probe's fixed cost is driver<->JVM round
+    trips, not execution: as a Column tree every ``F.lit``,
+    ``F.array``, ``element_at``, ``+`` and gate node costs 3-8 Py4J
+    calls, about 1,000 of the ~1,230 an iSAX probe made at w=4, c=8,
+    and the count grew with w*c. As text, a probe makes ~220 calls at
+    any (w, c). Doubles are written as ``repr(v) + "D"``, which
+    round-trips exactly.
     """
     from ..pykernel import parse
 
+    def ident(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    def dbl(v: float | None) -> str:
+        return "CAST(NULL AS DOUBLE)" if v is None else repr(float(v)) + "D"
+
+    word = ident(word_col)
     size = c + 2
     tables = _contrib_const(c)
     indices = parse(pattern, c)
-    above = below = F.lit(0.0)
+    w = len(indices)
+    above = below = "0.0D"
     for i, lb in enumerate(indices, start=1):
-        slot = _letter_slot(word, i, c) + 1
-        ab, be = (F.array(*map(F.lit, t[lb + 1 :: size])) for t in tables)
-        above = above + F.element_at(ab, slot)
-        below = below + F.element_at(be, slot)
-    w = F.lit(len(indices))
-    return _mindist_struct(
-        above, below, w=w, len_a=F.length(word), len_b=w, n_a=n, n_b=None
+        slot = f"coalesce(instr('{LETTERS[:c]}{MISSING}', substring({word}, {i}, 1)), 0) + 1"
+        ab, be = (f"array({', '.join(map(dbl, t[lb + 1 :: size]))})" for t in tables)
+        above = f"({above} + element_at({ab}, {slot}))"
+        below = f"({below} + element_at({be}, {slot}))"
+    # the wildcard rule of _resolve_n with the pattern's n = 0
+    if isinstance(n, str):
+        n0 = f"coalesce(CAST({ident(n)} AS BIGINT), 0)"
+        n_eff = f"CASE WHEN {n0} > 0 THEN {n0} ELSE {w} END"
+    else:
+        n_eff = str(n if n is not None and n > 0 else w)
+    comp = f"sqrt(CAST({n_eff} AS DOUBLE) / {w})"
+    return F.expr(
+        f"CASE WHEN length({word}) = {w} THEN named_struct("
+        f"'dist', {comp} * sqrt({above} + {below}), "
+        f"'above', {comp} * sqrt({above}), "
+        f"'below', {comp} * sqrt({below})) END"
     )

@@ -19,7 +19,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import pykernel as pk
@@ -40,7 +40,7 @@ def mindist_to_pattern(
     *,
     c: int,
     word_col: str = "sax_word",
-    n: str | Column | int | None = None,
+    n: str | int | None = None,
     out: str = "mindist",
 ) -> DataFrame:
     """Distance from every word row to a literal pattern; adds
@@ -53,14 +53,22 @@ def mindist_to_pattern(
     path). A NULL word, a word whose length differs from the pattern's,
     or a word with a letter outside the first ``c`` letters and '#'
     gets NULL in all three columns; no input raises.
+
+    ``n`` is the name of the rows' n column, a constant int (0 is the
+    wildcard, so n = w), or ``None`` (n = w). A ``Column`` raises
+    ``TypeError``: the expression is rendered as SQL text, which names
+    its inputs.
     """
-    n_col = F.col(n) if isinstance(n, str) else n
-    parts = _pattern_mindist(F.col(word_col), pattern, c=c, n=n_col)
+    if n is not None and not isinstance(n, (str, int)):
+        raise TypeError(
+            f"n must be a column name, an int or None, not {type(n).__name__}"
+        )
+    m = F.col("__m")
     return (
-        words.withColumn("__m", parts)
-        .withColumn(out, F.col("__m")["dist"])
-        .withColumn(f"{out}_above", F.col("__m")["above"])
-        .withColumn(f"{out}_below", F.col("__m")["below"])
+        words.withColumn("__m", _pattern_mindist(word_col, pattern, c=c, n=n))
+        .withColumns(
+            {out: m["dist"], f"{out}_above": m["above"], f"{out}_below": m["below"]}
+        )
         .drop("__m")
     )
 
@@ -72,7 +80,7 @@ def topk_nearest(
     c: int,
     k: int,
     word_col: str = "sax_word",
-    n: str | Column | int | None = None,
+    n: str | int | None = None,
     tiebreakers: list[str] | None = None,
 ) -> DataFrame:
     """Top-k rows nearest to a literal pattern (global order, deterministic
@@ -81,7 +89,8 @@ def topk_nearest(
     back when fewer than ``k`` are scorable. A plan-time constant
     pattern means this is scan -> project -> TakeOrderedAndProject: no
     shuffle beyond the final top-k reduction, which AQE executes as
-    partial top-k per partition.
+    partial top-k per partition. ``n`` is as in
+    :func:`mindist_to_pattern`.
     """
     scored = mindist_to_pattern(words, pattern, c=c, word_col=word_col, n=n)
     order = [F.col("mindist").asc()] + [F.col(t) for t in (tiebreakers or [])]
@@ -243,7 +252,7 @@ def isax_topk(
     coarse_c: int,
     k: int,
     word_col: str = "sax_word",
-    n: str | Column | int | None = None,
+    n: str | int | None = None,
     tiebreakers: list[str] | None = None,
 ) -> DataFrame:
     """Indexed (approximate) top-k: prune to the query's iSAX bucket —
@@ -254,7 +263,8 @@ def isax_topk(
     ``AAAB``/``AAAC`` at c=4), so the prune can drop exact matches and
     return fewer than ``k`` rows. Ranking is exact only within the bucket.
     The prefilter is a plan-time string constant -> parquet-pushable
-    predicate; the scan reads ~1/coarse_c^w of the data."""
+    predicate; the scan reads ~1/coarse_c^w of the data. ``n`` is as in
+    :func:`mindist_to_pattern`."""
     coarse_pattern = pk.coarsen(pattern, c, coarse_c)
     pruned = words.where(
         sax_coarsen(F.col(word_col), c, coarse_c) == coarse_pattern

@@ -119,14 +119,19 @@ def write_words_multilevel(
     """
     from ..functions.sax import sax_coarsen
 
-    if any(b <= a for a, b in zip(levels, (*levels[1:], c))):
-        raise ValueError("levels must be increasing and below c")
+    _check_levels(levels, c)
     out = words
     cols = []
     for i, cc in enumerate(levels):
         out = out.withColumn(f"isax_l{i}", sax_coarsen(F.col(word_col), c, cc))
         cols.append(f"isax_l{i}")
     out.write.mode(mode).partitionBy(*cols).parquet(path)
+
+
+def _check_levels(levels: tuple[int, ...], c: int) -> None:
+    """The iSAX layout's level rule: cardinalities increasing, all below ``c``."""
+    if any(b <= a for a, b in zip(levels, (*levels[1:], c))):
+        raise ValueError("levels must be increasing and below c")
 
 
 def read_words_multilevel(
@@ -137,15 +142,37 @@ def read_words_multilevel(
     c: int,
     levels: tuple[int, ...] = (2, 4),
 ) -> DataFrame:
-    """Read back only the nested bucket chain matching ``pattern`` —
-    one equality predicate per level, all landing on partition columns
-    (``PartitionFilters`` shows every level; non-matching directories
-    are never opened)."""
+    """Read back only the nested bucket chain matching ``pattern``.
+
+    The pattern (``ValueError`` on a letter outside the first ``c`` and
+    '#') and ``levels`` (the writer's rule) are checked before any path
+    is built. The read lists only the chain's leaf directory
+    (``isax_l0=<w0>/isax_l1=<w1>``, '#' escaped as ``%23`` as Spark
+    writes it) under ``basePath``, so the level columns keep their
+    names and no partition discovery runs over the rest of the index.
+    It keeps one equality predicate per level on those partition
+    columns (``PartitionFilters`` shows every level). A chain the index
+    does not hold gives an empty frame with the index's columns.
+    """
+    from pyspark.errors import AnalysisException
+
     from .. import pykernel as pk
 
-    df = spark.read.parquet(path)
-    for i, cc in enumerate(levels):
-        df = df.where(F.col(f"isax_l{i}") == pk.coarsen(pattern, c, cc))
+    pk.parse(pattern, c)
+    _check_levels(levels, c)
+    chain = [pk.coarsen(pattern, c, cc) for cc in levels]
+    root = path.rstrip("/")
+    leaf = "/".join(f"isax_l{i}={w.replace('#', '%23')}" for i, w in enumerate(chain))
+    try:
+        df = spark.read.option("basePath", root).parquet(f"{root}/{leaf}")
+    except AnalysisException as e:
+        # no such chain, or an empty one: the root read's filters give
+        # the empty frame with the index's columns
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        df = spark.read.parquet(path)
+    for i, w in enumerate(chain):
+        df = df.where(F.col(f"isax_l{i}") == w)
     return df
 
 

@@ -28,3 +28,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SYMTSERIES_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Counts (``.n``) the driver->JVM Py4J round trips the test's own
+    thread makes. Calls from other threads, such as the py4j finalizer
+    releasing collected objects, are not counted."""
+    import threading
+    from types import SimpleNamespace
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls, me = SimpleNamespace(n=0), threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            calls.n += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return calls

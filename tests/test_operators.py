@@ -13,8 +13,10 @@ from symtseries_spark import pykernel as pk
 from symtseries_spark.functions.sax import sax_word_mindist
 from symtseries_spark.operators import (
     allpairs_within,
+    isax_topk,
     mindist_to_pattern,
     sliding_sax,
+    topk_nearest,
     tumbling_sax,
     whole_series_sax,
 )
@@ -199,15 +201,66 @@ def test_codegen_mindist_variants_match_pykernel(spark):
             assert abs(r["m"]["above"] - exp[1]) < 1e-9
             assert abs(r["m"]["below"] - exp[2]) < 1e-9
 
-        pattern = "".join(rng.choice(alphabet) for _ in range(w))
-        got2 = mindist_to_pattern(df, pattern, c=c, word_col="wa", n="n").collect()
-        for r in got2:
-            exp = pk.mindist_parts(
-                pk.parse(r["wa"], c), pk.parse(pattern, c), c=c, n_a=r["n"], n_b=r["n"]
-            )
-            assert abs(r["mindist"] - exp[0]) < 1e-9
-            assert abs(r["mindist_above"] - exp[1]) < 1e-9
-            assert abs(r["mindist_below"] - exp[2]) < 1e-9
+        # the literal-pattern form (SQL text) against the string form
+        # (Columns) and pykernel, bit for bit, for every spelling of n
+        for w in (4, 16):
+            rows = [
+                (
+                    i,
+                    "".join(rng.choice(alphabet) for _ in range(w)),
+                    rng.choice([None, 0, w, 3 * w]),
+                )
+                for i in range(60)
+            ]
+            pdf = spark.createDataFrame(rows, "id int, wa string, n int")
+            pattern = "".join(rng.choice(alphabet) for _ in range(w))
+            for n in ("n", 2 * w, 0, None):
+                got2 = mindist_to_pattern(pdf, pattern, c=c, word_col="wa", n=n).select(
+                    "wa",
+                    "n",
+                    "mindist",
+                    "mindist_above",
+                    "mindist_below",
+                    sax_word_mindist(
+                        F.col("wa"), F.lit(pattern), w=w, c=c,
+                        n=F.col("n") if n == "n" else n,
+                    ).alias("s"),
+                ).collect()
+                for r in got2:
+                    n_a = (r["n"] if n == "n" else n) or 0
+                    exp = pk.mindist_parts(
+                        pk.parse(r["wa"], c), pk.parse(pattern, c), c=c, n_a=n_a
+                    )
+                    pat = (r["mindist"], r["mindist_above"], r["mindist_below"])
+                    word = (r["s"]["dist"], r["s"]["above"], r["s"]["below"])
+                    assert pat == word == exp, (c, w, n, pattern, r)
+
+
+def test_pattern_n_rejects_column(spark):
+    words = spark.createDataFrame(
+        [(1, "ABCD", 32)], "series_key int, sax_word string, n int"
+    )
+    for op in (
+        lambda: mindist_to_pattern(words, "ABCD", c=8, n=F.col("n")),
+        lambda: topk_nearest(words, "ABCD", c=8, k=1, n=F.col("n")),
+        lambda: isax_topk(words, "ABCD", c=8, coarse_c=4, k=1, n=F.col("n")),
+    ):
+        with pytest.raises(TypeError, match="column name"):
+            op()
+
+
+def test_topk_build_py4j_calls_flat_in_w_and_c(spark, py4j_calls):
+    """Building a literal-pattern top-k costs a fixed number of
+    driver->JVM round trips: the MINDIST expression is one SQL string,
+    not a Column tree that grows with w*c."""
+    words = spark.createDataFrame([(1, "ABCD")], "series_key int, sax_word string")
+    topk_nearest(words, "ABCD", c=8, k=3, n=32, tiebreakers=["series_key"])  # warm-up
+    calls = {}
+    for w, c in ((4, 8), (16, 16)):
+        start = py4j_calls.n
+        topk_nearest(words, "ABCDEFGHIJKLMNOP"[:w], c=c, k=3, n=32, tiebreakers=["series_key"])
+        calls[(w, c)] = py4j_calls.n - start
+    assert calls[(4, 8)] == calls[(16, 16)] < 300, calls
 
 
 def test_allpairs_matches_bruteforce(spark):

@@ -87,6 +87,54 @@ class TestMultilevelLayout:
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
 
+    def test_read_validates_before_building_a_path(self, spark, tmp_path):
+        """A letter outside the cardinality (``Z``, lowercase) or levels
+        the writer would refuse raise, instead of coarsening to a chain
+        that silently reads nothing."""
+        path = str(tmp_path / "never_written")
+        for pattern in ("AAAZ", "aaaa"):
+            with pytest.raises(ValueError):
+                read_words_multilevel(spark, path, pattern, c=8)
+        for levels in ((4, 2), (2, 8)):
+            with pytest.raises(ValueError):
+                read_words_multilevel(spark, path, "AAAA", c=8, levels=levels)
+
+    @pytest.mark.parametrize("levels", [(2,), (2, 4)], ids=["one-level", "two-level"])
+    def test_read_lists_only_the_chain(self, spark, tmp_path, levels):
+        """The read opens only the pattern's leaf directory ('#' escaped
+        as %23, as Spark writes it) and keeps the index's schema; a chain
+        the index does not hold, or an empty chain directory, reads as an
+        empty frame with the index's columns."""
+        from urllib.parse import unquote
+
+        rows = list(enumerate(["ABCD", "ABCE", "A#CD", "A#CH", "HHHA", "#BCD", "ABCD"]))
+        words = spark.createDataFrame(rows, "window_id int, sax_word string")
+        path = str(tmp_path / "index")
+        write_words_multilevel(words, path, c=8, levels=levels)
+        schema = spark.read.parquet(path).schema
+
+        def chain(word):
+            return [pk.coarsen(word, 8, cc) for cc in levels]
+
+        for pattern in ("ABCD", "A#CD"):
+            got = read_words_multilevel(spark, path, pattern, c=8, levels=levels)
+            expected = sorted(i for i, w in rows if chain(w) == chain(pattern))
+            assert sorted(r.window_id for r in got.collect()) == expected and expected
+            assert got.schema == schema
+            leaf = "/".join(
+                f"isax_l{i}={w.replace('#', '%23')}" for i, w in enumerate(chain(pattern))
+            )
+            files = [unquote(f) for f in got.inputFiles()]
+            assert files and all(f"/{leaf}/" in f for f in files), (leaf, files)
+
+        # HHHH's chain holds no word; AAEE's is an empty directory
+        (tmp_path / "index" / "/".join(
+            f"isax_l{i}={w}" for i, w in enumerate(chain("AAEE"))
+        )).mkdir(parents=True)
+        for pattern in ("HHHH", "AAEE"):
+            got = read_words_multilevel(spark, path, pattern, c=8, levels=levels)
+            assert got.schema == schema and got.count() == 0
+
     def test_levels_must_increase(self, spark, sf_dir):
         from symtseries_spark.sources import write_words_multilevel
 

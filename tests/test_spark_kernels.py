@@ -5,6 +5,7 @@ The Spark kernels must reproduce the pure-Python reference exactly
 per the reference's own tolerance, lua/test.lua:18).
 """
 
+import itertools
 import math
 import random
 
@@ -289,16 +290,20 @@ def test_per_row_compatibility_gates(spark):
     assert parsed[1]["p"] is None
     assert parsed[2]["p"] == [5, 2]
 
-    # malformed words against the pattern HHHH (w=4, n=32): every form
-    # gives NULL dist/above/below; valid words match pykernel
-    pattern, n = "HHHH", 32
+    # malformed words against the pattern HHHH (w=4): every form gives
+    # NULL dist/above/below; valid words match pykernel bit for bit, for
+    # n as an int, a column name, the 0 wildcard and None
+    pattern = "HHHH"
     words = [None, "", "AAA", "AAAAH", "AAAZ", "AAAI", "AAAa", "AAAA", "AAA#"]
     valid = {"AAAA", "AAA#"}
-    wdf = spark.createDataFrame([(i, x) for i, x in enumerate(words)], "id int, wa string")
+    wdf = spark.createDataFrame(
+        [(i, x, 32) for i, x in enumerate(words)], "id int, wa string, n int"
+    )
     prior = spark.conf.get("spark.sql.ansi.enabled")
     try:
-        for ansi in ("true", "false"):
+        for ansi, n in itertools.product(("true", "false"), (32, "n", 0, None)):
             spark.conf.set("spark.sql.ansi.enabled", ansi)
+            n_col = F.col("n") if n == "n" else n
             out = mindist_to_pattern(wdf, pattern, c=c, word_col="wa", n=n).select(
                 "id",
                 "wa",
@@ -307,9 +312,9 @@ def test_per_row_compatibility_gates(spark):
                     F.col("mindist_above").alias("above"),
                     F.col("mindist_below").alias("below"),
                 ).alias("pat"),
-                sax_word_mindist(F.col("wa"), F.lit(pattern), w=4, c=c, n=n).alias("str"),
+                sax_word_mindist(F.col("wa"), F.lit(pattern), w=4, c=c, n=n_col).alias("str"),
                 sax_mindist_parts(
-                    sax_parse(F.col("wa"), c), sax_parse(F.lit(pattern), c), c=c, n=n
+                    sax_parse(F.col("wa"), c), sax_parse(F.lit(pattern), c), c=c, n=n_col
                 ).alias("arr"),
             ).collect()
             assert len(out) == len(words)
@@ -319,11 +324,12 @@ def test_per_row_compatibility_gates(spark):
                     got = (None,) * 3 if m is None else (m["dist"], m["above"], m["below"])
                     if r["wa"] in valid:
                         exp = pk.mindist_parts(
-                            pk.parse(r["wa"], c), pk.parse(pattern, c), c=c, n_a=n
+                            pk.parse(r["wa"], c), pk.parse(pattern, c), c=c,
+                            n_a=32 if n == "n" else n or 0,
                         )
-                        assert all(abs(g - e) < 1e-9 for g, e in zip(got, exp)), (ansi, form, r)
+                        assert got == exp, (ansi, n, form, r)
                     else:
-                        assert got == (None,) * 3, (ansi, form, r)
+                        assert got == (None,) * 3, (ansi, n, form, r)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prior)
 
