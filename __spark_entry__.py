@@ -25,9 +25,9 @@ from symtseries_spark import oracle_vec as ov
 from symtseries_spark.functions.text import bpe_token_count, text_profile
 from symtseries_spark import pykernel as pk
 from symtseries_spark.operators import (
+    allpairs_refined,
     allpairs_within,
     ann_lsh_topk,
-    euclidean_refine,
     tumbling_values,
     isax_buckets,
     isax_topk,
@@ -496,79 +496,37 @@ def q_sax_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sax_allpairs_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prune-then-refine, end to end (the reference's whole point —
-    README.md:29-34): mindist candidates from :func:`allpairs_within`
-    joined back to the raw tumbling windows, true z-normalized Euclidean
-    distance computed JVM-side, false positives dropped. Output is the
-    EXACT all-pairs-within-REFINE_DELTA answer — complete because
-    mindist <= exact, so pruning at the same threshold can only drop
-    pairs that cannot match. At this delta the w=4 prune keeps ~38% of
-    all pairs and the exact check keeps ~0.1% of the candidates: both
-    halves of the pipeline do real work. (Measured dead end, kept for
-    the record: pruning at w=8 keeps only 19%, but fine words are
-    nearly UNIQUE per window, which degenerates allpairs_within's
-    distinct-word broadcast into a multi-million-row build side — 5x
-    slower end-to-end. The symbolic prune wants LOW resolution; the
-    exact check supplies the precision.)"""
+    README.md:29-34): :func:`allpairs_refined` prunes on mindist, computes
+    the true z-normalized Euclidean distance JVM-side and drops false
+    positives. Output is the EXACT all-pairs-within-REFINE_DELTA answer.
+    At this delta the w=4 prune keeps ~38% of all pairs and the exact
+    check keeps ~0.1% of the candidates: both halves of the pipeline do
+    real work. (Measured dead end, kept for the record: pruning at w=8
+    keeps only 19%, but fine words are nearly UNIQUE per window, which
+    degenerates allpairs_within's distinct-word broadcast into a
+    multi-million-row build side — 5x slower end-to-end. The symbolic
+    prune wants LOW resolution; the exact check supplies the
+    precision.)"""
     ev = load(spark, sf_dir, "events")
+    wkey = (F.col("series_key") * 10000 + F.col("window_id")).alias("wkey")
     words = tumbling_sax(
         ev, key="user_id", order=["ts", "event_id"], value="value", **TUMBLE_DIST
-    ).select(
-        (F.col("series_key") * 10000 + F.col("window_id")).alias("wkey"),
-        "sax_word",
-    )
-    scale = (TUMBLE_DIST["n"] / TUMBLE_DIST["w"]) ** 0.5
+    ).select(wkey, "sax_word")
     vals = tumbling_values(
         ev, key="user_id", order=["ts", "event_id"], value="value",
         n=TUMBLE_DIST["n"],
-    ).select(
-        (F.col("series_key") * 10000 + F.col("window_id")).alias("wkey"),
-        "vals",
+    ).select(wkey, "vals")
+    # the unrounded threshold is loosened by 1e-3 so it can never
+    # disagree with the rounded oracle filters below
+    pairs = allpairs_refined(
+        words, vals, key="wkey", delta=REFINE_DELTA + 1e-3, **TUMBLE_DIST
     )
-    # FUSED refine (r4): z-normalized windows ride the pair expansion as
-    # payload columns, so the exact distance is a scan-stage expression
-    # over the expansion output — euclidean_refine's two extra joins
-    # against the 14M-row candidate set were ~half the query's cost
-    # (13.8s -> see BASELINE.md round 4). Identical arithmetic
-    # (sax_znorm once per window, sax_zeuclidean per pair) and identical
-    # filters, so the oracle is unchanged.
-    from symtseries_spark.functions.sax import sax_zeuclidean, sax_znorm
-
-    z = vals.select("wkey", sax_znorm(F.col("vals")).alias("__z"))
-    pairs = allpairs_within(
-        words,
-        w=TUMBLE_DIST["w"],
-        c=TUMBLE_DIST["c"],
-        delta=(REFINE_DELTA + 1e-3) / scale,
-        key_col="wkey",
-        word_col="sax_word",
-        n_col=None,
-        attach=z,
-        attach_key="wkey",
-        attach_col="__z",
-    )
-    cand = pairs.select(
+    return pairs.select(
         "key_a",
         "key_b",
-        F.round(F.col("mindist") * scale, 4).alias("dist"),
-        # n= unrolls the per-pair fold into a codegen'd flat sum
-        # (functions/sax.py r13): the refine fold over the 14M-candidate
-        # expansion was this query's dominant term, ~30% off measured
-        sax_zeuclidean(
-            F.col("payload_a"), F.col("payload_b"), n=TUMBLE_DIST["n"]
-        ).alias("__exact"),
-    ).where(F.col("dist") <= REFINE_DELTA)
-    # the unrounded gate is loosened by 1e-3 so it can never disagree
-    # with the rounded oracle filter below (same convention as before)
-    return (
-        cand.where(F.col("__exact") <= REFINE_DELTA + 1e-3)
-        .select(
-            "key_a",
-            "key_b",
-            "dist",
-            F.round("__exact", 4).alias("exact_dist"),
-        )
-        .where(F.col("exact_dist") <= REFINE_DELTA)
-    )
+        F.round("mindist", 4).alias("dist"),
+        F.round("exact_dist", 4).alias("exact_dist"),
+    ).where((F.col("dist") <= REFINE_DELTA) & (F.col("exact_dist") <= REFINE_DELTA))
 
 
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3084,7 +3042,7 @@ def q_dedup_lsh_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup prune-then-refine: banded MinHash-LSH candidates (threshold
     0 — recall set) verified by EXACT Jaccard over the candidates only —
     refine cost follows candidate count, never |docs|^2. The exact twin
-    of the SAX allpairs->euclidean_refine contract, on text."""
+    of the SAX allpairs_refined contract, on text."""
     from symtseries_spark.operators import jaccard_refine
 
     docs = load(spark, sf_dir, "documents")

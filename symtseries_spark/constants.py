@@ -9,6 +9,10 @@ float tables:
   ``dist(i, j) = 0 if |i-j| <= 1 else Phi^-1(max/c) - Phi^-1(min/c)``
   (computed from the *exact* quantiles, then *rounded* to 3 decimals).
 
+The two conventions differ, so a pair-table entry can exceed the gap
+between the truncated breakpoints it stands for (2.301 against 2.300):
+``MINDIST_OVERSHOOT`` records the largest such excess per cardinality.
+
 Rather than transcribing those tables we regenerate them from the same
 closed form (``statistics.NormalDist.inv_cdf`` is a high-precision
 inverse normal CDF). Generation conventions were verified to reproduce
@@ -81,6 +85,17 @@ def _gen_mindist_flat(c: int) -> tuple[float, ...]:
     return tuple(out)
 
 
+def _gen_overshoot(c: int) -> float:
+    """Largest excess of a pair-table entry over the truncated-breakpoint
+    gap between its two letters' buckets (letters two or more apart; the
+    table holds 0 for neighbours)."""
+    b, lut = BREAKPOINTS[c], MINDIST_LUT[c]
+    return max(
+        [lut[i * c + j] - (b[j - 1] - b[i]) for i in range(c) for j in range(i + 2, c)],
+        default=0.0,
+    )
+
+
 #: BREAKPOINTS[c] -> ascending (c-1)-tuple of bucket boundaries
 BREAKPOINTS: dict[int, tuple[float, ...]] = {
     c: _gen_breakpoints(c) for c in range(MIN_CARDINALITY, MAX_CARDINALITY + 1)
@@ -89,6 +104,16 @@ BREAKPOINTS: dict[int, tuple[float, ...]] = {
 #: MINDIST_LUT[c] -> flat row-major c*c tuple; index [a*c + b]
 MINDIST_LUT: dict[int, tuple[float, ...]] = {
     c: _gen_mindist_flat(c) for c in range(MIN_CARDINALITY, MAX_CARDINALITY + 1)
+}
+
+#: MINDIST_OVERSHOOT[c] -> how far one position's pair-table entry can
+#: exceed the distance between two frame means that carry its letters
+#: (about 0.001 at c=4 and c=8, 0.002 at c=16). For the words of two
+#: all-finite n-point windows, MINDIST <= exact + sqrt(n) *
+#: MINDIST_OVERSHOOT[c] (triangle inequality on the per-position
+#: excess, then Keogh's lemma).
+MINDIST_OVERSHOOT: dict[int, float] = {
+    c: _gen_overshoot(c) for c in range(MIN_CARDINALITY, MAX_CARDINALITY + 1)
 }
 
 

@@ -375,9 +375,10 @@ def sax_znorm(arr: Column) -> Column:
 
 def sax_zeuclidean(za: Column, zb: Column, n: int | None = None) -> Column:
     """Exact Euclidean distance between two z-normalized arrays — the
-    refine step of the reference's prune-then-refine story
-    (/root/reference/README.md:29-34: MINDIST lower-bounds exactly this
-    quantity, include/symtseries.h:5-7). Positions where either side is
+    refine step of the reference's prune-then-refine story (its
+    README.md:29-34 and include/symtseries.h:5-7: MINDIST lower-bounds
+    this quantity, here up to the pair table's rounding,
+    ``MINDIST_OVERSHOOT``). Positions where either side is
     non-finite contribute 0 (the exact-distance analogue of '#' frames);
     NULL or length-mismatched inputs yield NULL.
 

@@ -753,9 +753,9 @@ def hot_ngram_coverage(
 
     The bound is REAL only when the corpus repeats itself (df
     saturates): under fresh-content growth at a FIXED ``min_df`` the
-    hot set grows linearly with volume (measured in
-    scripts/scale_probe_hot_ngrams.py leg A) and a forced broadcast
-    would OOM the executors. ``broadcast_hot=False`` switches the
+    hot set grows linearly with volume (measured in BASELINE.md,
+    "Round 10 (cont.): hot n-gram coverage probe", leg A) and a forced
+    broadcast would OOM the executors. ``broadcast_hot=False`` switches the
     membership join to a plain shuffle join on the gram key — one
     extra exchange of the shingle relation, which AQE skew-splits if
     a mega-hot gram concentrates — for deployments that cannot hold

@@ -6,7 +6,7 @@ DTW is the other classic series-similarity primitive (elastic
 alignment), and the UCR-suite search shape — scan-stage lower bound,
 exact refine only on survivors (Keogh & Ratanamahatana 2005; Rakthanmanon
 et al. 2012) — is the same prune-then-refine discipline this engine
-already runs for SAX (`allpairs_within` → `euclidean_refine`).
+already runs for SAX (`allpairs_refined`).
 
 Everything stays JVM-side — there is NO Python in the distance path:
 

@@ -20,8 +20,8 @@ distance per round: iterations = O(log diameter), not O(diameter).
 Near-dup graphs are overwhelmingly tiny star/clique components
 (diameter 2-3, ~3 rounds either way), but a drift CHAIN of near-dups
 (A~B~C~...) under plain propagation needed one round per hop — a
-60-hop chain exhausted the 50-round cap outright (round-9 probe,
-scripts/scale_probe_components.py) where the doubled form closes any
+60-hop chain exhausted the 50-round cap outright (BASELINE.md, "Round 9:
+connected-components 100x probe") where the doubled form closes any
 realistic diameter in ~10 rounds. The converged labels are a pure
 function of the graph — identical with or without doubling — so the
 DuckDB recursive-CTE oracles are untouched. Each round's lineage is

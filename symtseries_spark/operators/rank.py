@@ -49,11 +49,11 @@ tiebreak quantiles computed over just that key's rows. The bucket id
 stays a monotone function of the full ``(key, tiebreak)`` sort order
 (which is exactly what the window orders by), so ranks remain
 bit-identical while the 90%-tie worst case goes from one 0.9n-row
-single-task sort to ~buckets parallel tasks (measured in
-scripts/scale_probe_rank.py: tie90 at 100M rows matched the uniform
-distribution's wall time once split, vs 60x serialized before). With a
-non-numeric tiebreak the operator degrades to the old behavior: all
-ties land in one bucket, ranked in one task, still exact. Tie cuts are
+single-task sort to ~buckets parallel tasks (measured in BASELINE.md,
+"Round 8: distributed-rank 100x probe": tie90 at 100M rows matched the
+uniform distribution's wall time once split, vs 60x serialized before).
+With a non-numeric tiebreak the operator degrades to the old behavior:
+all ties land in one bucket, ranked in one task, still exact. Tie cuts are
 budgeted out of the requested bucket count (each heavy value keeps at
 most multiplicity-1 cuts), so the boundary list never exceeds
 ``buckets - 1`` entries (round 9).

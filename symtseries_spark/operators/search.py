@@ -2,19 +2,13 @@
 all-pairs similarity, motif counting.
 
 These implement the query surface the reference only *hints* at ("HUGE
-pattern collections", README.md:29-34): mindist is a lower bound on the
-true Euclidean distance between z-normalized series, so every operator
-here is a *pruning* primitive — filter cheap mindist first, refine with
-exact distance only on survivors.
+pattern collections", README.md:29-34): mindist lower-bounds the true
+Euclidean distance between z-normalized series (up to the pair table's
+rounding, ``MINDIST_OVERSHOOT``), so every operator here is a *pruning*
+primitive — filter cheap mindist first, refine with exact distance only
+on survivors (:func:`allpairs_refined`).
 
-Scale notes:
-* Literal query patterns are plan-time constants — no join at all.
-* Pattern *collections* join via ``broadcast`` (a million SAX words is
-  a few tens of MB — always broadcastable).
-* All-pairs self-joins group by word prefix buckets when approximate
-  mode is requested; exact mode is a full cross join and is flagged as
-  such (the reference offers nothing better — mindist is not prunable
-  without an index structure; iSAX trees are a possible extension).
+Literal query patterns are plan-time constants — no join at all.
 """
 
 from __future__ import annotations
@@ -23,10 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import pykernel as pk
+from ..constants import MINDIST_OVERSHOOT, validate_params
 from ..functions.sax import (
-    _let,
     _pattern_mindist,
-    is_finite,
     sax_coarsen,
     sax_word_mindist,
     sax_zeuclidean,
@@ -274,105 +267,6 @@ def isax_topk(
     )
 
 
-def euclidean_refine(
-    pairs: DataFrame,
-    values: DataFrame,
-    *,
-    key_col: str = "series_key",
-    vals_col: str = "vals",
-    key_a: str = "key_a",
-    key_b: str = "key_b",
-    out: str = "exact_dist",
-    delta: float | None = None,
-    cascade_frames: int | None = None,
-) -> DataFrame:
-    """Exact-distance refinement — the second half of the reference's
-    prune-then-refine contract (/root/reference/README.md:29-34: MINDIST
-    "lower bounds the Euclidean distance between z-normalized series",
-    include/symtseries.h:5-7). ``pairs`` is a candidate set (e.g. from
-    :func:`allpairs_within`); ``values`` maps each key to its raw window
-    (``array<double>``, e.g. from
-    :func:`..operators.windows.tumbling_values`). Adds ``out`` = true
-    z-normalized Euclidean distance; with ``delta`` set, keeps only true
-    matches — turning the mindist candidate superset into the exact
-    answer.
-
-    With ``delta`` and ``cascade_frames`` both set, a CASCADING second
-    lower bound runs between the symbolic prune and the full distance:
-    the PAA distance at ``cascade_frames`` frames (Keogh's lemma:
-    sqrt(f) * ||paa_a - paa_b|| <= exact for fully-finite windows) is
-    computed per pair first, and the full O(n) distance is evaluated
-    only when the bound passes — windows containing NaN/Inf bypass the
-    gate (the lemma needs finite frames), so the cascade never changes
-    the result, only the cost.
-
-    Honest A/B (sf0.1, 14M candidates, n=16): the PAA-8 gate prunes 90%
-    of candidates but end-to-end time is a WASH (14.2s vs 13.7s warm) —
-    at n=16 per-pair cost is dominated by join row materialization, not
-    the O(n) arithmetic, so gating the 16-element sum while adding an
-    8-element one saves nothing. Default OFF; it exists for long windows
-    (n >= 256) where the full distance dwarfs the gate.
-
-    Plan shape for 100 TB: z-normalization (and the PAA projection) is
-    computed on the ``values`` side BEFORE the joins, so each window
-    normalizes once (scan-stage, codegen) no matter how many pairs
-    reference it; the two equi-joins then ship only candidate keys +
-    their arrays. The candidate side is the delta-pruned (small)
-    relation, so AQE broadcasts it against the big values scan; per-pair
-    work is O(n) JVM-side arithmetic with no Python anywhere.
-    """
-    cascade = delta is not None and cascade_frames is not None
-    # materialize the z-table once: it feeds BOTH join sides, and without
-    # this the upstream window aggregation would run twice (same
-    # single-compute + ContextCleaner-freed story as the word table above)
-    z = values.select(
-        F.col(key_col).alias("__k"), sax_znorm(F.col(vals_col)).alias("__z")
-    )
-    side_cols = ["__k", "__z"]
-    if cascade:
-        zc = F.col("__z")
-        f = (F.size(zc) / cascade_frames).cast("int")
-        paa = F.transform(
-            F.sequence(F.lit(0), F.lit(cascade_frames - 1)),
-            lambda j: _let(
-                F.slice(zc, j * f + 1, f),
-                lambda fr: F.aggregate(fr, F.lit(0.0), lambda a, v: a + v)
-                / F.size(fr),
-            ),
-        )
-        z = z.withColumn("__paa", paa).withColumn(
-            "__fin",
-            F.forall(zc, lambda x: is_finite(x)) & (F.size(zc) % cascade_frames == 0),
-        )
-        side_cols += ["__paa", "__fin"]
-    z = z.localCheckpoint(eager=True)
-    za = z.select(*[F.col(c).alias(c + "a") for c in side_cols])
-    zb = z.select(*[F.col(c).alias(c + "b") for c in side_cols])
-    joined = pairs.join(za, F.col(key_a) == F.col("__ka")).join(
-        zb, F.col(key_b) == F.col("__kb")
-    )
-    exact = sax_zeuclidean(F.col("__za"), F.col("__zb"))
-    if cascade:
-        f_ratio = F.size(F.col("__za")) / cascade_frames
-        paa_d2 = F.aggregate(
-            F.zip_with("__paaa", "__paab", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda a, v: a + v,
-        )
-        prune = (
-            F.col("__fina")
-            & F.col("__finb")
-            & (F.sqrt(f_ratio * paa_d2) > F.lit(delta))
-        )
-        exact = F.when(~prune, exact)
-    refined = joined.withColumn(out, exact).drop(
-        *[c + s for c in side_cols for s in ("a", "b")]
-    )
-    if delta is not None:
-        refined = refined.where(F.col(out) <= F.lit(delta))
-    return refined
-
-
 def allpairs_within(
     words: DataFrame,
     *,
@@ -401,8 +295,13 @@ def allpairs_within(
     nested loop at sf0.1 runs 500+ s single-task; this plan runs in
     seconds, fully parallel.
 
-    mindist is a lower bound on true Euclidean distance, so the output is
-    a candidate set guaranteed to contain every true match within delta.
+    The output is a candidate set, not a complete one: the pair table
+    is rounded while the breakpoints are truncated, so on all-finite
+    n-point windows MINDIST can exceed the exact z-normalized Euclidean
+    distance by up to √n·``MINDIST_OVERSHOOT[c]`` (at n=16, w=4, c=8 the
+    words ``HAGB``/``AHGB`` have MINDIST 6.508211 over an exact 6.505948),
+    and a true match within that excess of ``delta`` can be dropped.
+    Callers that need every match use :func:`allpairs_refined`.
 
     ``attach`` (optional): a per-key payload table (``attach_key`` ->
     ``attach_col``) joined onto BOTH key sides BEFORE the pair
@@ -529,6 +428,61 @@ def allpairs_within(
             .alias("payload_b"),
         ]
     return expanded.select(*out_cols)
+
+
+def allpairs_refined(
+    words: DataFrame,
+    values: DataFrame,
+    *,
+    key: str,
+    n: int,
+    w: int,
+    c: int,
+    delta: float,
+) -> DataFrame:
+    """Exact all-pairs-within-``delta``: every unordered pair of windows
+    whose z-normalized Euclidean distance is at most ``delta`` ->
+    ``(key_a, key_b, mindist, exact_dist)`` — the reference's
+    prune-then-refine contract (README.md:29-34) as one plan.
+
+    ``words`` holds ``key`` and ``sax_word`` (n-point windows encoded
+    at (w, c), e.g. :func:`..operators.windows.tumbling_sax`); ``values``
+    holds ``key`` and the raw window ``vals`` (e.g.
+    :func:`..operators.windows.tumbling_values`). Each window is
+    z-normalized once (:func:`sax_znorm`) and rides the
+    :func:`allpairs_within` pair expansion as its payload, so the exact
+    distance (:func:`sax_zeuclidean`, unrolled at ``n``) is a projection
+    over the expansion output with no join back to ``values``. The prune
+    runs at ``delta + √n·MINDIST_OVERSHOOT[c]``, the most MINDIST can
+    exceed the exact distance, so the answer is complete over all-finite
+    windows. ``mindist`` is at the true √(n/w) scale.
+
+    A window holding NaN/±Inf gets its exact distance over the positions
+    finite on both sides, which MINDIST ('#' frames count as the
+    furthest letter) does not lower-bound: its pairs are exact but may
+    be incomplete. Keys missing from ``values`` give no rows."""
+    validate_params(n, w, c)
+    scale = (n / w) ** 0.5
+    z = values.select(key, sax_znorm(F.col("vals")).alias("z"))
+    pairs = allpairs_within(
+        words,
+        w=w,
+        c=c,
+        delta=(delta + n**0.5 * MINDIST_OVERSHOOT[c]) / scale,
+        key_col=key,
+        n_col=None,
+        attach=z,
+        attach_key=key,
+        attach_col="z",
+    )
+    return pairs.select(
+        "key_a",
+        "key_b",
+        (F.col("mindist") * scale).alias("mindist"),
+        sax_zeuclidean(F.col("payload_a"), F.col("payload_b"), n=n).alias(
+            "exact_dist"
+        ),
+    ).where(F.col("exact_dist") <= delta)
 
 
 def vsm_series_pairs(

@@ -180,7 +180,7 @@ def tumbling_values(
     """Non-overlapping windows of ``n`` consecutive rows per series key ->
     ``(series_key, window_id, vals: array<double>)`` in series order —
     the raw-series companion of :func:`tumbling_sax`, used by
-    exact-distance refinement (:func:`..operators.search.euclidean_refine`).
+    exact-distance refinement (:func:`..operators.search.allpairs_refined`).
 
     One shuffle (partitionBy key for row_number) + a map-side-combinable
     groupBy on (key, window_id); the per-group state is bounded by the

@@ -127,7 +127,8 @@ def streaming_minhash_dedup(
     oracle gates both. Pick N >= cluster parallelism for throughput;
     stay with None when bucket cardinality is unbounded.
 
-    Volume rule (measured, scripts/scale_probe_streaming.py at
+    Volume rule (measured, BASELINE.md "Round 10: streaming keyed-state
+    100x probe", at
     10k/100k/1M docs x 8 bands): per-bucket state rows grow as docs x
     bands (7.2M rows / 2.85 GB and a 154 s max micro-batch at 1M
     docs — state-store row maintenance dominates), while shard

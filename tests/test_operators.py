@@ -10,14 +10,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from symtseries_spark import pykernel as pk
+from symtseries_spark.constants import MINDIST_OVERSHOOT
 from symtseries_spark.functions.sax import sax_word_mindist
 from symtseries_spark.operators import (
+    allpairs_refined,
     allpairs_within,
     isax_topk,
     mindist_to_pattern,
     sliding_sax,
     topk_nearest,
     tumbling_sax,
+    tumbling_values,
     whole_series_sax,
 )
 
@@ -286,37 +289,46 @@ def test_allpairs_matches_bruteforce(spark):
         assert abs(d - expected[k]) < 1e-9
 
 
-@pytest.mark.parametrize("dirty", [False, True])
-def test_euclidean_refine_matches_bruteforce_and_lower_bound(spark, dirty):
+def _refine_inputs(spark, series, n, w, c):
+    """(words, values) of one n-point tumbling window per series key."""
+    rows = [(key, seq, v) for key, vs in series.items() for seq, v in enumerate(vs)]
+    df = spark.createDataFrame(rows, "key int, seq int, v double")
+    words = tumbling_sax(df, key="key", order="seq", value="v", n=n, w=w, c=c)
+    vals = tumbling_values(df, key="key", order="seq", value="v", n=n)
+    return words, vals
+
+
+@pytest.mark.parametrize(
+    "n, dirty",
+    [
+        pytest.param(16, False, id="clean"),
+        pytest.param(16, True, id="dirty"),
+        pytest.param(256, False, id="clean-n256"),
+    ],
+)
+def test_allpairs_refined_matches_bruteforce_and_lower_bound(spark, n, dirty):
     """Prune-then-refine: exact_dist must equal the Python-computed
     z-normalized Euclidean distance — including on NaN/Inf-dirty series
     the clean-testdata oracle never exercises. On complete series the
     (scaled) mindist candidate bound must never exceed it (the
-    lower-bound law the reference states at include/symtseries.h:5-7).
+    lower-bound law the reference states at include/symtseries.h:5-7),
+    and at a finite delta the answer is exactly the brute-force set
+    {exact <= delta}, pairs just under delta included.
     With missing values the law intentionally does NOT hold: '#' frames
     substitute the furthest letter (pessimistic, src/symtseries.c:612-620)
     while the exact distance skips non-finite positions, so dirty series
-    only check the brute-force equality."""
-    from symtseries_spark.operators import euclidean_refine, tumbling_values
-
+    only check the brute-force equality. n=256 runs the unrolled
+    exact-distance sum at a long window."""
     rng = random.Random(7)
-    n, w, c = 16, 4, 8
-    rows = []
-    for key in range(10):
-        for seq, v in enumerate(_series(rng, n, dirty=dirty)):
-            rows.append((key, seq, v))
-    df = spark.createDataFrame(rows, "key int, seq int, v double")
+    w, c = 4, 8
+    series = {key: _series(rng, n, dirty=dirty) for key in range(10)}
+    words, vals = _refine_inputs(spark, series, n, w, c)
 
-    words = tumbling_sax(df, key="key", order="seq", value="v", n=n, w=w, c=c)
-    pairs = allpairs_within(
-        words, w=w, c=c, delta=1e9, key_col="series_key", n_col=None
-    )
-    vals = tumbling_values(df, key="key", order="seq", value="v", n=n)
-    scale = (n / w) ** 0.5
-    refined = euclidean_refine(
-        pairs.select("key_a", "key_b", (F.col("mindist") * scale).alias("lb")),
-        vals.select("series_key", "vals"),
-    ).collect()
+    def refined(delta):
+        out = allpairs_refined(
+            words, vals, key="series_key", n=n, w=w, c=c, delta=delta
+        ).collect()
+        return {(r["key_a"], r["key_b"]): r for r in out}
 
     def znorm(vs):
         fin = [x for x in vs if math.isfinite(x)]
@@ -325,25 +337,70 @@ def test_euclidean_refine_matches_bruteforce_and_lower_bound(spark, dirty):
             return [0.0 if math.isfinite(x) else x for x in vs]
         return [(x - mu) / std if math.isfinite(x) else x for x in vs]
 
-    series = {}
-    for key, seq, v in rows:
-        series.setdefault(key, []).append(v)
     zs = {k: znorm(v) for k, v in series.items()}
-
-    assert len(refined) == 10 * 9 // 2
-    for r in refined:
-        za, zb = zs[r["key_a"]], zs[r["key_b"]]
-        exp = math.sqrt(
+    exact = {
+        (ka, kb): math.sqrt(
             sum(
                 (x - y) ** 2
-                for x, y in zip(za, zb)
+                for x, y in zip(zs[ka], zs[kb])
                 if math.isfinite(x) and math.isfinite(y)
             )
         )
-        assert abs(r["exact_dist"] - exp) < 1e-9, (r, exp)
+        for ka in series
+        for kb in series
+        if ka < kb
+    }
+
+    everything = refined(1e9)
+    assert set(everything) == set(exact)
+    for pair, r in everything.items():
+        assert abs(r["exact_dist"] - exact[pair]) < 1e-9, (r, exact[pair])
         if not dirty:
             # f32 LUT + frame aggregation tolerance, as in test_properties
-            assert r["lb"] <= r["exact_dist"] + 1e-4, (r, exp)
+            assert r["mindist"] <= r["exact_dist"] + 1e-4, (r, exact[pair])
+
+    if not dirty:
+        # a delta within the prune slack above the median pair's distance
+        slack = n**0.5 * MINDIST_OVERSHOOT[c]
+        delta = sorted(exact.values())[len(exact) // 2] + slack / 2
+        assert all(abs(d - delta) > 1e-6 for d in exact.values())
+        expected = {pair for pair, d in exact.items() if d <= delta}
+        assert 0 < len(expected) < len(exact)
+        assert set(refined(delta)) == expected
+
+
+def test_mindist_overshoots_exact_distance_within_bound(spark):
+    """The pair table is rounded while the breakpoints are truncated
+    (2.301 against a gap of 2.300 at c=8), so MINDIST can exceed the
+    exact distance, by at most sqrt(n) * MINDIST_OVERSHOOT[c]. Four
+    frames of four equal values each, a = [h, -h, k, -k] and
+    b = [-h, h, k, -k]: the prune alone loses this true match at
+    delta = 6.507; the refined query keeps it."""
+    n, w, c = 16, 4, 8
+    h = 1.1501
+    k = math.sqrt(2 - h * h)
+    frames = {1: (h, -h, k, -k), 2: (-h, h, k, -k)}
+    series = {key: [x for x in f for _ in range(n // w)] for key, f in frames.items()}
+    words, vals = _refine_inputs(spark, series, n, w, c)
+    assert sorted(r["sax_word"] for r in words.collect()) == ["AHGB", "HAGB"]
+
+    exact = math.sqrt(32) * h
+    lb = pk.mindist(pk.parse("HAGB", c), pk.parse("AHGB", c), c=c, n_a=n, n_b=n)
+    assert abs(exact - 6.505948) < 1e-6 and abs(lb - 6.508211) < 1e-6
+    assert exact < lb <= exact + n**0.5 * MINDIST_OVERSHOOT[c]
+
+    delta = 6.507
+    scale = (n / w) ** 0.5
+    pruned = allpairs_within(
+        words, w=w, c=c, delta=delta / scale, key_col="series_key", n_col=None
+    )
+    assert pruned.count() == 0
+    got = allpairs_refined(
+        words, vals, key="series_key", n=n, w=w, c=c, delta=delta
+    ).collect()
+    assert [(r["key_a"], r["key_b"]) for r in got] == [(1, 2)]
+    assert abs(got[0]["exact_dist"] - exact) < 1e-9
+    assert abs(got[0]["mindist"] - lb) < 1e-9
 
 
 class TestSlidingChunked:
