@@ -1,5 +1,10 @@
-"""Structured Streaming operators: stateful sliding-window SAX and
-event-time tumbling SAX with watermarks."""
+"""Structured Streaming operators: sliding-window and event-time
+tumbling SAX, recursive time-series monitors (EWMA, Holt, Holt-Winters,
+CUSUM, MAD and rolling z-scores, Page-Hinkley, TWAP, OHLC), funnel
+chains, weighted reservoir samples and cross-batch dedup. Every
+stream with Python-side state keeps it through
+``_util.keyed_state_stream``; the tumbling and session rollups use
+Spark's own windowed-aggregation state."""
 
 from .dedup import (
     streaming_exact_dedup,
@@ -13,6 +18,7 @@ from .timeseries import (
     cusum_stream,
     ewma_stream,
     holt_stream,
+    holt_winters_stream,
     mad_zscore_stream,
     rolling_zscore_stream,
     ohlc_stream,
@@ -25,6 +31,7 @@ __all__ = [
     "cusum_stream",
     "ewma_stream",
     "holt_stream",
+    "holt_winters_stream",
     "mad_zscore_stream",
     "funnel_stream",
     "ohlc_stream",

@@ -1,7 +1,10 @@
-"""One keyed-state helper for the ``applyInPandasWithState`` streams.
+"""One keyed-state helper for the ``applyInPandasWithState`` streams:
+every stream of the package with Python-side state runs through it,
+and no other module touches ``GroupState``.
 
-Every stream here keeps a ``{key -> value}`` map: a series' ring buffer,
-a content hash's canonical id, a bucket's claimant. A stream supplies a
+Every stream here keeps a ``{key -> value}`` map: a series' ring buffer
+or fold accumulators, a content hash's canonical id, a bucket's
+claimant, a funnel's stage times, a group's reservoir. A stream supplies a
 *kernel* ``kernel(rows, state) -> pandas.DataFrame | None`` that reads
 the rows, sorted by ``(*keys, *order)``, updates ``state`` in place by
 item assignment and returns its output rows. :func:`keyed_state_stream`
@@ -34,26 +37,6 @@ from pyspark.sql.types import ArrayType, IntegralType, StructField, StructType
 Kernel = Callable[[pd.DataFrame, dict], pd.DataFrame | None]
 
 _SHARD = "__shard"
-
-
-def coalesce_chunks(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
-    """Merge a group's Arrow chunks into ONE frame before processing.
-
-    applyInPandasWithState splits a key's micro-batch input into chunks
-    of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, and chunk
-    order follows upstream partition interleaving — NOT the caller's
-    sort columns. Any order-sensitive handler (recursions, first-seen
-    scans) must therefore sort the WHOLE batch, not each chunk: coalesce
-    first, sort once. Memory equals the key's batch slice, which the
-    handler was going to traverse anyway. Returns None for an empty
-    iterator (e.g. timeout-only invocations).
-    """
-    chunks = list(pdfs)
-    if not chunks:
-        return None
-    if len(chunks) == 1:
-        return chunks[0]
-    return pd.concat(chunks, ignore_index=True)
 
 
 def shard_of(h: Column, shards: int) -> Column:
@@ -141,9 +124,15 @@ def keyed_state_stream(
     sort_by = [*keys, *order]
 
     def sorted_rows(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
-        pdf = coalesce_chunks(pdfs)
-        if pdf is None:
+        # a group's micro-batch arrives in chunks of
+        # spark.sql.execution.arrow.maxRecordsPerBatch rows whose order
+        # follows upstream partition interleaving, not the sort columns:
+        # an order-sensitive kernel needs the whole batch sorted once.
+        # None: no rows (a timeout-only call)
+        chunks = list(pdfs)
+        if not chunks:
             return None
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
         for k, flag in flags.items():
             null = pdf.pop(flag).to_numpy()
             if null.any():

@@ -17,12 +17,10 @@ transition emitted in batch b can never be revised by batch b+1.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from typing import Any
+from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -32,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._util import coalesce_chunks
+from ._util import keyed_state_stream
 
 __all__ = ["funnel_stream"]
 
@@ -55,61 +53,55 @@ def funnel_stream(
         raise ValueError("stages must be non-empty")
     stages = list(stages)
     order = list(order) if order is not None else [ts]
-    key_field = events.schema[key]
     out_schema = StructType(
         [
-            StructField(key_field.name, key_field.dataType),
+            StructField(key, events.schema[key].dataType),
             StructField("stage_idx", IntegerType()),
             StructField("stage", StringType()),
             StructField(ts, LongType()),
         ]
     )
-    state_schema = StructType([StructField("t", ArrayType(LongType()))])
-    cols = list(dict.fromkeys([key, *order, ts, type_col]))
     stage_ix = {s: i for i, s in enumerate(stages)}
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def kernel(rows: pd.DataFrame, chains: dict) -> pd.DataFrame | None:
+        k = rows[key].iat[0]
         # None-element state array: no sentinel value can collide with a
         # legitimate (e.g. pre-epoch negative) timestamp
-        t = list(state.get[0]) if state.exists else [None] * len(stages)
-        whole = coalesce_chunks(pdfs)
-        if whole is not None and any(x is None for x in t):
-            whole = whole.sort_values(order, kind="mergesort")
-            out_idx: list[int] = []
-            out_ts: list[int] = []
-            for ev_ts, ev_type in zip(whole[ts], whole[type_col]):
-                i = stage_ix.get(ev_type)
-                # skip non-stage types, already-set slots, and null ts
-                # (batch F.min/CASE aggregates ignore nulls the same way)
-                if i is None or t[i] is not None or pd.isna(ev_ts):
-                    continue
-                ev_ts = int(ev_ts)
-                if i == 0 or (t[i - 1] is not None and ev_ts > t[i - 1]):
-                    t[i] = ev_ts
-                    out_idx.append(i)
-                    out_ts.append(ev_ts)
-                    if all(x is not None for x in t):
-                        break  # chain complete: nothing left to emit
-            yield pd.DataFrame(
-                {
-                    key_field.name: [key_tuple[0]] * len(out_idx),
-                    "stage_idx": pd.array(out_idx, dtype="int32"),
-                    "stage": [stages[i] for i in out_idx],
-                    ts: pd.array(out_ts, dtype="int64"),
-                }
-            )
-        state.update((t,))
-
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        t = list(chains.get(k) or [None] * len(stages))
+        if all(x is not None for x in t):
+            return None
+        out_idx: list[int] = []
+        out_ts: list[int] = []
+        for ev_ts, ev_type in zip(rows[ts], rows[type_col]):
+            i = stage_ix.get(ev_type)
+            # skip non-stage types, already-set slots, and null ts
+            # (batch F.min/CASE aggregates ignore nulls the same way)
+            if i is None or t[i] is not None or pd.isna(ev_ts):
+                continue
+            ev_ts = int(ev_ts)
+            if i == 0 or (t[i - 1] is not None and ev_ts > t[i - 1]):
+                t[i] = ev_ts
+                out_idx.append(i)
+                out_ts.append(ev_ts)
+                if all(x is not None for x in t):
+                    break  # chain complete: nothing left to emit
+        if out_idx:
+            chains[k] = t
+        return pd.DataFrame(
+            {
+                key: [k] * len(out_idx),
+                "stage_idx": pd.array(out_idx, dtype="int32"),
+                "stage": [stages[i] for i in out_idx],
+                ts: pd.array(out_ts, dtype="int64"),
+            }
         )
+
+    return keyed_state_stream(
+        events.select(*dict.fromkeys([key, *order, ts, type_col])),
+        kernel,
+        keys=[key],
+        order=order,
+        out_schema=out_schema,
+        shards=None,
+        value_schema=StructType([StructField("t", ArrayType(LongType()))]),
     )

@@ -19,12 +19,9 @@ keeps every emission).
 
 from __future__ import annotations
 
-from typing import Any
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -35,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._util import coalesce_chunks
+from ._util import keyed_state_stream
 from ..functions.text import doc_hash60
 
 _OUT_SCHEMA = StructType(
@@ -96,49 +93,36 @@ def streaming_weighted_sample(
         key.alias("es_key"),
     )
 
-    def handle(
-        key_: Any, pdfs, state: GroupState
-    ):
-        group = key_[0]
-        if state.exists:
-            keys, ids, weights, batch_no = state.get
-            pool = list(zip(keys, ids, weights))
-        else:
-            pool, batch_no = [], 0
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pool.extend(
-                zip(whole["es_key"], whole["doc_id"], whole["weight"])
-            )
+    def kernel(rows: pd.DataFrame, reservoirs: dict) -> pd.DataFrame:
+        group = rows["group_key"].iat[0]
+        keys, ids, weights, batch_no = reservoirs.get(group, ([], [], [], 0))
+        pool = [
+            *zip(keys, ids, weights),
+            *zip(rows["es_key"].tolist(), rows["doc_id"].tolist(), rows["weight"].tolist()),
+        ]
         # (es_key desc, id asc): the batch operator's exact ordering
         pool.sort(key=lambda t: (-t[0], t[1]))
-        pool = pool[:k]
-        batch_no += 1
-        yield pd.DataFrame(
+        keys, ids, weights = (list(c) for c in zip(*pool[:k]))
+        reservoirs[group] = (keys, ids, weights, batch_no + 1)
+        return pd.DataFrame(
             {
-                "group_key": [group] * len(pool),
-                "batch_no": [batch_no] * len(pool),
-                "sample_rank": list(range(1, len(pool) + 1)),
-                "doc_id": [int(t[1]) for t in pool],
-                "weight": [float(t[2]) for t in pool],
-                "es_key": [float(t[0]) for t in pool],
+                "group_key": [group] * len(ids),
+                "batch_no": [batch_no + 1] * len(ids),
+                "sample_rank": list(range(1, len(ids) + 1)),
+                "doc_id": ids,
+                "weight": weights,
+                "es_key": keys,
             }
         )
-        state.update(
-            (
-                [float(t[0]) for t in pool],
-                [int(t[1]) for t in pool],
-                [float(t[2]) for t in pool],
-                int(batch_no),
-            )
-        )
 
-    return keyed.groupBy("group_key").applyInPandasWithState(
-        handle,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        keyed,
+        kernel,
+        keys=["group_key"],
+        order=[],
+        out_schema=_OUT_SCHEMA,
+        shards=None,
+        value_schema=_STATE_SCHEMA,
     )
 
 

@@ -18,12 +18,12 @@ unrounded accumulator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
+import math
+from collections.abc import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -33,7 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._util import coalesce_chunks
+from ._util import keyed_state_stream
+from .sliding import _seqsum
 
 __all__ = [
     "cusum_stream",
@@ -41,8 +42,64 @@ __all__ = [
     "holt_stream",
     "holt_winters_stream",
     "mad_zscore_stream",
+    "ohlc_stream",
+    "page_hinkley_stream",
     "rolling_zscore_stream",
+    "twap_stream",
 ]
+
+#: ``fold(rows, x, st) -> (columns, st')``; see :func:`_series_stream`
+Fold = Callable[[pd.DataFrame, np.ndarray, object], tuple[dict, object]]
+
+
+def _series_stream(
+    events: DataFrame,
+    fold: Fold,
+    *,
+    key: str,
+    order: list[str],
+    value: str,
+    fields: list[StructField],
+    state_schema: StructType,
+    reads: tuple[str, ...] = (),
+    echo_value: bool = True,
+) -> DataFrame:
+    """Run a per-series fold as a keyed stream with one state row per
+    ``key``. ``fold`` gets one series' new rows sorted by ``order``,
+    their ``value`` as float64 and the series' state (a scalar for a
+    one-field ``state_schema``, else a tuple; None before the first
+    write). It returns the ``fields`` columns and the new state (None:
+    nothing to keep yet); ``reads`` names any other column it reads.
+    Rows out are ``(key, *order[, value], *fields)``; a state equal to
+    the old one is not written."""
+    out_schema = StructType(
+        [
+            StructField(key, events.schema[key].dataType),
+            *[StructField(o, events.schema[o].dataType) for o in order],
+            *([StructField(value, DoubleType())] if echo_value else []),
+            *fields,
+        ]
+    )
+
+    def kernel(rows: pd.DataFrame, states: dict) -> pd.DataFrame:
+        k = rows[key].iat[0]
+        x = rows[value].astype("float64").to_numpy()
+        prev = states.get(k)
+        columns, st = fold(rows, x, prev)
+        if st is not None and st != prev:
+            states[k] = st
+        echo = {value: x} if echo_value else {}
+        return pd.DataFrame({key: rows[key], **{o: rows[o] for o in order}, **echo, **columns})
+
+    return keyed_state_stream(
+        events.select(*dict.fromkeys([key, *order, *reads, value])),
+        kernel,
+        keys=[key],
+        order=order,
+        out_schema=out_schema,
+        shards=None,
+        value_schema=state_schema,
+    )
 
 
 def cusum_stream(
@@ -73,68 +130,29 @@ def cusum_stream(
     handler skips both; the batch twin's window sum keeps a literal NaN
     (only NULL drops) and poisons the prefix. Series with NaN DATA
     values diverge from the batch twin; real streams carry none."""
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField(value, DoubleType()),
-            StructField(out, DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("acc", DoubleType()),
-            StructField("seen", BooleanType()),
-        ]
-    )
-    cols = [key, *order, value]
     shift = float(target) + float(slack)
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc, seen = (state.get[0], bool(state.get[1])) if state.exists else (
-            0.0,
-            False,
-        )
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            outs = []
-            # NULL/NaN values are skipped from the fold (mirrors the
-            # batch operator, whose window sum drops nulls); the row
-            # still emits the running statistic — except BEFORE the
-            # first valid value, where the batch twin's empty-frame
-            # cumulative sum is NULL, so the stream emits None too.
-            for x in vals:
-                x = float(x)
-                if x == x:  # not NaN
-                    acc = max(0.0, acc + (x - shift))
-                    seen = True
-                outs.append(acc if seen else None)
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    out: pd.array(outs, dtype="Float64"),
-                }
-            )
-        state.update((float(acc), bool(seen)))
+    def fold(rows, vals, st):
+        acc, seen = st or (0.0, False)
+        outs = []
+        # NULL/NaN values are skipped from the fold (mirrors the
+        # batch operator, whose window sum drops nulls); the row
+        # still emits the running statistic — except BEFORE the
+        # first valid value, where the batch twin's empty-frame
+        # cumulative sum is NULL, so the stream emits None too.
+        for x in vals.tolist():
+            if x == x:  # not NaN
+                acc = max(0.0, acc + (x - shift))
+                seen = True
+            outs.append(acc if seen else None)
+        return {out: pd.array(outs, dtype="Float64")}, (acc, bool(seen))
 
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value,
+        fields=[StructField(out, DoubleType())],
+        state_schema=StructType(
+            [StructField("acc", DoubleType()), StructField("seen", BooleanType())]
+        ),
     )
 
 
@@ -172,75 +190,39 @@ def holt_stream(
         raise ValueError("holt_stream needs 0 < alpha <= 1")
     if not 0.0 <= beta <= 1.0:
         raise ValueError("holt_stream needs 0 <= beta <= 1")
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField(value, DoubleType()),
-            StructField(out_level, DoubleType()),
-            StructField(out_trend, DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("l", DoubleType()), StructField("t", DoubleType())]
-    )
-    cols = [key, *order, value]
     a = float(alpha)
     na = 1.0 - a
     b = float(beta)
     nb = 1.0 - b
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        lt = tuple(state.get) if state.exists else None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            levels, trends = [], []
-            # NULL/NaN values are SKIPPED from the fold (mirrors the
-            # batch operator's collect_list null-drop); the row still
-            # emits the running level/trend of the non-null prefix.
-            for x in vals:
-                x = float(x)
-                if x == x:  # not NaN
-                    if lt is None:
-                        lt = (x, 0.0)
-                    else:
-                        l0, t0 = lt
-                        # identical expression shape to the batch fold:
-                        # l' recomputed inside the trend update
-                        lt = (
-                            a * x + na * (l0 + t0),
-                            b * ((a * x + na * (l0 + t0)) - l0) + nb * t0,
-                        )
-                levels.append(lt[0] if lt is not None else None)
-                trends.append(lt[1] if lt is not None else None)
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    out_level: pd.array(levels, dtype="Float64"),
-                    out_trend: pd.array(trends, dtype="Float64"),
-                }
-            )
-        if lt is not None:
-            state.update((float(lt[0]), float(lt[1])))
+    def fold(rows, vals, lt):
+        levels, trends = [], []
+        # NULL/NaN values are SKIPPED from the fold (mirrors the
+        # batch operator's collect_list null-drop); the row still
+        # emits the running level/trend of the non-null prefix.
+        for x in vals.tolist():
+            if x == x:  # not NaN
+                if lt is None:
+                    lt = (x, 0.0)
+                else:
+                    l0, t0 = lt
+                    # identical expression shape to the batch fold:
+                    # l' recomputed inside the trend update
+                    lt = (
+                        a * x + na * (l0 + t0),
+                        b * ((a * x + na * (l0 + t0)) - l0) + nb * t0,
+                    )
+            levels.append(lt[0] if lt is not None else None)
+            trends.append(lt[1] if lt is not None else None)
+        return {
+            out_level: pd.array(levels, dtype="Float64"),
+            out_trend: pd.array(trends, dtype="Float64"),
+        }, lt
 
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value,
+        fields=[StructField(out_level, DoubleType()), StructField(out_trend, DoubleType())],
+        state_schema=StructType([StructField("l", DoubleType()), StructField("t", DoubleType())]),
     )
 
 
@@ -262,61 +244,26 @@ def ewma_stream(
     engines' ``round()`` at the last kept digit."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError("ewma_stream needs 0 < alpha <= 1")
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField(value, DoubleType()),
-            StructField(out, DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("acc", DoubleType())])
-    cols = [key, *order, value]
     a = float(alpha)
     b = 1.0 - a
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        acc = state.get[0] if state.exists else None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            outs = []
-            # NULL/NaN values are SKIPPED from the fold (they would
-            # permanently poison the accumulator otherwise) — the row is
-            # still emitted, carrying the running EWMA of the non-null
-            # prefix. Mirrors the batch operator, whose collect_list
-            # drops nulls (operators/timeseries.py ewma docstring).
-            for x in vals:
-                x = float(x)
-                if x == x:  # not NaN
-                    acc = x if acc is None else a * x + b * acc
-                outs.append(acc)
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    out: pd.array(outs, dtype="Float64"),
-                }
-            )
-        if acc is not None:
-            state.update((float(acc),))
+    def fold(rows, vals, acc):
+        outs = []
+        # NULL/NaN values are SKIPPED from the fold (they would
+        # permanently poison the accumulator otherwise) — the row is
+        # still emitted, carrying the running EWMA of the non-null
+        # prefix. Mirrors the batch operator, whose collect_list
+        # drops nulls (operators/timeseries.py ewma docstring).
+        for x in vals.tolist():
+            if x == x:  # not NaN
+                acc = x if acc is None else a * x + b * acc
+            outs.append(acc)
+        return {out: pd.array(outs, dtype="Float64")}, acc
 
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value,
+        fields=[StructField(out, DoubleType())],
+        state_schema=StructType([StructField("acc", DoubleType())]),
     )
 
 
@@ -344,78 +291,39 @@ def mad_zscore_stream(
     literal NaN (only NULL drops) and its sorted-median arithmetic
     propagates it. Series with NaN DATA values diverge from the batch
     twin; real event streams carry none."""
-    import numpy as np
-
     if window < 2:
         raise ValueError("mad_zscore_stream needs window >= 2")
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField(value, DoubleType()),
-            StructField("n_window", LongType()),
-            StructField(out, DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("buf", ArrayType(DoubleType()))])
-    cols = [key, *order, value]
 
-    def _median(sorted_vals: "np.ndarray") -> float:
+    def _median(sorted_vals: np.ndarray) -> float:
         n = len(sorted_vals)
         half = n // 2
         if n % 2 == 1:
             return float(sorted_vals[half])
         return (float(sorted_vals[half - 1]) + float(sorted_vals[half])) / 2.0
 
-    def handle(key_tuple, pdfs, state) -> "Iterator[pd.DataFrame]":
-        buf = list(state.get[0]) if state.exists else []
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            hist = buf + [float(v) for v in vals]
-            ns, scores = [], []
-            for j in range(len(buf), len(hist)):
-                frame = np.asarray(
-                    hist[max(0, j - window + 1) : j + 1], dtype="float64"
-                )
-                frame = frame[~np.isnan(frame)]
-                ns.append(len(frame))
-                x = hist[j]
-                if len(frame) == 0 or x != x:
-                    scores.append(np.nan)
-                    continue
-                sv = np.sort(frame, kind="stable")
-                med = _median(sv)
-                sd = np.sort(np.abs(frame - med), kind="stable")
-                mad = _median(sd)
-                scores.append(
-                    0.6745 * (x - med) / mad if mad > 0 else np.nan
-                )
-            buf = hist[-(window - 1):]
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    "n_window": pd.array(ns, dtype="int64"),
-                    out: scores,
-                }
-            )
-        state.update((buf,))
+    def fold(rows, vals, buf):
+        buf = list(buf or [])
+        hist = buf + vals.tolist()
+        ns, scores = [], []
+        for j in range(len(buf), len(hist)):
+            frame = np.asarray(hist[max(0, j - window + 1) : j + 1], dtype="float64")
+            frame = frame[~np.isnan(frame)]
+            ns.append(len(frame))
+            x = hist[j]
+            if len(frame) == 0 or x != x:
+                scores.append(np.nan)
+                continue
+            sv = np.sort(frame, kind="stable")
+            med = _median(sv)
+            sd = np.sort(np.abs(frame - med), kind="stable")
+            mad = _median(sd)
+            scores.append(0.6745 * (x - med) / mad if mad > 0 else np.nan)
+        return {"n_window": pd.array(ns, dtype="int64"), out: scores}, hist[-(window - 1) :]
 
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value,
+        fields=[StructField("n_window", LongType()), StructField(out, DoubleType())],
+        state_schema=StructType([StructField("buf", ArrayType(DoubleType()))]),
     )
 
 
@@ -442,74 +350,27 @@ def rolling_zscore_stream(
     batch operator lets a NaN poison its frames (NULL z but counted
     n_window). Series with NaN data diverge from the batch twin on
     n_window; real event streams carry no NaN values."""
-    import math
-
-    import numpy as np
-
     if window < 2:
         raise ValueError("rolling_zscore_stream needs window >= 2")
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField(value, DoubleType()),
-            StructField("n_window", LongType()),
-            StructField(out, DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("buf", ArrayType(DoubleType()))]
-    )
-    cols = [key, *order, value]
 
-    def _seqsum(a: np.ndarray, axis: int) -> np.ndarray:
-        return np.cumsum(a, axis=axis).take(-1, axis=axis)
+    def fold(rows, vals, buf):
+        hist = np.concatenate([np.asarray(buf or [], dtype="float64"), vals])
+        padded = np.concatenate([np.full(window - 1, np.nan), hist])
+        frames = np.lib.stride_tricks.sliding_window_view(padded, window)
+        frames = frames[len(hist) - len(vals) :]  # new rows only
+        finite = ~np.isnan(frames)
+        n = finite.sum(axis=1).astype("float64")
+        fv = np.where(finite, frames, 0.0)
+        mu = _seqsum(fv, axis=1) / n
+        var = _seqsum(fv * fv, axis=1) / n - mu * mu
+        with np.errstate(invalid="ignore", divide="ignore"):
+            z = np.where(var > 0, (vals - mu) / np.sqrt(var), np.nan)
+        return {"n_window": n.astype("int64"), out: z}, hist[-(window - 1) :].tolist()
 
-    def handle(key_tuple, pdfs, state) -> "Iterator[pd.DataFrame]":
-        buf = list(state.get[0]) if state.exists else []
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            hist = np.concatenate([np.asarray(buf, dtype="float64"), vals])
-            pad = window - 1
-            padded = np.concatenate([np.full(pad, np.nan), hist])
-            frames = np.lib.stride_tricks.sliding_window_view(padded, window)
-            frames = frames[len(hist) - len(vals):]  # new rows only
-            finite = ~np.isnan(frames)
-            n = finite.sum(axis=1).astype("float64")
-            fv = np.where(finite, frames, 0.0)
-            s1 = _seqsum(fv, axis=1)
-            s2 = _seqsum(fv * fv, axis=1)
-            mu = s1 / n
-            var = s2 / n - mu * mu
-            x = vals
-            with np.errstate(invalid="ignore", divide="ignore"):
-                z = np.where(var > 0, (x - mu) / np.sqrt(var), np.nan)
-            buf = [float(v) for v in hist[-(window - 1):]]
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    "n_window": n.astype("int64"),
-                    out: z,
-                }
-            )
-        state.update((buf,))
-
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value,
+        fields=[StructField("n_window", LongType()), StructField(out, DoubleType())],
+        state_schema=StructType([StructField("buf", ArrayType(DoubleType()))]),
     )
 
 
@@ -544,104 +405,52 @@ def holt_winters_stream(
         raise ValueError("holt_winters_stream needs beta, gamma in [0, 1]")
     if season < 2:
         raise ValueError("holt_winters_stream needs season >= 2")
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField(value, DoubleType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("season_adj", DoubleType()),
-            StructField("forecast", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("l", DoubleType()),
-            StructField("t", DoubleType()),
-            StructField("s", ArrayType(DoubleType())),
-            StructField("phase", LongType()),
-        ]
-    )
-    cols = [key, *order, value]
     a, na = float(alpha), 1.0 - float(alpha)
     b, nb = float(beta), 1.0 - float(beta)
     g, ng = float(gamma), 1.0 - float(gamma)
     m = int(season)
+    outs = ("level", "trend", "season_adj", "forecast")
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            l0, t0, s, phase = state.get
-            s = list(s)
-            st = (l0, t0) if l0 is not None else None
-        else:
-            st, s, phase = None, [0.0] * m, 0
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            levels, trends, seas, fores = [], [], [], []
-            for x in vals:
-                x = float(x)
-                j = phase % m
-                if x == x:  # not NaN/NULL
-                    if st is None:
-                        st = (x, 0.0)
-                    else:
-                        l0, t0 = st
-                        sj = s[j]
-                        # identical expression trees to the batch fold
-                        # (l' recomputed inline in trend and seasonal)
-                        st = (
-                            a * (x - sj) + na * (l0 + t0),
-                            b * ((a * (x - sj) + na * (l0 + t0)) - l0)
-                            + nb * t0,
-                        )
-                        s[j] = (
-                            g * (x - (a * (x - sj) + na * (l0 + t0)))
-                            + ng * sj
-                        )
-                phase += 1
+    def fold(rows, vals, state):
+        l0, t0, s, phase = state or (None, None, [0.0] * m, 0)
+        s = list(s)
+        st = (l0, t0) if l0 is not None else None
+        cols = {c: [] for c in outs}
+        for x in vals.tolist():
+            j = phase % m
+            if x == x:  # not NaN/NULL
                 if st is None:
-                    levels.append(None)
-                    trends.append(None)
-                    seas.append(None)
-                    fores.append(None)
+                    st = (x, 0.0)
                 else:
-                    levels.append(st[0])
-                    trends.append(st[1])
-                    seas.append(s[j])
-                    fores.append(st[0] + st[1] + s[(j + 1) % m])
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    value: vals,
-                    "level": pd.array(levels, dtype="Float64"),
-                    "trend": pd.array(trends, dtype="Float64"),
-                    "season_adj": pd.array(seas, dtype="Float64"),
-                    "forecast": pd.array(fores, dtype="Float64"),
-                }
-            )
-        if st is not None:
-            state.update((float(st[0]), float(st[1]), list(s), int(phase)))
-        elif phase:
-            state.update((None, None, list(s), int(phase)))
-
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+                    l0, t0 = st
+                    sj = s[j]
+                    # identical expression trees to the batch fold
+                    # (l' recomputed inline in trend and seasonal)
+                    st = (
+                        a * (x - sj) + na * (l0 + t0),
+                        b * ((a * (x - sj) + na * (l0 + t0)) - l0) + nb * t0,
+                    )
+                    s[j] = g * (x - (a * (x - sj) + na * (l0 + t0))) + ng * sj
+            phase += 1
+            row = (None,) * 4 if st is None else (*st, s[j], st[0] + st[1] + s[(j + 1) % m])
+            for c, v in zip(outs, row):
+                cols[c].append(v)
+        return (
+            {c: pd.array(v, dtype="Float64") for c, v in cols.items()},
+            (*(st or (None, None)), s, phase),
         )
+
+    return _series_stream(
+        events, fold, key=key, order=order, value=value,
+        fields=[StructField(c, DoubleType()) for c in outs],
+        state_schema=StructType(
+            [
+                StructField("l", DoubleType()),
+                StructField("t", DoubleType()),
+                StructField("s", ArrayType(DoubleType())),
+                StructField("phase", LongType()),
+            ]
+        ),
     )
 
 
@@ -665,75 +474,31 @@ def twap_stream(
     (Spark's ``sum`` skips NULL products) — exactly the batch
     operator's semantics; the oracle replays the same running prefix
     with lag + running window sums."""
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField("n_intervals", LongType()),
-            StructField("twap", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("pts", DoubleType()),
-            StructField("pv", DoubleType()),
-            StructField("wsum", DoubleType()),
-            StructField("tsum", DoubleType()),
-            StructField("n", DoubleType()),
-        ]
-    )
-    cols = list(dict.fromkeys([key, *order, ts, value]))
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            pts, pv, wsum, tsum, n = state.get
-        else:
-            pts = pv = None
-            wsum = tsum = n = 0.0
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            tvals = pdf[ts].astype("float64").to_numpy()
-            vvals = pdf[value].astype("float64").to_numpy()
-            twaps, counts = [], []
-            for t, x in zip(tvals, vvals):
-                t = float(t)
-                if pts is not None:
-                    dt = t - pts
-                    tsum += dt
-                    n += 1.0
-                    if pv == pv:  # previous value not NaN
-                        wsum += pv * dt
-                twaps.append(wsum / tsum if tsum > 0 else None)
-                counts.append(int(n))
-                pts, pv = t, float(x)
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    "n_intervals": pd.array(counts, dtype="Int64"),
-                    "twap": pd.array(twaps, dtype="Float64"),
-                }
-            )
-        if pts is not None:
-            state.update(
-                (float(pts), float(pv), float(wsum), float(tsum), float(n))
-            )
+    def fold(rows, vals, st):
+        pts, pv, wsum, tsum, n = st or (None, None, 0.0, 0.0, 0.0)
+        twaps, counts = [], []
+        for t, x in zip(rows[ts].astype("float64").tolist(), vals.tolist()):
+            if pts is not None:
+                dt = t - pts
+                tsum += dt
+                n += 1.0
+                if pv == pv:  # previous value not NaN
+                    wsum += pv * dt
+            twaps.append(wsum / tsum if tsum > 0 else None)
+            counts.append(int(n))
+            pts, pv = t, x
+        return {
+            "n_intervals": pd.array(counts, dtype="Int64"),
+            "twap": pd.array(twaps, dtype="Float64"),
+        }, (pts, pv, wsum, tsum, n)
 
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value, reads=(ts,), echo_value=False,
+        fields=[StructField("n_intervals", LongType()), StructField("twap", DoubleType())],
+        state_schema=StructType(
+            [StructField(f, DoubleType()) for f in ("pts", "pv", "wsum", "tsum", "n")]
+        ),
     )
 
 
@@ -757,87 +522,43 @@ def page_hinkley_stream(
     ≡ batch windows row for row with no float-accumulation drift.
     NULL/NaN values update nothing and emit the running PH unchanged
     (NULL before the first real value)."""
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField("ph", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
-    # LongType state: the counters ARE exact int64 micro-units — a
-    # DoubleType schema would silently lose integer precision past
-    # 2^53 on an unbounded stream, defeating the whole integer-units
-    # design.
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("sx", LongType()),
-            StructField("sraw", LongType()),
-            StructField("minm", LongType()),
-        ]
-    )
-    cols = [key, *order, value]
     scale = float(10 ** round_to)
     delta_int = int(round(float(delta) * scale))
     lam_int = int(round(float(lam) * scale))
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
+    def fold(rows, vals, st):
+        n, sx_int, m_int, min_int = st or (0, 0, 0, None)
+        phs, alarms = [], []
+        for x in vals.tolist():
+            if x == x:  # not NaN
+                n += 1
+                v_int = int(math.floor(x * scale + 0.5))
+                sx_int += v_int
+                mean_int = (2 * sx_int + n) // (2 * n)
+                m_int += v_int - mean_int - delta_int
+                min_int = m_int if min_int is None else min(min_int, m_int)
+            if n > 0:
+                ph_int = m_int - min_int
+                phs.append(ph_int / scale)
+                alarms.append(ph_int > lam_int)
+            else:
+                phs.append(None)
+                alarms.append(None)
+        return {
+            "ph": pd.array(phs, dtype="Float64"),
+            "alarm": pd.array(alarms, dtype="boolean"),
+        }, ((n, sx_int, m_int, min_int) if n > 0 else None)
 
-        if state.exists:
-            n, sx_int, m_int, min_int = state.get
-        else:
-            n = sx_int = m_int = 0
-            min_int = None
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            vals = pdf[value].astype("float64").to_numpy()
-            phs, alarms = [], []
-            for x in vals:
-                x = float(x)
-                if x == x:  # not NaN
-                    n += 1
-                    v_int = int(math.floor(x * scale + 0.5))
-                    sx_int += v_int
-                    mean_int = (2 * sx_int + n) // (2 * n)
-                    m_int += v_int - mean_int - delta_int
-                    min_int = (
-                        m_int if min_int is None else min(min_int, m_int)
-                    )
-                if n > 0:
-                    ph_int = m_int - min_int
-                    phs.append(ph_int / scale)
-                    alarms.append(ph_int > lam_int)
-                else:
-                    phs.append(None)
-                    alarms.append(None)
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{o: pdf[o].to_numpy() for o in order},
-                    "ph": pd.array(phs, dtype="Float64"),
-                    "alarm": pd.array(alarms, dtype="boolean"),
-                }
-            )
-        if n > 0:
-            state.update((int(n), int(sx_int), int(m_int), int(min_int)))
-
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # LongType state: the counters ARE exact int64 micro-units — a
+    # DoubleType schema would silently lose integer precision past
+    # 2^53 on an unbounded stream, defeating the whole integer-units
+    # design.
+    return _series_stream(
+        events, fold, key=key, order=order, value=value, echo_value=False,
+        fields=[StructField("ph", DoubleType()), StructField("alarm", BooleanType())],
+        state_schema=StructType(
+            [StructField(f, LongType()) for f in ("n", "sx", "sraw", "minm")]
+        ),
     )
 
 
@@ -857,87 +578,45 @@ def ohlc_stream(
     contract shared by every stream twin here). Emits the RUNNING bar
     per event -> ``(key, order..., day, open, high, low, close,
     volume)`` — the oracle replays the same prefix with running
-    first/max/min window frames per (key, bucket)."""
-    key_field = events.schema[key]
-    order_fields = [events.schema[o] for o in order]
-    out_schema = StructType(
-        [
-            StructField(key_field.name, key_field.dataType),
-            *[StructField(f.name, f.dataType) for f in order_fields],
-            StructField("day", LongType()),
-            StructField("open", DoubleType()),
-            StructField("high", DoubleType()),
-            StructField("low", DoubleType()),
-            StructField("close", DoubleType()),
-            StructField("volume", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("day", DoubleType()),
-            StructField("o", DoubleType()),
-            StructField("h", DoubleType()),
-            StructField("l", DoubleType()),
-            StructField("c", DoubleType()),
-            StructField("n", DoubleType()),
-        ]
-    )
-    cols = list(dict.fromkeys([key, *order, ts, value]))
+    first/max/min window frames per (key, bucket).
 
-    def handle(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            day, o, h, l, c, n = state.get
+    ``open`` is the bar's first value and ``close`` its latest, NULL
+    included (SQL ``first_value`` respects nulls); ``high``/``low``
+    skip NULL like SQL ``max``/``min``, so a bar opened by NULL reports
+    NULL high/low until its first real value. NaN caveat (same as
+    ``rolling_zscore_stream``): past the Arrow boundary NULL and NaN
+    data are indistinguishable, so NaN values are skipped too, where
+    SQL ``max`` would rank NaN above every number."""
+    outs = ("day", "open", "high", "low", "close", "volume")
+    counts = ("day", "volume")
+
+    def fold(rows, vals, st):
+        day, o, h, l, c, n = st or (None,) * 6
+        if st is not None:
             day, n = int(day), int(n)
-        else:
-            day = None
-            o = h = l = c = None
-            n = 0
-        whole = coalesce_chunks(pdfs)
-        if whole is not None:
-            pdf = whole.sort_values(order, kind="mergesort")
-            tvals = pdf[ts].astype("int64").to_numpy()
-            vvals = pdf[value].astype("float64").to_numpy()
-            out = {k: [] for k in ("day", "o", "h", "l", "c", "n")}
-            for t, x in zip(tvals, vvals):
-                d = int(t) // bucket_us
-                x = float(x)
-                if d != day:
-                    day, o, h, l, c, n = d, x, x, x, x, 1
-                else:
-                    h, l, c, n = max(h, x), min(l, x), x, n + 1
-                out["day"].append(day)
-                out["o"].append(o)
-                out["h"].append(h)
-                out["l"].append(l)
-                out["c"].append(c)
-                out["n"].append(n)
-            yield pd.DataFrame(
-                {
-                    key_field.name: pdf[key].to_numpy(),
-                    **{oc_: pdf[oc_].to_numpy() for oc_ in order},
-                    "day": pd.array(out["day"], dtype="Int64"),
-                    "open": pd.array(out["o"], dtype="Float64"),
-                    "high": pd.array(out["h"], dtype="Float64"),
-                    "low": pd.array(out["l"], dtype="Float64"),
-                    "close": pd.array(out["c"], dtype="Float64"),
-                    "volume": pd.array(out["n"], dtype="Int64"),
-                }
-            )
-        if day is not None:
-            state.update(
-                (float(day), float(o), float(h), float(l), float(c), float(n))
-            )
+        cols = {col: [] for col in outs}
+        for t, x in zip(rows[ts].astype("int64").tolist(), vals.tolist()):
+            d = t // bucket_us
+            if d != day:
+                day, o, h, l, n = d, x, x, x, 0
+            elif x == x:  # not NULL/NaN: NaN marks a high/low with no value yet
+                h = x if h != h else max(h, x)
+                l = x if l != l else min(l, x)
+            c, n = x, n + 1
+            for col, v in zip(outs, (day, o, h, l, c, n)):
+                cols[col].append(v)
+        return {
+            col: pd.array(v, dtype="Int64" if col in counts else "Float64")
+            for col, v in cols.items()
+        }, (float(day), o, h, l, c, float(n))
 
-    return (
-        events.select(*cols)
-        .groupBy(key)
-        .applyInPandasWithState(
-            handle,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _series_stream(
+        events, fold, key=key, order=order, value=value, reads=(ts,), echo_value=False,
+        fields=[
+            StructField(c, LongType() if c in counts else DoubleType())
+            for c in outs
+        ],
+        state_schema=StructType(
+            [StructField(f, DoubleType()) for f in ("day", "o", "h", "l", "c", "n")]
+        ),
     )

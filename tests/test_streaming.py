@@ -519,6 +519,33 @@ class TestKeyedStateHelper:
         finally:
             shutil.rmtree(root, ignore_errors=True)
 
+    def test_util_is_the_one_keyed_state_call_site(self):
+        """``streaming/_util.py`` is the only module of the package that
+        calls ``applyInPandasWithState`` or imports ``GroupState``:
+        every stateful stream goes through ``keyed_state_stream``."""
+        import ast
+        import pathlib
+
+        import symtseries_spark
+
+        root = pathlib.Path(symtseries_spark.__file__).parent
+        hits: dict[str, list[str]] = {}
+        for path in sorted(root.rglob("*.py")):
+            rel = path.relative_to(root).as_posix()
+            for node in ast.walk(ast.parse(path.read_text())):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "applyInPandasWithState"
+                ):
+                    hits.setdefault(rel, []).append(f"{node.lineno}: applyInPandasWithState call")
+                elif isinstance(node, (ast.Import, ast.ImportFrom)) and any(
+                    a.name.rsplit(".", 1)[-1] == "GroupState" for a in node.names
+                ):
+                    hits.setdefault(rel, []).append(f"{node.lineno}: GroupState import")
+        assert len(hits.pop("streaming/_util.py", [])) == 2
+        assert hits == {}
+
 
 class TestStreamToBucketedIndex:
     def test_foreachbatch_builds_pruned_index(self, spark, sf_dir):
@@ -1019,6 +1046,72 @@ class TestOhlcStream:
         assert got[3].day == 1
         assert (got[3].open, got[3].volume) == (7.0, 1)
         assert (got[4].high, got[4].low, got[4].close) == (7.0, 1.0, 1.0)
+
+    def test_null_opened_bar_matches_window_sql_across_batches(self, spark):
+        """A bar opened by NULL: high/low skip the NULL as SQL max/min do,
+        open stays NULL as SQL first_value does. Bars of key 1 and 2 open
+        with NULL in the first micro-batch and continue in the second;
+        key 1's second bar is NULL throughout. Reference: the oracle's
+        window SQL run by Spark over the same rows as one batch."""
+        import glob as globmod
+        import os
+        import uuid
+
+        from symtseries_spark.streaming import ohlc_stream
+
+        # (k, t, i, v, micro-batch); bucket_us=10
+        rows = [
+            (1, 0, 0, None, 0), (1, 1, 1, 3.0, 1), (1, 2, 2, 5.0, 1),
+            (1, 3, 3, 1.0, 1), (1, 11, 4, None, 1), (1, 12, 5, None, 1),
+            (2, 0, 0, None, 0), (2, 1, 1, 3.0, 0), (2, 2, 2, 5.0, 1),
+            (2, 3, 3, 1.0, 1),
+        ]
+        df = spark.createDataFrame(rows, "k long, t long, i long, v double, b int")
+        root = tempfile.mkdtemp(prefix="ohlc_null_")
+        in_dir = f"{root}/in"
+        os.makedirs(in_dir)
+        try:
+            for b in range(2):
+                df.where(F.col("b") == b).coalesce(1).write.parquet(f"{root}/b{b}")
+                part = globmod.glob(f"{root}/b{b}/part-*.parquet")[0]
+                dst = f"{in_dir}/b{b}.parquet"
+                os.rename(part, dst)
+                os.utime(dst, (1_000_000_000 + b, 1_000_000_000 + b))
+            stream = spark.readStream.schema(df.schema).option(
+                "maxFilesPerTrigger", "1"
+            ).parquet(in_dir)
+            name = f"ohlc_null_{uuid.uuid4().hex[:8]}"
+            q = (
+                ohlc_stream(stream, key="k", order=["t", "i"], ts="t", value="v", bucket_us=10)
+                .writeStream.format("memory").queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", f"{root}/chk")
+                .start()
+            )
+            q.processAllAvailable()
+            q.stop()
+            view = f"ohlc_rows_{uuid.uuid4().hex[:8]}"
+            df.createOrReplaceTempView(view)
+            expect = spark.sql(
+                f"""
+                SELECT k, i, t div 10 AS day,
+                       first_value(v) OVER w AS open, max(v) OVER w AS high,
+                       min(v) OVER w AS low, v AS close, count(*) OVER w AS volume
+                FROM {view}
+                WINDOW w AS (PARTITION BY k, t div 10 ORDER BY t, i
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                """
+            )
+            cols = ["k", "i", "day", "open", "high", "low", "close", "volume"]
+            got = sorted(tuple(r) for r in spark.table(name).select(*cols).collect())
+            assert got == sorted(tuple(r) for r in expect.collect())
+            assert len(got) == len(rows)
+            # the bar opened by NULL reaches high 5 / low 1 (window SQL)
+            assert [r[4:6] for r in got if r[0] == 1 and r[2] == 0] == [
+                (None, None), (3.0, 3.0), (5.0, 3.0), (5.0, 1.0)
+            ]
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 class TestStreamingWeightedSample:

@@ -1,7 +1,8 @@
 """Unit tests for the winnowing fingerprint family (functions.text
 kgram_hashes / winnow_fingerprints, operators.dedup winnow_pairs /
-containment_pairs, operators.retrieval boilerplate_metrics) and Holt
-double-exponential smoothing (batch + stream) against Python oracles."""
+containment_pairs, operators.retrieval boilerplate_metrics), Holt
+double-exponential smoothing (batch + stream), and the Holt-Winters and
+Page-Hinkley streams, against Python oracles and batch twins."""
 
 import hashlib
 
@@ -382,3 +383,123 @@ class TestHoltStream:
             for i, (l, t) in enumerate(py_holt([float(x) for x in series], a, b)):
                 assert got[(key, i)][0] == pytest.approx(l, abs=1e-12)
                 assert got[(key, i)][1] == pytest.approx(t, abs=1e-12)
+
+
+# keys the per-key state must keep apart: a NULL key, one past 2**53
+# (a float64 round trip would merge it with 2**60), and an all-NULL series
+BIG_KEY = 2**60 + 1
+REPLAY_SERIES = {
+    None: [3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0, 5.0],
+    BIG_KEY: [None, 2.0, 7.0, None, 1.0, 8.0, 2.0],
+    2**60: [4.0, 4.0, 4.0, 4.0],
+    7: [None, None, None, None, None],
+}
+
+
+def _replay_two_files(spark, build, split=3):
+    """Rows ``(k, i, v)`` of ``REPLAY_SERIES`` as two parquet files,
+    ``i < split`` then the rest, streamed one file per micro-batch
+    through ``build(stream)``; returns the memory sink's rows keyed by
+    ``(k, i)`` and the rows as one batch DataFrame."""
+    import glob as globmod
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    rows = [(k, i, v) for k, vs in REPLAY_SERIES.items() for i, v in enumerate(vs)]
+    df = spark.createDataFrame(rows, "k long, i long, v double")
+    root = tempfile.mkdtemp(prefix="replay_")
+    try:
+        for b, cond in enumerate([F.col("i") < split, F.col("i") >= split]):
+            df.where(cond).coalesce(1).write.parquet(f"{root}/b{b}")
+            part = globmod.glob(f"{root}/b{b}/part-*.parquet")[0]
+            dst = f"{root}/in/b{b}.parquet"
+            os.makedirs(f"{root}/in", exist_ok=True)
+            os.rename(part, dst)
+            os.utime(dst, (1_000_000_000 + b, 1_000_000_000 + b))
+        stream = spark.readStream.schema(df.schema).option(
+            "maxFilesPerTrigger", "1"
+        ).parquet(f"{root}/in")
+        name = f"replay_{uuid.uuid4().hex[:8]}"
+        q = (
+            build(stream).writeStream.format("memory").queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", f"{root}/chk")
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        got = {(r.k, r.i): r for r in spark.table(name).collect()}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert len(got) == len(rows)
+    return got, df
+
+
+def py_holt_winters(vals, a, b, g, m):
+    """Additive Holt-Winters over ``vals`` (None skipped, but it still
+    advances the phase), seeded (first value, 0, zeros): per row None
+    or (level, trend, this row's seasonal slot, one-step forecast)."""
+    l = t = None
+    s = [0.0] * m
+    out = []
+    for p, x in enumerate(vals):
+        j = p % m
+        if x is not None:
+            if l is None:
+                l, t = x, 0.0
+            else:
+                l2 = a * (x - s[j]) + (1 - a) * (l + t)
+                t = b * (l2 - l) + (1 - b) * t
+                s[j] = g * (x - l2) + (1 - g) * s[j]
+                l = l2
+        out.append(None if l is None else (l, t, s[j], l + t + s[(j + 1) % m]))
+    return out
+
+
+class TestHoltWintersStream:
+    def test_state_carries_across_batches(self, spark):
+        """Two micro-batches equal the Holt-Winters fold over each whole
+        series. Season 4 with the split after row 3: the phase counter
+        and the seasonal slots carry over mid-season, and the second
+        batch crosses the season boundary at row 4."""
+        from symtseries_spark.streaming import holt_winters_stream
+
+        a, b, g, m = 0.5, 0.25, 0.125, 4
+        got, _ = _replay_two_files(
+            spark,
+            lambda s: holt_winters_stream(
+                s, key="k", order=["i"], value="v",
+                alpha=a, beta=b, gamma=g, season=m,
+            ),
+        )
+        for key, vals in REPLAY_SERIES.items():
+            for i, exp in enumerate(py_holt_winters(vals, a, b, g, m)):
+                r = got[(key, i)]
+                row = (r.level, r.trend, r.season_adj, r.forecast)
+                if exp is None:
+                    assert row == (None,) * 4, (key, i)
+                else:
+                    assert row == pytest.approx(exp, abs=1e-12), (key, i)
+
+
+class TestPageHinkleyStream:
+    def test_state_carries_across_batches(self, spark):
+        """Two micro-batches equal the batch twin on the same rows: both
+        run in integer micro-units, so ``ph`` and ``alarm`` agree
+        exactly, NULL before a series' first value."""
+        from symtseries_spark.operators.timeseries import page_hinkley
+        from symtseries_spark.streaming import page_hinkley_stream
+
+        got, df = _replay_two_files(
+            spark,
+            lambda s: page_hinkley_stream(
+                s, key="k", order=["i"], value="v", delta=0.5, lam=3.0
+            ),
+        )
+        expect = page_hinkley(df, key="k", order=["i"], value="v", delta=0.5, lam=3.0)
+        exp = {(r.k, r.i): (r.ph, r.alarm) for r in expect.collect()}
+        assert {k: (r.ph, r.alarm) for k, r in got.items()} == exp
+        assert exp[(7, 4)] == (None, None)
+        assert any(alarm for _, alarm in exp.values())
