@@ -504,25 +504,34 @@ def sax_word_mindist(
 def _pattern_mindist(
     word_col: str, pattern: str, *, c: int, n: str | int | None = None
 ) -> Column:
-    """MINDIST from the SAX-string column named ``word_col`` to a
-    literal ``pattern`` -> STRUCT(dist, above, below); the expression
-    behind :func:`..operators.search.mindist_to_pattern`. The pattern is
+    """The per-row sums of the MINDIST from the SAX-string column named
+    ``word_col`` to a literal ``pattern`` -> STRUCT(above, below, scale),
+    NULL unless the word has the pattern's length; the expression behind
+    :func:`..operators.search.mindist_to_pattern`, which finishes
+    ``dist = scale * sqrt(above + below)``, ``scale * sqrt(above)`` and
+    ``scale * sqrt(below)`` in a second projection. The pattern is
     parsed eagerly (``ValueError`` on a bad letter) and is n = 0, so each
     row's ``n`` (a column name, an int, or ``None`` for n = w) drives
-    the scale. Each position reads the pattern letter's column of the
-    :func:`_contrib_const` tables as one (c+2)-entry literal array
+    ``scale`` = √(n/w). Each position reads the pattern letter's column
+    of the :func:`_contrib_const` tables as one (c+2)-entry literal array
     indexed by the word letter's slot — a flat sum that stays inside
     whole-stage codegen. Same slot rule, gate, scale and left-folded
     sums as :func:`sax_word_mindist`, so the values are bit-identical.
+
+    Each sum appears once (2w lookups): Catalyst does not inline a
+    non-cheap struct that the finishing projection reads several times,
+    so a row evaluates each sum once. ``dist`` is not built inside the
+    struct: spelled out of both sums it would hold each sum twice, and a
+    NULL filter pushed below the projection would add a third copy (6w
+    lookups, ~2,100 lines of generated Java at w = 4).
 
     The expression is rendered as ONE SQL string and handed to
     ``F.expr`` once, because a probe's fixed cost is driver<->JVM round
     trips, not execution: as a Column tree every ``F.lit``,
     ``F.array``, ``element_at``, ``+`` and gate node costs 3-8 Py4J
     calls, about 1,000 of the ~1,230 an iSAX probe made at w=4, c=8,
-    and the count grew with w*c. As text, a probe makes ~220 calls at
-    any (w, c). Doubles are written as ``repr(v) + "D"``, which
-    round-trips exactly.
+    and the count grew with w*c. Doubles are written as
+    ``repr(v) + "D"``, which round-trips exactly.
     """
     from ..pykernel import parse
 
@@ -552,7 +561,5 @@ def _pattern_mindist(
     comp = f"sqrt(CAST({n_eff} AS DOUBLE) / {w})"
     return F.expr(
         f"CASE WHEN length({word}) = {w} THEN named_struct("
-        f"'dist', {comp} * sqrt({above} + {below}), "
-        f"'above', {comp} * sqrt({above}), "
-        f"'below', {comp} * sqrt({below})) END"
+        f"'above', {above}, 'below', {below}, 'scale', {comp}) END"
     )

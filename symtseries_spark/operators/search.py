@@ -51,16 +51,24 @@ def mindist_to_pattern(
     wildcard, so n = w), or ``None`` (n = w). A ``Column`` raises
     ``TypeError``: the expression is rendered as SQL text, which names
     its inputs.
+
+    Two projections: the first evaluates each per-position sum once per
+    row (:func:`_pattern_mindist`), the second finishes the three
+    columns from them, as SQL text so building it costs a fixed few
+    Py4J calls.
     """
     if n is not None and not isinstance(n, (str, int)):
         raise TypeError(
             f"n must be a column name, an int or None, not {type(n).__name__}"
         )
-    m = F.col("__m")
     return (
         words.withColumn("__m", _pattern_mindist(word_col, pattern, c=c, n=n))
         .withColumns(
-            {out: m["dist"], f"{out}_above": m["above"], f"{out}_below": m["below"]}
+            {
+                out: F.expr("`__m`.scale * sqrt(`__m`.above + `__m`.below)"),
+                f"{out}_above": F.expr("`__m`.scale * sqrt(`__m`.above)"),
+                f"{out}_below": F.expr("`__m`.scale * sqrt(`__m`.below)"),
+            }
         )
         .drop("__m")
     )
@@ -84,10 +92,16 @@ def topk_nearest(
     shuffle beyond the final top-k reduction, which AQE executes as
     partial top-k per partition. ``n`` is as in
     :func:`mindist_to_pattern`.
+
+    The order is ``mindist ASC NULLS LAST`` and the tiebreakers; the
+    NULL rows are dropped after the limit. Every scorable row sorts
+    before every NULL one, so the rows are those of filtering first,
+    but no NULL filter is pushed below the projection, where it would
+    evaluate the MINDIST sums a second time.
     """
     scored = mindist_to_pattern(words, pattern, c=c, word_col=word_col, n=n)
-    order = [F.col("mindist").asc()] + [F.col(t) for t in (tiebreakers or [])]
-    return scored.where(F.col("mindist").isNotNull()).orderBy(*order).limit(k)
+    order = [F.col("mindist").asc_nulls_last()] + [F.col(t) for t in (tiebreakers or [])]
+    return scored.orderBy(*order).limit(k).where("mindist IS NOT NULL")
 
 
 def match_pattern(

@@ -9,7 +9,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 TABLES = (
     "region",
@@ -97,6 +104,10 @@ def load_series(
     return reader.options(**options).format(fmt).load(path)
 
 
+#: the file, at the index root, that holds the schema of the index
+_SCHEMA_FILE = "_schema.json"
+
+
 def write_words_multilevel(
     words: DataFrame,
     path: str,
@@ -116,6 +127,16 @@ def write_words_multilevel(
     (~prod(1/c_i^w) of the data) before any row is read.
     ``levels=(2,)`` is the one-level layout: the tree root alone, one
     ``isax_l0=`` directory per c=2 word.
+
+    The index carries its schema: every write that creates or replaces
+    it (``overwrite``, or any mode into a missing or empty directory)
+    then writes ``<path>/_schema.json``, exactly the schema
+    ``spark.read.parquet(path)`` infers — the data columns, then the
+    ``isax_l*`` columns, all nullable. The leading ``_`` hides it from
+    Spark's file listing. An append into an existing index first checks
+    the frame's schema against the stored one and raises ``ValueError``
+    on a mismatch (or on a directory without ``_schema.json``) before
+    any file is written.
     """
     from ..functions.sax import sax_coarsen
 
@@ -125,7 +146,78 @@ def write_words_multilevel(
     for i, cc in enumerate(levels):
         out = out.withColumn(f"isax_l{i}", sax_coarsen(F.col(word_col), c, cc))
         cols.append(f"isax_l{i}")
+    schema = _nullable(
+        StructType(
+            [f for f in out.schema if f.name not in cols] + [out.schema[n] for n in cols]
+        )
+    )
+    spark = words.sparkSession
+    fs, root = _index_fs(spark, path)
+    fresh = not fs.exists(root) or len(fs.listStatus(root)) == 0
+    if mode.lower() == "append" and not fresh:
+        stored = _stored_schema(spark, path)
+        if stored != schema:
+            raise ValueError(
+                f"cannot append to {path}: the index holds {stored.simpleString()},"
+                f" the frame gives {schema.simpleString()}"
+            )
     out.write.mode(mode).partitionBy(*cols).parquet(path)
+    if fresh or mode.lower() == "overwrite":
+        stream = fs.create(spark._jvm.Path(root, _SCHEMA_FILE), True)
+        try:
+            stream.write(schema.json().encode())
+        finally:
+            stream.close()
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable — what a
+    parquet read reports for a written schema."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _index_fs(spark: SparkSession, path: str):
+    """(Hadoop ``FileSystem``, ``Path``) of an index root. The Hadoop
+    class is imported into the JVM view: resolving
+    ``org.apache.hadoop.fs.Path`` segment by segment costs one failed
+    class lookup over every jar per package segment."""
+    from py4j.java_gateway import java_import
+
+    java_import(spark._jvm, "org.apache.hadoop.fs.Path")
+    root = spark._jvm.Path(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()), root
+
+
+def _stored_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema an index keeps in its ``_schema.json``, read through
+    the Hadoop FS API (no Spark job); ``ValueError`` when there is none."""
+    import json
+
+    from py4j.java_gateway import java_import
+    from py4j.protocol import Py4JJavaError
+
+    java_import(spark._jvm, "org.apache.commons.io.IOUtils")
+    fs, file = _index_fs(spark, f"{path.rstrip('/')}/{_SCHEMA_FILE}")
+    try:
+        stream = fs.open(file)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.io.FileNotFoundException":
+            raise
+        raise ValueError(
+            f"{path} has no {_SCHEMA_FILE}: rewrite the index with write_words_multilevel"
+        ) from None
+    try:
+        return StructType.fromJson(json.loads(spark._jvm.IOUtils.toString(stream, "UTF-8")))
+    finally:
+        stream.close()
 
 
 def _check_levels(levels: tuple[int, ...], c: int) -> None:
@@ -146,13 +238,17 @@ def read_words_multilevel(
 
     The pattern (``ValueError`` on a letter outside the first ``c`` and
     '#') and ``levels`` (the writer's rule) are checked before any path
-    is built. The read lists only the chain's leaf directory
-    (``isax_l0=<w0>/isax_l1=<w1>``, '#' escaped as ``%23`` as Spark
-    writes it) under ``basePath``, so the level columns keep their
-    names and no partition discovery runs over the rest of the index.
-    It keeps one equality predicate per level on those partition
-    columns (``PartitionFilters`` shows every level). A chain the index
-    does not hold gives an empty frame with the index's columns.
+    is built. The schema comes from the index's ``_schema.json``
+    (:func:`write_words_multilevel`), read through the Hadoop FS API, so
+    no Spark job infers it; an index without one raises ``ValueError``
+    — rewrite it with :func:`write_words_multilevel`. The read lists
+    only the chain's leaf directory (``isax_l0=<w0>/isax_l1=<w1>``, '#'
+    escaped as ``%23`` as Spark writes it) under ``basePath``, so the
+    level columns keep their names and no partition discovery runs over
+    the rest of the index. It keeps one equality predicate per level on
+    those partition columns (``PartitionFilters`` shows every level),
+    passed as one SQL string. A chain the index does not hold gives an
+    empty frame with the stored schema that reads no file.
     """
     from pyspark.errors import AnalysisException
 
@@ -162,18 +258,15 @@ def read_words_multilevel(
     _check_levels(levels, c)
     chain = [pk.coarsen(pattern, c, cc) for cc in levels]
     root = path.rstrip("/")
+    schema = _stored_schema(spark, root)
     leaf = "/".join(f"isax_l{i}={w.replace('#', '%23')}" for i, w in enumerate(chain))
     try:
-        df = spark.read.option("basePath", root).parquet(f"{root}/{leaf}")
+        df = spark.read.schema(schema).option("basePath", root).parquet(f"{root}/{leaf}")
     except AnalysisException as e:
-        # no such chain, or an empty one: the root read's filters give
-        # the empty frame with the index's columns
-        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        df = spark.read.parquet(path)
-    for i, w in enumerate(chain):
-        df = df.where(F.col(f"isax_l{i}") == w)
-    return df
+        df = spark.createDataFrame([], schema)
+    return df.where(" AND ".join(f"isax_l{i} = '{w}'" for i, w in enumerate(chain)))
 
 
 def write_bucketed_table(

@@ -473,21 +473,26 @@ def twap_stream(
     NULL/NaN previous values contribute duration but no weighted mass
     (Spark's ``sum`` skips NULL products) — exactly the batch
     operator's semantics; the oracle replays the same running prefix
-    with lag + running window sums."""
+    with lag + running window sums. An event with a NULL ``ts`` closes
+    and opens no interval, as the batch operator keeps only intervals
+    with a duration: it adds no duration, mass or count, leaves the
+    previous timestamp and value as they were, and emits the running
+    TWAP unchanged."""
 
     def fold(rows, vals, st):
         pts, pv, wsum, tsum, n = st or (None, None, 0.0, 0.0, 0.0)
         twaps, counts = [], []
         for t, x in zip(rows[ts].astype("float64").tolist(), vals.tolist()):
-            if pts is not None:
-                dt = t - pts
-                tsum += dt
-                n += 1.0
-                if pv == pv:  # previous value not NaN
-                    wsum += pv * dt
+            if t == t:  # ts not NULL
+                if pts is not None:
+                    dt = t - pts
+                    tsum += dt
+                    n += 1.0
+                    if pv == pv:  # previous value not NaN
+                        wsum += pv * dt
+                pts, pv = t, x
             twaps.append(wsum / tsum if tsum > 0 else None)
             counts.append(int(n))
-            pts, pv = t, x
         return {
             "n_intervals": pd.array(counts, dtype="Int64"),
             "twap": pd.array(twaps, dtype="Float64"),
@@ -586,7 +591,13 @@ def ohlc_stream(
     NULL high/low until its first real value. NaN caveat (same as
     ``rolling_zscore_stream``): past the Arrow boundary NULL and NaN
     data are indistinguishable, so NaN values are skipped too, where
-    SQL ``max`` would rank NaN above every number."""
+    SQL ``max`` would rank NaN above every number.
+
+    An event with a NULL ``ts`` belongs to no bucket: it is emitted as
+    a one-event bar of its own (``day`` NULL, open = high = low = close
+    = its value, volume 1) and leaves the open bar untouched. Unlike the
+    oracle's window SQL, which puts every NULL-``ts`` event of a series
+    into one NULL-day bar, several such events are not merged."""
     outs = ("day", "open", "high", "low", "close", "volume")
     counts = ("day", "volume")
 
@@ -595,7 +606,14 @@ def ohlc_stream(
         if st is not None:
             day, n = int(day), int(n)
         cols = {col: [] for col in outs}
-        for t, x in zip(rows[ts].astype("int64").tolist(), vals.tolist()):
+        tss = rows[ts]
+        for t, null, x in zip(
+            tss.fillna(0).astype("int64").tolist(), tss.isna().tolist(), vals.tolist()
+        ):
+            if null:  # no bucket: a bar of its own
+                for col, v in zip(outs, (None, x, x, x, x, 1)):
+                    cols[col].append(v)
+                continue
             d = t // bucket_us
             if d != day:
                 day, o, h, l, n = d, x, x, x, 0
@@ -608,7 +626,7 @@ def ohlc_stream(
         return {
             col: pd.array(v, dtype="Int64" if col in counts else "Float64")
             for col, v in cols.items()
-        }, (float(day), o, h, l, c, float(n))
+        }, None if day is None else (float(day), o, h, l, c, float(n))
 
     return _series_stream(
         events, fold, key=key, order=order, value=value, reads=(ts,), echo_value=False,

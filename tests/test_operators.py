@@ -266,6 +266,18 @@ def test_topk_build_py4j_calls_flat_in_w_and_c(spark, py4j_calls):
     assert calls[(4, 8)] == calls[(16, 16)] < 300, calls
 
 
+@pytest.mark.parametrize("w", [4, 16])
+def test_topk_plan_evaluates_each_mindist_sum_once(spark, w):
+    """The optimized top-k plan holds each per-position MINDIST lookup
+    once per sum (2w), not the 6w of a struct that spells ``dist`` out
+    of both sums plus a NULL filter pushed below the projection."""
+    words = spark.createDataFrame([(1, "A" * w)], "series_key int, sax_word string")
+    top = topk_nearest(words, "ABCDEFGHABCDEFGH"[:w], c=8, k=3, n="series_key",
+                       tiebreakers=["series_key"])
+    plan = top._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("element_at(") == 2 * w, plan
+
+
 def test_allpairs_matches_bruteforce(spark):
     rng = random.Random(21)
     c, w, n = 4, 4, 16

@@ -148,6 +148,122 @@ class TestMultilevelLayout:
             write_words_multilevel(words, "/tmp/unused", c=8, levels=(2, 8))
 
 
+class TestIndexSchema:
+    """The index carries its schema (``_schema.json``): a probe reads
+    it without a Spark job, and an append must match it."""
+
+    ROWS = [(0, "ABCD", 32), (1, "ABCC", 32), (2, "HHHA", 32), (3, "A#CD", 32)]
+
+    def _index(self, spark, path, levels=(2, 4)):
+        words = spark.createDataFrame(self.ROWS, "window_id int, sax_word string, n int")
+        write_words_multilevel(words, path, c=8, levels=levels)
+        return words
+
+    @staticmethod
+    def _entries(path):
+        import os
+
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+
+    def test_stored_schema_is_what_parquet_infers(self, spark, tmp_path):
+        """The stored schema is the inferred one, nested types included,
+        and the schema file stays out of a plain read of the root."""
+        import json
+
+        from pyspark.sql.types import StructType
+
+        path = str(tmp_path / "index")
+        words = spark.createDataFrame(
+            [(1, "ABCD", (1.5, [2, 3]), {"a": 1})],
+            "window_id int not null, sax_word string,"
+            " s struct<x: double not null, y: array<int>>, m map<string, int>",
+        )
+        write_words_multilevel(words, path, c=8)
+        stored = StructType.fromJson(json.loads((tmp_path / "index" / "_schema.json").read_text()))
+        plain = spark.read.parquet(path)
+        assert plain.schema == stored
+        assert plain.columns == ["window_id", "sax_word", "s", "m", "isax_l0", "isax_l1"]
+        assert plain.count() == 1
+        assert read_words_multilevel(spark, path, "ABCD", c=8).schema == stored
+
+    def test_append_checks_the_schema_before_writing(self, spark, tmp_path):
+        path = str(tmp_path / "index")
+        self._index(spark, path)
+        before = self._entries(path)
+        other = spark.createDataFrame([(9, "ABCD", 32)], "window_id long, sax_word string, n int")
+        with pytest.raises(ValueError, match="cannot append"):
+            write_words_multilevel(other, path, c=8, mode="append")
+        assert self._entries(path) == before
+        # the same columns append, a NOT NULL column included
+        same = spark.createDataFrame([(9, "ABCD", 32)], "window_id int not null, sax_word string, n int")
+        write_words_multilevel(same, path, c=8, mode="append")
+        got = read_words_multilevel(spark, path, "ABCD", c=8)
+        assert sorted(r.window_id for r in got.collect()) == [0, 1, 9]
+
+    def test_append_into_a_new_or_empty_directory_writes_the_schema(self, spark, tmp_path):
+        words = spark.createDataFrame(self.ROWS, "window_id int, sax_word string, n int")
+        (tmp_path / "empty").mkdir()
+        for name in ("new", "empty"):
+            path = str(tmp_path / name)
+            write_words_multilevel(words, path, c=8, mode="append")
+            assert (tmp_path / name / "_schema.json").is_file()
+            got = read_words_multilevel(spark, path, "ABCD", c=8)
+            assert sorted(r.window_id for r in got.collect()) == [0, 1]
+
+    def test_a_directory_without_the_schema_file_is_refused(self, spark, tmp_path):
+        """No inference fallback: read and append both name the fix."""
+        path = str(tmp_path / "index")
+        words = self._index(spark, path)
+        (tmp_path / "index" / "_schema.json").unlink()
+        with pytest.raises(ValueError, match="rewrite the index with write_words_multilevel"):
+            read_words_multilevel(spark, path, "ABCD", c=8)
+        with pytest.raises(ValueError, match="rewrite the index with write_words_multilevel"):
+            write_words_multilevel(words, path, c=8, mode="append")
+        write_words_multilevel(words, path, c=8)
+        assert read_words_multilevel(spark, path, "ABCD", c=8).count() == 2
+
+    def test_a_missing_chain_reads_no_file(self, spark, tmp_path):
+        path = str(tmp_path / "index")
+        self._index(spark, path)
+        got = read_words_multilevel(spark, path, "HHHH", c=8)
+        assert got.inputFiles() == [] and got.count() == 0
+        assert got.schema == spark.read.parquet(path).schema
+
+    def test_a_probe_runs_one_spark_job(self, spark, tmp_path):
+        """Reading the chain infers nothing: the probe's collect is its
+        only job."""
+        import uuid
+
+        from symtseries_spark.operators.search import topk_nearest
+
+        path = str(tmp_path / "index")
+        self._index(spark, path)
+        sc = spark.sparkContext
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "one probe")
+        try:
+            words = read_words_multilevel(spark, path, "ABCD", c=8)
+            top = topk_nearest(words, "ABCD", c=8, k=3, n="n", tiebreakers=["window_id"]).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [r.window_id for r in top] == [0, 1]
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    def test_read_py4j_calls_flat_in_levels(self, spark, tmp_path, py4j_calls):
+        """Building a read costs the same few driver->JVM round trips
+        at one level and at two: the level predicates are one SQL
+        string. 26 calls were measured at both."""
+        calls = {}
+        for levels in ((2,), (2, 4)):
+            path = str(tmp_path / f"index{len(levels)}")
+            self._index(spark, path, levels)
+            read_words_multilevel(spark, path, "ABCD", c=8, levels=levels)  # warm-up
+            start = py4j_calls.n
+            read_words_multilevel(spark, path, "ABCD", c=8, levels=levels)
+            calls[levels] = py4j_calls.n - start
+        assert calls[(2,)] == calls[(2, 4)] <= 30, calls
+
+
 class TestLoadSeries:
     def test_csv_and_json_roundtrip(self, spark, sf_dir):
         import shutil as _shutil

@@ -941,6 +941,31 @@ class TestFunnelStream:
         }
 
 
+def _replay_batches(spark, df, root, build):
+    """Run ``build(stream)`` over ``df`` replayed as one micro-batch per
+    value of its ``b`` column (in order); the emitted rows, as Rows."""
+    import glob as globmod
+    import os
+    import uuid
+
+    in_dir = f"{root}/in"
+    os.makedirs(in_dir)
+    for b in sorted(r.b for r in df.select("b").distinct().collect()):
+        df.where(F.col("b") == b).coalesce(1).write.parquet(f"{root}/b{b}")
+        dst = f"{in_dir}/b{b}.parquet"
+        os.rename(globmod.glob(f"{root}/b{b}/part-*.parquet")[0], dst)
+        os.utime(dst, (1_000_000_000 + b, 1_000_000_000 + b))
+    stream = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", "1").parquet(in_dir)
+    name = f"replay_{uuid.uuid4().hex[:8]}"
+    q = (
+        build(stream).writeStream.format("memory").queryName(name)
+        .outputMode("append").option("checkpointLocation", f"{root}/chk").start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return spark.table(name).collect()
+
+
 class TestTwapStream:
     def test_state_carries_across_batches(self, spark):
         """Running TWAP over two micro-batches must equal the direct
@@ -993,6 +1018,45 @@ class TestTwapStream:
             n, tw_v = got[i]
             assert n == i
             assert tw_v == pytest.approx(wsum / tsum, abs=1e-9)
+
+
+    def test_null_ts_adds_no_interval_across_batches(self, spark, tmp_path):
+        """An event with a NULL ts closes and opens no interval, as the
+        batch TWAP keeps only intervals with a duration: key 1 with ts
+        0, NULL, 5, 9 over two micro-batches ends on the intervals
+        (0, 5) and (5, 9); key 2 opens with a NULL ts. The last row of
+        each key equals the batch aggregate of the oracle's form."""
+        from pyspark.sql import Window
+
+        from symtseries_spark.streaming import twap_stream
+
+        # (k, t, i, v, micro-batch)
+        rows = [
+            (1, 0, 0, 10.0, 0), (1, None, 1, 20.0, 0), (1, 5, 2, 2.0, 1), (1, 9, 3, 8.0, 1),
+            (2, None, 0, 4.0, 0), (2, 3, 1, 6.0, 1), (2, 7, 2, 1.0, 1),
+        ]
+        df = spark.createDataFrame(rows, "k long, t long, i long, v double, b int")
+        got = {
+            (r.k, r.i): (r.n_intervals, r.twap)
+            for r in _replay_batches(
+                spark, df, str(tmp_path),
+                lambda s: twap_stream(s, key="k", order=["t", "i"], ts="t", value="v"),
+            )
+        }
+        assert got == {
+            (1, 0): (0, None), (1, 1): (0, None), (1, 2): (1, 10.0),
+            (1, 3): (2, (10.0 * 5 + 2.0 * 4) / 9),
+            (2, 0): (0, None), (2, 1): (0, None), (2, 2): (1, 6.0),
+        }
+        w = Window.partitionBy("k").orderBy("t", "i")
+        dt = (F.lead("t").over(w) - F.col("t")).cast("double")
+        batch = (
+            df.select("k", "v", dt.alias("dt")).where(F.col("dt").isNotNull())
+            .groupBy("k")
+            .agg(F.count("*").alias("n"), (F.sum(F.col("v") * F.col("dt")) / F.sum("dt")).alias("twap"))
+        )
+        last = {1: got[(1, 3)], 2: got[(2, 2)]}
+        assert {r.k: (r.n, r.twap) for r in batch.collect()} == last
 
 
 class TestOhlcStream:
@@ -1112,6 +1176,46 @@ class TestOhlcStream:
             ]
         finally:
             shutil.rmtree(root, ignore_errors=True)
+
+
+    def test_null_ts_is_a_bar_of_its_own(self, spark, tmp_path):
+        """A NULL-ts event is emitted as a one-event bar with day NULL
+        and leaves the open bar untouched (key 1: ts 0, NULL, 5, 9 over
+        two micro-batches); a series may open with one (key 2). Rows
+        with a ts equal the oracle's window SQL."""
+        from symtseries_spark.streaming import ohlc_stream
+
+        # (k, t, i, v, micro-batch); bucket_us=10
+        rows = [
+            (1, 0, 0, 5.0, 0), (1, None, 1, 7.0, 0), (1, 5, 2, 1.0, 1), (1, 9, 3, 3.0, 1),
+            (2, None, 0, 4.0, 0), (2, 3, 1, 6.0, 1),
+        ]
+        df = spark.createDataFrame(rows, "k long, t long, i long, v double, b int")
+        cols = ["k", "i", "day", "open", "high", "low", "close", "volume"]
+        got = sorted(
+            tuple(r[c] for c in cols)
+            for r in _replay_batches(
+                spark, df, str(tmp_path),
+                lambda s: ohlc_stream(s, key="k", order=["t", "i"], ts="t", value="v", bucket_us=10),
+            )
+        )
+        assert [r for r in got if r[2] is None] == [
+            (1, 1, None, 7.0, 7.0, 7.0, 7.0, 1), (2, 0, None, 4.0, 4.0, 4.0, 4.0, 1)
+        ]
+        view = f"ohlc_nullts_{tmp_path.name}"
+        df.createOrReplaceTempView(view)
+        expect = spark.sql(
+            f"""
+            SELECT k, i, t div 10 AS day,
+                   first_value(v) OVER w AS open, max(v) OVER w AS high,
+                   min(v) OVER w AS low, v AS close, count(*) OVER w AS volume
+            FROM {view} WHERE t IS NOT NULL
+            WINDOW w AS (PARTITION BY k, t div 10 ORDER BY t, i
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            """
+        )
+        assert [r for r in got if r[2] is not None] == sorted(tuple(r) for r in expect.collect())
+        assert (1, 3, 0, 5.0, 5.0, 1.0, 3.0, 3) in got
 
 
 class TestStreamingWeightedSample:
