@@ -396,19 +396,6 @@ def q_sax_complexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sax_sliding_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-parallel sliding windows (intra-series parallelism via
-    overlap replication) — same semantics as sax_sliding_words, same
-    oracle; chunk=64 forces real chunk boundaries at every sf."""
-    from symtseries_spark.operators import sliding_sax_chunked
-
-    ev = load(spark, sf_dir, "events")
-    return sliding_sax_chunked(
-        ev, key="user_id", order=["ts", "event_id"], value="value",
-        chunk=64, **SLIDE,
-    ).select("user_id", "event_id", "sax_word")
-
-
 def q_sax_tumbling_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = tumbling_sax(
         load(spark, sf_dir, "events"),
@@ -8446,7 +8433,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_byte_histogram": q_media_byte_histogram,
         "media_frame_sample": q_media_frame_sample,
         "media_decode_features": q_media_decode_features,
-        "sax_sliding_chunked": q_sax_sliding_chunked,
         "sax_tumbling_motifs": q_sax_tumbling_motifs,
         "sax_pattern_match": q_sax_pattern_match,
         "sax_allpairs": q_sax_allpairs,
@@ -9414,9 +9400,8 @@ GROUP BY sax_word
 ORDER BY occurrences DESC, sax_word
 LIMIT {SAX_MOTIF_K}
 """,
-        # chunk-parallel and streaming forms are semantics-identical to
-        # the plain sliding plan -> same oracle
-        "sax_sliding_chunked": f"SELECT user_id, event_id, sax_word FROM ({slide})",
+        # the streaming form is semantics-identical to the plain sliding
+        # plan -> same oracle
         "sax_sliding_stream": f"SELECT user_id, event_id, sax_word FROM ({slide})",
         "sax_event_windows": oc.event_time_words_sql(
             EVENT_WINDOW_DAYS, EVENT_WINDOW["w"], EVENT_WINDOW["c"]

@@ -1,9 +1,13 @@
 """SAX kernels as pure PySpark Column expressions.
 
-Everything here compiles to Catalyst expression trees over built-in
-higher-order array functions (``transform`` / ``aggregate`` / ``filter`` /
-``zip_with`` / ``slice``) — no Python UDFs, so the hot path stays inside
-whole-stage codegen and scales with executors, not with the Python GIL.
+Everything here compiles to Catalyst expression trees — no Python
+UDFs, so the work scales with executors, not with the Python GIL. The
+array forms use built-in higher-order functions (``transform`` /
+``aggregate`` / ``filter`` / ``zip_with`` / ``slice``), which Spark
+evaluates interpreted, outside whole-stage codegen; the string and
+pattern forms at the end of the module unroll the plan-time (w, c) into
+flat scalar expressions that do stay inside it (see "codegen-path
+variants" below).
 
 Parameters ``w`` (word length) and ``c`` (cardinality) are plan-time
 Python ints: the breakpoint and distance tables become literal arrays
@@ -190,18 +194,9 @@ def sax_parse_valid(word: Column, c: int) -> Column:
     """Boolean validity of a SAX string column under the reference's
     parse rules (src/symtseries.c:534-554): non-NULL, non-empty, every
     letter either ``#`` or in the first ``c`` letters. NULL word ->
-    NULL (missing, not invalid)."""
-    from .. import constants
-
-    if not constants.MIN_CARDINALITY <= c <= constants.MAX_CARDINALITY:
-        raise ValueError(f"cardinality must be in [2, 16], got {c}")
-    chars = F.transform(F.sequence(F.lit(1), F.length(word)), lambda i: word.substr(i, F.lit(1)))
-    ok = F.forall(
-        chars,
-        lambda ch: (ch == MISSING)
-        | ((F.ascii(ch) >= 65) & (F.ascii(ch) < 65 + c)),
-    )
-    return F.when(word.isNotNull(), (F.length(word) > 0) & ok)
+    NULL (missing, not invalid). The rule is :func:`sax_parse`'s strict
+    one: a word is valid exactly when it parses to a non-NULL array."""
+    return F.when(word.isNotNull(), sax_parse(word, c, strict=True).isNotNull())
 
 
 def sax_parse_literal(pattern: str, c: int) -> Column:

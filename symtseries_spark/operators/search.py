@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import pykernel as pk
-from ..constants import MINDIST_OVERSHOOT, validate_params
+from ..constants import LETTERS, MINDIST_OVERSHOOT, MISSING, validate_params
 from ..functions.sax import (
     _pattern_mindist,
     sax_coarsen,
@@ -88,20 +88,23 @@ def topk_nearest(
     via tiebreakers). Rows :func:`mindist_to_pattern` cannot score
     (NULL ``mindist``) are never returned, so fewer than ``k`` rows come
     back when fewer than ``k`` are scorable. A plan-time constant
-    pattern means this is scan -> project -> TakeOrderedAndProject: no
-    shuffle beyond the final top-k reduction, which AQE executes as
-    partial top-k per partition. ``n`` is as in
-    :func:`mindist_to_pattern`.
+    pattern means this is scan -> filter -> project ->
+    TakeOrderedAndProject at the plan root, which takes a partial top-k
+    per partition and merges them on the driver: no shuffle. ``n`` is
+    as in :func:`mindist_to_pattern`.
 
-    The order is ``mindist ASC NULLS LAST`` and the tiebreakers; the
-    NULL rows are dropped after the limit. Every scorable row sorts
-    before every NULL one, so the rows are those of filtering first,
-    but no NULL filter is pushed below the projection, where it would
-    evaluate the MINDIST sums a second time.
+    The unscorable rows are dropped before scoring by a predicate that
+    reads no MINDIST sum: a word is scorable exactly when it has the
+    pattern's length and every letter is one of the first ``c`` or
+    '#'. Ordering by ``mindist`` and the tiebreakers then needs no NULL
+    rule, and nothing sits above the limit.
     """
-    scored = mindist_to_pattern(words, pattern, c=c, word_col=word_col, n=n)
-    order = [F.col("mindist").asc_nulls_last()] + [F.col(t) for t in (tiebreakers or [])]
-    return scored.orderBy(*order).limit(k).where("mindist IS NOT NULL")
+    word = F.col(word_col)
+    scorable = (F.length(word) == len(pattern)) & (
+        F.translate(word, LETTERS[:c] + MISSING, "") == ""
+    )
+    scored = mindist_to_pattern(words.where(scorable), pattern, c=c, word_col=word_col, n=n)
+    return scored.orderBy("mindist", *(tiebreakers or [])).limit(k)
 
 
 def match_pattern(
@@ -317,6 +320,9 @@ def allpairs_within(
     and a true match within that excess of ``delta`` can be dropped.
     Callers that need every match use :func:`allpairs_refined`.
 
+    ``n_col`` names the words' n column; pairs need equal n. ``None``
+    reads every word as the wildcard n = 0, i.e. n = w.
+
     ``attach`` (optional): a per-key payload table (``attach_key`` ->
     ``attach_col``) joined onto BOTH key sides BEFORE the pair
     expansion, emitted as ``payload_a``/``payload_b`` (flip-corrected).
@@ -328,9 +334,9 @@ def allpairs_within(
     from ``attach`` keep NULL payloads (inner semantics preserved by the
     caller's distance filter).
     """
-    cols = [F.col(key_col).alias("k"), F.col(word_col).alias("wd")] + (
-        [F.col(n_col).alias("n")] if n_col else []
-    )
+    cols = [F.col(key_col).alias("k"), F.col(word_col).alias("wd")]
+    if n_col:
+        cols.append(F.col(n_col).alias("n"))
     # the word table feeds three plan branches (distinct pairs + both
     # expansion sides); materialize it once so the upstream window
     # aggregation runs once — it is the compressed representation (key +
@@ -344,27 +350,30 @@ def allpairs_within(
         .select(*cols)
         .localCheckpoint(eager=True)
     )
+    if not n_col:
+        # no n column: every word is the wildcard n = 0 (n = w). Added
+        # after the checkpoint, the constant is visible to Catalyst,
+        # which folds the n comparisons below away
+        base = base.withColumn("n", F.lit(0))
 
     # 1) distances over distinct words only (|D|^2/2 evals, |D| <= c^w).
     # The left (streamed) side drives the nested-loop parallelism and
     # arrives AQE-coalesced to one partition — spread it, or |D|^2 evals
     # run in one task (at fine w, |D| approaches the key count)
     parallelism = words.sparkSession.sparkContext.defaultParallelism
-    dcols = ["wd"] + (["n"] if n_col else [])
-    distinct = base.select(*dcols).distinct()
+    distinct = base.select("wd", "n").distinct()
     da = distinct.select(
-        F.col("wd").alias("word_a"), *([F.col("n").alias("n_a")] if n_col else [])
+        F.col("wd").alias("word_a"), F.col("n").alias("n_a")
     ).repartition(parallelism)
-    db = F.broadcast(distinct.select(
-        F.col("wd").alias("word_b"), *([F.col("n").alias("n_b")] if n_col else [])
-    ))
-    cond = (F.col("word_a") <= F.col("word_b")) & (
-        F.length("word_a") == F.length("word_b")
+    db = F.broadcast(
+        distinct.select(F.col("wd").alias("word_b"), F.col("n").alias("n_b"))
     )
-    if n_col:
-        cond = cond & (F.col("n_a") == F.col("n_b"))
-    n_arg = F.col("n_a") if n_col else None
-    parts = sax_word_mindist(F.col("word_a"), F.col("word_b"), w=w, c=c, n=n_arg)
+    cond = (
+        (F.col("word_a") <= F.col("word_b"))
+        & (F.length("word_a") == F.length("word_b"))
+        & (F.col("n_a") == F.col("n_b"))
+    )
+    parts = sax_word_mindist(F.col("word_a"), F.col("word_b"), w=w, c=c, n=F.col("n_a"))
     word_pairs = (
         da.join(db, cond)
         .withColumn("__m", parts)
@@ -372,7 +381,7 @@ def allpairs_within(
         .select(
             "word_a",
             "word_b",
-            *(["n_a"] if n_col else []),
+            "n_a",
             F.col("__m")["dist"].alias("__d"),
             F.col("__m")["above"].alias("__ab"),
             F.col("__m")["below"].alias("__be"),
@@ -388,12 +397,10 @@ def allpairs_within(
     # downstream per-pair work inherits THIS side's partitioning, so
     # spread it across the cluster first (cheap: |keys| rows)
     a_keys = base.select(
-        F.col("k").alias("ka"), F.col("wd").alias("word_a"),
-        *([F.col("n").alias("n_a")] if n_col else []),
+        F.col("k").alias("ka"), F.col("wd").alias("word_a"), F.col("n").alias("n_a")
     ).repartition(parallelism)
     b_keys = base.select(
-        F.col("k").alias("kb"), F.col("wd").alias("__wb"),
-        *([F.col("n").alias("__nb")] if n_col else []),
+        F.col("k").alias("kb"), F.col("wd").alias("__wb"), F.col("n").alias("__nb")
     )
     if attach is not None:
         # payload feeds both sides — materialize once (same
@@ -411,14 +418,11 @@ def allpairs_within(
             .drop("__pk")
             .withColumnRenamed("__pay", "__payb")
         )
-    join_a = ["word_a"] + (["n_a"] if n_col else [])
-    b_cond = F.col("word_b") == F.col("__wb")
-    if n_col:
-        b_cond = b_cond & (F.col("n_a") == F.col("__nb"))
+    b_cond = (F.col("word_b") == F.col("__wb")) & (F.col("n_a") == F.col("__nb"))
     expanded = (
-        a_keys.join(F.broadcast(word_pairs), join_a)
+        a_keys.join(F.broadcast(word_pairs), ["word_a", "n_a"])
         .join(b_keys, b_cond)
-        .drop("__wb", *(["__nb"] if n_col else []))
+        .drop("__wb", "__nb")
         .where(
             F.when(F.col("word_a") == F.col("word_b"), F.col("ka") < F.col("kb"))
             .otherwise(F.col("ka") != F.col("kb"))

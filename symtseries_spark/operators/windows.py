@@ -3,17 +3,18 @@
 Input shape is always the production-long form ``(key, order, value)``
 — e.g. the testdata ``events`` table as ``(user_id, ts, value)``.
 
-Scale notes (the 100 TB contract):
+Scale notes:
 
-* Each operator shuffles **once**, on the series key — the same hash
-  partitioning a 1000-executor cluster would use; no driver-side
-  collection anywhere.
+* Each operator shuffles **once**, on the series key; no driver-side
+  collection anywhere (``tests/test_operators.py`` counts the hash
+  exchanges). One series is one task: its windows are ordered within
+  the key's partition, so a very long series is not split across tasks.
 * The encoders build no per-window ``array<double>``: sliding windows
   are window aggregates per frame, tumbling windows and whole series
   are long-form frame partials (``_frame_words``); only w <= 2048
   letters are collected per word, so shuffle width is bounded and small.
-* Skew: series keys with pathological row counts can be salted upstream;
-  AQE skew-join handling covers the join consumers downstream.
+* Skew: AQE skew-join handling covers the join consumers downstream; a
+  series with pathological row count stays one task (see above).
 * All expressions are JVM-side (no Python UDFs) — see functions/sax.py.
 """
 
@@ -107,66 +108,6 @@ def sliding_sax(
     return result.drop("__vf", "__vn", "__cnt", *aggs.keys())
 
 
-def sliding_sax_chunked(
-    df: DataFrame,
-    *,
-    key: str,
-    order: str | list[str],
-    value: str,
-    n: int,
-    w: int,
-    c: int,
-    chunk: int = 65536,
-    out: str = "sax_word",
-    emit_partial: bool = True,
-) -> DataFrame:
-    """:func:`sliding_sax` with intra-series parallelism for very long
-    series. Plain ``sliding_sax`` partitions by the series key, so ONE
-    multi-billion-row series serializes onto one task; this variant
-    splits each series into ``chunk``-row chunks and replicates the
-    n-1 rows before each boundary into the next chunk (overlap-aware
-    parallel sliding window), then runs the same window plan partitioned
-    by (key, chunk). Identical output, two shuffles instead of one —
-    use when max series length >> chunk.
-    """
-    validate_params(n, w, c)
-    if chunk < n:
-        raise ValueError("chunk must be >= n")
-    order_cols = [order] if isinstance(order, str) else list(order)
-    rn = F.row_number().over(Window.partitionBy(key).orderBy(*order_cols)) - 1
-    staged = df.withColumn("__rn", rn)
-    # rows in the last n-1 positions of a chunk also serve the next
-    # chunk's lookback; emit 1 or 2 (chunk_id, is_owner) assignments
-    own = F.floor(F.col("__rn") / chunk).cast("long")
-    needs_copy = (F.col("__rn") % chunk) >= (chunk - (n - 1))
-    assignments = F.when(
-        needs_copy,
-        F.array(
-            F.struct(own.alias("cid"), F.lit(True).alias("owner")),
-            F.struct((own + 1).alias("cid"), F.lit(False).alias("owner")),
-        ),
-    ).otherwise(F.array(F.struct(own.alias("cid"), F.lit(True).alias("owner"))))
-    exploded = staged.withColumn("__a", F.explode(assignments)).select(
-        "*", F.col("__a.cid").alias("__cid"), F.col("__a.owner").alias("__owner")
-    ).drop("__a")
-
-    inner = sliding_sax(
-        exploded,
-        key=[key, "__cid"],
-        order=["__rn"],
-        value=value,
-        n=n,
-        w=w,
-        c=c,
-        out=out,
-        emit_partial=True,
-    )
-    result = inner.where(F.col("__owner")).drop("__cid", "__owner")
-    if not emit_partial:
-        result = result.where(F.col("__rn") >= n - 1)
-    return result.drop("__rn")
-
-
 def tumbling_values(
     df: DataFrame,
     *,
@@ -175,7 +116,6 @@ def tumbling_values(
     value: str,
     n: int,
     out: str = "vals",
-    keep_partial: bool = False,
 ) -> DataFrame:
     """Non-overlapping windows of ``n`` consecutive rows per series key ->
     ``(series_key, window_id, vals: array<double>)`` in series order —
@@ -184,31 +124,24 @@ def tumbling_values(
 
     One shuffle (partitionBy key for row_number) + a map-side-combinable
     groupBy on (key, window_id); the per-group state is bounded by the
-    reference's n <= 4096 cap. Partial trailing windows are dropped by
-    default; with ``keep_partial=True`` they are NaN-padded at the back.
+    reference's n <= 4096 cap. Partial trailing windows are dropped.
     """
     order_cols = [order] if isinstance(order, str) else list(order)
-    rn = F.row_number().over(Window.partitionBy(key).orderBy(*order_cols))
-    with_id = df.select(
-        F.col(key).alias("series_key"),
-        ((rn - 1) / n).cast("long").alias("window_id"),
-        ((rn - 1) % n).alias("pos"),
-        _value_as_double(value).alias("v"),
-    )
-    grouped = with_id.groupBy("series_key", "window_id").agg(
+    rn = F.row_number().over(Window.partitionBy(key).orderBy(*order_cols)) - 1
+    # the key keeps its name until the end, so the groupBy reuses the
+    # row_number shuffle; rn gets its own projection, so one row_number
+    # serves both the window id and the position
+    rows = df.select(F.col(key), rn.alias("__rn"), _value_as_double(value).alias("__v"))
+    grouped = rows.groupBy(key, (F.col("__rn") / n).cast("long").alias("__wid")).agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s["v"]
-        ).alias("vals")
+            F.array_sort(F.collect_list(F.struct((F.col("__rn") % n).alias("__pos"), "__v"))),
+            lambda s: s["__v"],
+        ).alias("__vals")
     )
-    if keep_partial:
-        vals = F.concat(
-            F.col("vals"),
-            F.array_repeat(F.lit(_NAN), F.lit(n) - F.size("vals")),
-        )
-    else:
-        grouped = grouped.where(F.size("vals") == n)
-        vals = F.col("vals")
-    return grouped.select("series_key", "window_id", vals.alias(out))
+    return grouped.where(F.size("__vals") == n).select(
+        F.col(key).alias("series_key"), F.col("__wid").alias("window_id"),
+        F.col("__vals").alias(out),
+    )
 
 
 def _frame_words(rows: DataFrame, keys: list[str], w: int, c: int, out: str) -> DataFrame:
@@ -260,12 +193,14 @@ def tumbling_sax(
     order_cols = [order] if isinstance(order, str) else list(order)
     rn = F.row_number().over(Window.partitionBy(key).orderBy(*order_cols)) - 1
     # the key keeps its name until the end, so the builder's windows reuse
-    # the row_number shuffle instead of re-partitioning on an alias
-    rows = df.select(
+    # the row_number shuffle instead of re-partitioning on an alias; rn
+    # gets its own projection, so one row_number serves both ids
+    rows = df.select(F.col(key), rn.alias("__rn"), *_staged_values(value)).select(
         F.col(key),
-        (rn / n).cast("long").alias("__wid"),
-        ((rn % n) / (n // w)).cast("int").alias("frame_id"),
-        *_staged_values(value),
+        (F.col("__rn") / n).cast("long").alias("__wid"),
+        ((F.col("__rn") % n) / (n // w)).cast("int").alias("frame_id"),
+        "__vf",
+        "__vn",
     )
     words = _frame_words(rows, [key, "__wid"], w, c, out)
     if not keep_partial:

@@ -278,6 +278,59 @@ def test_topk_plan_evaluates_each_mindist_sum_once(spark, w):
     assert plan.count("element_at(") == 2 * w, plan
 
 
+def test_topk_plan_root_is_take_ordered_on_multi_file_input(spark, tmp_path):
+    """Unscorable words are dropped before scoring, so nothing sits above
+    the limit: over a scan of several partitions the executed plan's
+    root is TakeOrderedAndProject (per-partition top-k merged on the
+    driver) and no exchange runs. A filter above the limit would make
+    Spark shuffle the top-k to one partition first."""
+    path = str(tmp_path / "words")
+    spark.createDataFrame(
+        list(enumerate(["AAAA", "AAAB", None, "AAAZ", "HHHH", "BAAA"])),
+        "series_key int, sax_word string",
+    ).repartition(2).write.parquet(path)
+    words = spark.read.parquet(path)
+    assert len(words.inputFiles()) == words.rdd.getNumPartitions() == 2
+    top = topk_nearest(words, "AAAA", c=8, k=3, n=32, tiebreakers=["series_key"])
+    plan = top._jdf.queryExecution().executedPlan()
+    assert plan.nodeName() == "TakeOrderedAndProject", plan.toString()
+    assert "Exchange" not in plan.toString(), plan.toString()
+    assert [r.series_key for r in top.collect()] == [0, 1, 5]
+
+
+def test_window_operators_shuffle_once(spark, long_df):
+    """Each windowed operator hash-partitions on the series key once, as
+    the windows module promises, with AQE on and off; the row-numbered
+    ones compute row_number once."""
+    df, _ = long_df
+    kw = dict(key="key", order="seq", value="v")
+    ops = {
+        "sliding_sax": lambda: sliding_sax(df, n=8, w=4, c=8, **kw),
+        "tumbling_sax": lambda: tumbling_sax(df, n=8, w=4, c=8, **kw),
+        "whole_series_sax": lambda: whole_series_sax(df, w=4, c=8, **kw),
+        "tumbling_values": lambda: tumbling_values(df, n=8, **kw),
+    }
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        for aqe in ("true", "false"):
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            plans = {
+                name: op()._jdf.queryExecution().executedPlan().toString()
+                for name, op in ops.items()
+            }
+            exchanges = {
+                name: p.count("Exchange hashpartitioning") for name, p in plans.items()
+            }
+            assert exchanges == dict.fromkeys(ops, 1), (aqe, exchanges)
+            row_numbers = {
+                name: plans[name].count("row_number()")
+                for name in ("tumbling_sax", "whole_series_sax", "tumbling_values")
+            }
+            assert row_numbers == dict.fromkeys(row_numbers, 1), (aqe, row_numbers)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prior)
+
+
 def test_allpairs_matches_bruteforce(spark):
     rng = random.Random(21)
     c, w, n = 4, 4, 16
@@ -413,56 +466,6 @@ def test_mindist_overshoots_exact_distance_within_bound(spark):
     assert [(r["key_a"], r["key_b"]) for r in got] == [(1, 2)]
     assert abs(got[0]["exact_dist"] - exact) < 1e-9
     assert abs(got[0]["mindist"] - lb) < 1e-9
-
-
-class TestSlidingChunked:
-    def test_chunked_equals_plain(self, spark, sf_dir):
-        """Overlap-replicated chunk parallelism must be output-identical
-        to the single-partition-per-series plan."""
-        from pyspark.sql import functions as F
-        from symtseries_spark.operators import sliding_sax
-        from symtseries_spark.operators.windows import sliding_sax_chunked
-        from symtseries_spark.sources import load
-
-        events = load(spark, sf_dir, "events").where(F.col("user_id") < 15)
-        kwargs = dict(
-            key="user_id", order=["ts", "event_id"], value="value",
-            n=8, w=4, c=8,
-        )
-        plain = {
-            (r.user_id, r.event_id): r.sax_word
-            for r in sliding_sax(events, **kwargs).collect()
-        }
-        for chunk in (16, 64):  # chunk smaller than series length -> real splits
-            chunked = {
-                (r.user_id, r.event_id): r.sax_word
-                for r in sliding_sax_chunked(events, chunk=chunk, **kwargs).collect()
-            }
-            assert chunked == plain, chunk
-        # emit_partial=False parity
-        plain_full = {
-            (r.user_id, r.event_id): r.sax_word
-            for r in sliding_sax(events, emit_partial=False, **kwargs).collect()
-        }
-        chunked_full = {
-            (r.user_id, r.event_id): r.sax_word
-            for r in sliding_sax_chunked(
-                events, chunk=16, emit_partial=False, **kwargs
-            ).collect()
-        }
-        assert chunked_full == plain_full
-
-    def test_chunk_validates(self, spark, sf_dir):
-        import pytest as _pytest
-        from symtseries_spark.operators.windows import sliding_sax_chunked
-        from symtseries_spark.sources import load
-
-        with _pytest.raises(ValueError):
-            sliding_sax_chunked(
-                load(spark, sf_dir, "events"),
-                key="user_id", order=["ts"], value="value",
-                n=8, w=4, c=8, chunk=4,
-            )
 
 
 class TestNullHandling:

@@ -234,9 +234,10 @@ def test_per_row_compatibility_gates(spark):
     a fabricated descending-sequence array. Malformed words (NULL,
     empty, short, long, foreign letter) are NULL in the array, string
     and literal-pattern forms alike, with and without ANSI mode, and
-    never raise."""
+    never raise; topk_nearest's scorable-word predicate keeps exactly
+    the rows the pattern form scores."""
     from symtseries_spark.functions.sax import sax_word_mindist
-    from symtseries_spark.operators import mindist_to_pattern
+    from symtseries_spark.operators import mindist_to_pattern, topk_nearest
 
     c = 8
     rows = [
@@ -294,7 +295,7 @@ def test_per_row_compatibility_gates(spark):
     # NULL dist/above/below; valid words match pykernel bit for bit, for
     # n as an int, a column name, the 0 wildcard and None
     pattern = "HHHH"
-    words = [None, "", "AAA", "AAAAH", "AAAZ", "AAAI", "AAAa", "AAAA", "AAA#"]
+    words = [None, "", "AAA", "AAAAH", "AAAZ", "AAAI", "AAAa", "AAA\u00e9", "AAAA", "AAA#"]
     valid = {"AAAA", "AAA#"}
     wdf = spark.createDataFrame(
         [(i, x, 32) for i, x in enumerate(words)], "id int, wa string, n int"
@@ -330,6 +331,10 @@ def test_per_row_compatibility_gates(spark):
                         assert got == exp, (ansi, n, form, r)
                     else:
                         assert got == (None,) * 3, (ansi, n, form, r)
+            top = topk_nearest(wdf, pattern, c=c, k=len(words), word_col="wa", n=n,
+                               tiebreakers=["id"])
+            scored = {r["id"] for r in out if r["pat"]["dist"] is not None}
+            assert {r["id"] for r in top.collect()} == scored, (ansi, n)
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prior)
 
