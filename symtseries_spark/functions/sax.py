@@ -4,10 +4,10 @@ Everything here compiles to Catalyst expression trees — no Python
 UDFs, so the work scales with executors, not with the Python GIL. The
 array forms use built-in higher-order functions (``transform`` /
 ``aggregate`` / ``filter`` / ``zip_with`` / ``slice``), which Spark
-evaluates interpreted, outside whole-stage codegen; the string and
-pattern forms at the end of the module unroll the plan-time (w, c) into
-flat scalar expressions that do stay inside it (see "codegen-path
-variants" below).
+evaluates interpreted, outside whole-stage codegen; the MINDIST
+renderer at the end of the module unrolls the plan-time (w, c) into one
+flat SQL expression over SAX-string columns that does stay inside it
+(see "codegen-path variant" below).
 
 Parameters ``w`` (word length) and ``c`` (cardinality) are plan-time
 Python ints: the breakpoint and distance tables become literal arrays
@@ -236,8 +236,9 @@ def _contrib_const(c: int) -> tuple[tuple[float | None, ...], tuple[float | None
     """The MINDIST pair table of cardinality ``c``, built at plan time
     (src/symtseries.c:585-636): flat row-major (c+2)x(c+2) tuples of the
     squared distance a letter pair adds to ``above`` and to ``below``,
-    indexed ``slot_a * (c+2) + slot_b`` (slots as in
-    :func:`_letter_slot`). The '#' substitution (a missing letter counts
+    indexed ``slot_a * (c+2) + slot_b``, where a letter's slot is 1..c
+    for the letters, c+1 for '#' and 0 for anything else (a foreign
+    letter, a NULL element). The '#' substitution (a missing letter counts
     as the bucket furthest from the other side) and the orientation
     (``above`` when a's bucket is the higher one) are baked into the
     values. Row and column 0 are NULL: one invalid letter makes the
@@ -257,41 +258,6 @@ def _contrib_const(c: int) -> tuple[tuple[float | None, ...], tuple[float | None
             k = (la + 1) * size + lb + 1
             above[k], below[k] = (d2, 0.0) if la2 > lb2 else (0.0, d2)
     return tuple(above), tuple(below)
-
-
-def _letter_slot(word: Column, i: int, c: int) -> Column:
-    """Pair-table slot of the ``i``-th letter (1-based) of a SAX string:
-    1..c for the letters, c+1 for '#', 0 for anything else (NULL word,
-    foreign letter). Never NULL and never out of range, so the
-    ``element_at`` lookups cannot raise under ANSI mode."""
-    alphabet = F.lit(LETTERS[:c] + MISSING)
-    return F.coalesce(F.instr(alphabet, F.substring(word, i, 1)), F.lit(0))
-
-
-def _mindist_struct(
-    above: Column,
-    below: Column,
-    *,
-    w: Column,
-    len_a: Column,
-    len_b: Column,
-    n_a: Column | int | None,
-    n_b: Column | int | None,
-) -> Column:
-    """The one validity gate and scale of every MINDIST form: NULL
-    unless both words have ``w`` > 0 letters and their n values agree
-    (:func:`_resolve_n`); else STRUCT(dist, above, below) scaled by
-    √(n/w) (src/symtseries.c:591-636)."""
-    n_eff, conflict = _resolve_n(n_a, n_b, w)
-    comp = F.sqrt(n_eff.cast("double") / w)
-    return F.when(
-        (w > 0) & (len_a == w) & (len_b == w) & ~conflict,
-        F.struct(
-            (comp * F.sqrt(above + below)).alias("dist"),
-            (comp * F.sqrt(above)).alias("above"),
-            (comp * F.sqrt(below)).alias("below"),
-        ),
-    )
 
 
 def sax_mindist_parts(
@@ -340,11 +306,20 @@ def sax_mindist_parts(
             (acc["be"] + F.element_at(below_t, k)).alias("be"),
         ),
     )
+    # NULL unless both arrays have w > 0 elements and their n values
+    # agree; else the sums scaled by √(n/w) (src/symtseries.c:591-636)
     w = F.size(a)
+    n_eff, conflict = _resolve_n(n, n_b, w)
+    comp = F.sqrt(n_eff.cast("double") / w)
     return _let(
         sums,
-        lambda s: _mindist_struct(
-            s["ab"], s["be"], w=w, len_a=w, len_b=F.size(b), n_a=n, n_b=n_b
+        lambda s: F.when(
+            (w > 0) & (F.size(b) == w) & ~conflict,
+            F.struct(
+                (comp * F.sqrt(s["ab"] + s["be"])).alias("dist"),
+                (comp * F.sqrt(s["ab"])).alias("above"),
+                (comp * F.sqrt(s["be"])).alias("below"),
+            ),
         ),
     )
 
@@ -443,82 +418,52 @@ def sax_coarsen(word: Column, c: int, c2: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# codegen-path variants
+# codegen-path variant
 #
 # The array/HOF kernels above are the general form, but Spark evaluates
 # higher-order functions interpreted (outside whole-stage codegen), which
-# costs ~µs per call — too slow for per-row sliding windows or per-pair
-# all-pairs joins at scale. The string forms below unroll the fixed
-# plan-time (w, c) into flat scalar expressions (substring/instr/
-# element_at on literal arrays), which codegen compiles to tight JVM
-# loops. They share the pair table, letter slot and gate of
-# :func:`sax_mindist_parts`.
+# costs ~µs per call — too slow for per-row probes or per-pair all-pairs
+# joins at scale. The renderer below unrolls the fixed plan-time (w, c)
+# into flat scalar expressions (substring/instr/element_at on literal
+# arrays), which codegen compiles to tight JVM loops. It shares the pair
+# table, letter slot and gate of :func:`sax_mindist_parts`.
 
 
-def sax_word_mindist(
-    word_a: Column,
-    word_b: Column,
+def _mindist_sums(
+    word_col: str,
     *,
-    w: int,
     c: int,
-    n: Column | int | None = None,
-    n_b: Column | int | None = None,
-) -> Column:
-    """MINDIST between two SAX-string columns of known (w, c) ->
-    STRUCT(dist, above, below), unrolled per position — codegen-friendly
-    for all-pairs joins.
-
-    Each position maps its two letters to pair-table slots
-    (:func:`_letter_slot`) and reads the above/below contributions from
-    the plan-time flat tables of :func:`_contrib_const` through one
-    shared pair index (src/symtseries.c:585-636). The '#' rule and the
-    orientation live in the table values, not in per-position CASE
-    logic, which keeps the whole-stage method small (the CASE-unrolled
-    form made the w=4/c=8 all-pairs plan's first run swing by seconds on
-    cold code caches). ``n``/``n_b`` follow the wildcard and per-row
-    conflict rules of :func:`sax_mindist_parts`.
-
-    NULL/malformed contract: a NULL word, a word whose length is not
-    ``w``, or conflicting nonzero n values give a NULL struct; a letter
-    outside the first ``c`` letters and '#' makes dist, above and below
-    NULL. No input raises.
-    """
-    size = c + 2
-    above_t, below_t = (F.array(*map(F.lit, t)) for t in _contrib_const(c))
-    above = below = F.lit(0.0)
-    for i in range(1, w + 1):
-        k = _letter_slot(word_a, i, c) * size + _letter_slot(word_b, i, c) + 1
-        above = above + F.element_at(above_t, k)
-        below = below + F.element_at(below_t, k)
-    return _mindist_struct(
-        above, below, w=F.lit(w), len_a=F.length(word_a), len_b=F.length(word_b),
-        n_a=n, n_b=n_b,
-    )
-
-
-def _pattern_mindist(
-    word_col: str, pattern: str, *, c: int, n: str | int | None = None
+    n: str | int | None = None,
+    pattern: str | None = None,
+    other_col: str | None = None,
+    w: int | None = None,
 ) -> Column:
     """The per-row sums of the MINDIST from the SAX-string column named
-    ``word_col`` to a literal ``pattern`` -> STRUCT(above, below, scale),
-    NULL unless the word has the pattern's length; the expression behind
-    :func:`..operators.search.mindist_to_pattern`, which finishes
+    ``word_col`` to a right operand -> STRUCT(above, below, scale): the
+    expression behind :func:`..operators.search.mindist_to_pattern` and
+    :func:`..operators.search.allpairs_within`, which finish
     ``dist = scale * sqrt(above + below)``, ``scale * sqrt(above)`` and
-    ``scale * sqrt(below)`` in a second projection. The pattern is
-    parsed eagerly (``ValueError`` on a bad letter) and is n = 0, so each
-    row's ``n`` (a column name, an int, or ``None`` for n = w) drives
-    ``scale`` = √(n/w). Each position reads the pattern letter's column
-    of the :func:`_contrib_const` tables as one (c+2)-entry literal array
-    indexed by the word letter's slot — a flat sum that stays inside
-    whole-stage codegen. Same slot rule, gate, scale and left-folded
-    sums as :func:`sax_word_mindist`, so the values are bit-identical.
+    ``scale * sqrt(below)`` in a second projection.
+
+    The right operand is either a literal ``pattern`` (parsed eagerly,
+    ``ValueError`` on a bad letter; its w is the pattern's length) or
+    the SAX-string column named ``other_col`` of length ``w``. Either
+    is n = 0, so each row's ``n`` (a column name, an int, or ``None``
+    for n = w) drives ``scale`` = √(n/w) — the wildcard rule of
+    :func:`_resolve_n`. The struct is NULL unless the word (and the
+    other column) has w letters; a letter outside the first ``c`` and
+    '#' has slot 0, whose table entries are NULL. Each position reads
+    the :func:`_contrib_const` tables: a pattern reads its letter's
+    (c+2)-entry column at the word letter's slot, a column reads the
+    flat table at both letters' pair index (src/symtseries.c:585-636).
+    The sums fold left from 0.0 in position order, so the values are
+    bit-identical to :func:`sax_mindist_parts`'s fold.
 
     Each sum appears once (2w lookups): Catalyst does not inline a
     non-cheap struct that the finishing projection reads several times,
     so a row evaluates each sum once. ``dist`` is not built inside the
     struct: spelled out of both sums it would hold each sum twice, and a
-    NULL filter pushed below the projection would add a third copy (6w
-    lookups, ~2,100 lines of generated Java at w = 4).
+    filter pushed below the projection would add a third copy.
 
     The expression is rendered as ONE SQL string and handed to
     ``F.expr`` once, because a probe's fixed cost is driver<->JVM round
@@ -536,18 +481,34 @@ def _pattern_mindist(
     def dbl(v: float | None) -> str:
         return "CAST(NULL AS DOUBLE)" if v is None else repr(float(v)) + "D"
 
+    def slot(col: str, i: int) -> str:
+        # never NULL, never out of range: element_at cannot raise under ANSI
+        return f"coalesce(instr('{LETTERS[:c]}{MISSING}', substring({col}, {i}, 1)), 0)"
+
     word = ident(word_col)
     size = c + 2
     tables = _contrib_const(c)
-    indices = parse(pattern, c)
-    w = len(indices)
+    if other_col is None:
+        indices = parse(pattern, c)
+        w = len(indices)
+        gate = f"length({word}) = {w}"
+
+        def lookup(k: int, i: int) -> str:  # the pattern letter's column
+            col = ", ".join(map(dbl, tables[k][indices[i - 1] + 1 :: size]))
+            return f"element_at(array({col}), {slot(word, i)} + 1)"
+    else:
+        other = ident(other_col)
+        gate = f"length({word}) = {w} AND length({other}) = {w}"
+        flat = [", ".join(map(dbl, t)) for t in tables]
+
+        def lookup(k: int, i: int) -> str:  # the flat table at the pair index
+            pair = f"{slot(word, i)} * {size} + {slot(other, i)} + 1"
+            return f"element_at(array({flat[k]}), {pair})"
     above = below = "0.0D"
-    for i, lb in enumerate(indices, start=1):
-        slot = f"coalesce(instr('{LETTERS[:c]}{MISSING}', substring({word}, {i}, 1)), 0) + 1"
-        ab, be = (f"array({', '.join(map(dbl, t[lb + 1 :: size]))})" for t in tables)
-        above = f"({above} + element_at({ab}, {slot}))"
-        below = f"({below} + element_at({be}, {slot}))"
-    # the wildcard rule of _resolve_n with the pattern's n = 0
+    for i in range(1, w + 1):
+        above = f"({above} + {lookup(0, i)})"
+        below = f"({below} + {lookup(1, i)})"
+    # the wildcard rule of _resolve_n with the right operand's n = 0
     if isinstance(n, str):
         n0 = f"coalesce(CAST({ident(n)} AS BIGINT), 0)"
         n_eff = f"CASE WHEN {n0} > 0 THEN {n0} ELSE {w} END"
@@ -555,6 +516,6 @@ def _pattern_mindist(
         n_eff = str(n if n is not None and n > 0 else w)
     comp = f"sqrt(CAST({n_eff} AS DOUBLE) / {w})"
     return F.expr(
-        f"CASE WHEN length({word}) = {w} THEN named_struct("
+        f"CASE WHEN {gate} THEN named_struct("
         f"'above', {above}, 'below', {below}, 'scale', {comp}) END"
     )

@@ -18,13 +18,22 @@ from pyspark.sql import functions as F
 
 from .. import pykernel as pk
 from ..constants import LETTERS, MINDIST_OVERSHOOT, MISSING, validate_params
-from ..functions.sax import (
-    _pattern_mindist,
-    sax_coarsen,
-    sax_word_mindist,
-    sax_zeuclidean,
-    sax_znorm,
-)
+from ..functions.sax import _mindist_sums, sax_coarsen, sax_zeuclidean, sax_znorm
+
+
+def _finish_mindist(scored: DataFrame, dist: str, above: str, below: str) -> DataFrame:
+    """Finish the ``dist``, ``above`` and ``below`` columns from the
+    ``__m`` STRUCT(above, below, scale) of :func:`_mindist_sums`, and
+    drop ``__m``. A projection of its own, as SQL text, so each sum is
+    evaluated once per row and building it costs a fixed few Py4J
+    calls."""
+    return scored.withColumns(
+        {
+            dist: F.expr("`__m`.scale * sqrt(`__m`.above + `__m`.below)"),
+            above: F.expr("`__m`.scale * sqrt(`__m`.above)"),
+            below: F.expr("`__m`.scale * sqrt(`__m`.below)"),
+        }
+    ).drop("__m")
 
 
 def mindist_to_pattern(
@@ -53,25 +62,15 @@ def mindist_to_pattern(
     its inputs.
 
     Two projections: the first evaluates each per-position sum once per
-    row (:func:`_pattern_mindist`), the second finishes the three
-    columns from them, as SQL text so building it costs a fixed few
-    Py4J calls.
+    row (:func:`_mindist_sums`), the second finishes the three columns
+    from them (:func:`_finish_mindist`).
     """
     if n is not None and not isinstance(n, (str, int)):
         raise TypeError(
             f"n must be a column name, an int or None, not {type(n).__name__}"
         )
-    return (
-        words.withColumn("__m", _pattern_mindist(word_col, pattern, c=c, n=n))
-        .withColumns(
-            {
-                out: F.expr("`__m`.scale * sqrt(`__m`.above + `__m`.below)"),
-                f"{out}_above": F.expr("`__m`.scale * sqrt(`__m`.above)"),
-                f"{out}_below": F.expr("`__m`.scale * sqrt(`__m`.below)"),
-            }
-        )
-        .drop("__m")
-    )
+    sums = _mindist_sums(word_col, pattern=pattern, c=c, n=n)
+    return _finish_mindist(words.withColumn("__m", sums), out, f"{out}_above", f"{out}_below")
 
 
 def topk_nearest(
@@ -373,19 +372,12 @@ def allpairs_within(
         & (F.length("word_a") == F.length("word_b"))
         & (F.col("n_a") == F.col("n_b"))
     )
-    parts = sax_word_mindist(F.col("word_a"), F.col("word_b"), w=w, c=c, n=F.col("n_a"))
+    # the join requires n_a = n_b, so the one-sided n rule is exact
+    sums = _mindist_sums("word_a", other_col="word_b", w=w, c=c, n="n_a")
     word_pairs = (
-        da.join(db, cond)
-        .withColumn("__m", parts)
-        .where(F.col("__m")["dist"] <= delta)
-        .select(
-            "word_a",
-            "word_b",
-            "n_a",
-            F.col("__m")["dist"].alias("__d"),
-            F.col("__m")["above"].alias("__ab"),
-            F.col("__m")["below"].alias("__be"),
-        )
+        _finish_mindist(da.join(db, cond).withColumn("__m", sums), "__d", "__ab", "__be")
+        .where(F.col("__d") <= delta)
+        .select("word_a", "word_b", "n_a", "__d", "__ab", "__be")
     )
 
     # 2) expand to key pairs: two equi-joins against the broadcast pair

@@ -143,7 +143,13 @@ def sliding_sax_stream(
     """Streaming twin of :func:`..operators.windows.sliding_sax`: for
     every incoming event, emit ``(key, *order, value, word)`` where word
     covers the last ``n`` values of that series (NaN-padded while the
-    series is shorter than ``n``)."""
+    series is shorter than ``n``).
+
+    The word equals the batch word for every value, NaN and ±Inf
+    included, but a NaN ``value`` is echoed as NULL: pyspark's Arrow
+    writer masks NaN as null on the way out of the state handler, and
+    the handler cannot tell the two apart (a NULL value reads as NaN
+    too). ±Inf is echoed as is."""
     validate_params(n, w, c)
     key_type = events.schema[key].dataType
     out_schema = StructType(

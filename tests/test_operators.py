@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from symtseries_spark import pykernel as pk
 from symtseries_spark.constants import MINDIST_OVERSHOOT
-from symtseries_spark.functions.sax import sax_word_mindist
 from symtseries_spark.operators import (
     allpairs_refined,
     allpairs_within,
@@ -191,21 +190,27 @@ def test_codegen_mindist_variants_match_pykernel(spark):
             )
             for _ in range(120)
         ]
-        df = spark.createDataFrame(pairs, "wa string, wb string, n int")
-        got = df.select(
-            "wa", "wb", "n",
-            sax_word_mindist(F.col("wa"), F.col("wb"), w=w, c=c, n=F.col("n")).alias("m"),
-        ).collect()
+        # the two-column form behind allpairs_within: every pair of words
+        # with equal n, each random pair among them as keys (2j, 2j+1)
+        rows = [(2 * j + s, pair[s], pair[2]) for j, pair in enumerate(pairs) for s in (0, 1)]
+        n_of = {k: n for k, _, n in rows}
+        words = spark.createDataFrame(rows, "series_key int, sax_word string, n int")
+        got = allpairs_within(words, w=w, c=c, delta=float("inf")).collect()
+        assert {(2 * j, 2 * j + 1) for j in range(len(pairs))} <= {
+            (r["key_a"], r["key_b"]) for r in got
+        }
         for r in got:
+            n = n_of[r["key_a"]]
+            assert n_of[r["key_b"]] == n, r
             exp = pk.mindist_parts(
-                pk.parse(r["wa"], c), pk.parse(r["wb"], c), c=c, n_a=r["n"], n_b=r["n"]
+                pk.parse(r["word_a"], c), pk.parse(r["word_b"], c), c=c, n_a=n, n_b=n
             )
-            assert abs(r["m"]["dist"] - exp[0]) < 1e-9
-            assert abs(r["m"]["above"] - exp[1]) < 1e-9
-            assert abs(r["m"]["below"] - exp[2]) < 1e-9
+            assert abs(r["mindist"] - exp[0]) < 1e-9
+            assert abs(r["above"] - exp[1]) < 1e-9
+            assert abs(r["below"] - exp[2]) < 1e-9
 
-        # the literal-pattern form (SQL text) against the string form
-        # (Columns) and pykernel, bit for bit, for every spelling of n
+        # the literal-pattern form (SQL text) against pykernel, bit for
+        # bit, for every spelling of n
         for w in (4, 16):
             rows = [
                 (
@@ -219,15 +224,7 @@ def test_codegen_mindist_variants_match_pykernel(spark):
             pattern = "".join(rng.choice(alphabet) for _ in range(w))
             for n in ("n", 2 * w, 0, None):
                 got2 = mindist_to_pattern(pdf, pattern, c=c, word_col="wa", n=n).select(
-                    "wa",
-                    "n",
-                    "mindist",
-                    "mindist_above",
-                    "mindist_below",
-                    sax_word_mindist(
-                        F.col("wa"), F.lit(pattern), w=w, c=c,
-                        n=F.col("n") if n == "n" else n,
-                    ).alias("s"),
+                    "wa", "n", "mindist", "mindist_above", "mindist_below"
                 ).collect()
                 for r in got2:
                     n_a = (r["n"] if n == "n" else n) or 0
@@ -235,8 +232,7 @@ def test_codegen_mindist_variants_match_pykernel(spark):
                         pk.parse(r["wa"], c), pk.parse(pattern, c), c=c, n_a=n_a
                     )
                     pat = (r["mindist"], r["mindist_above"], r["mindist_below"])
-                    word = (r["s"]["dist"], r["s"]["above"], r["s"]["below"])
-                    assert pat == word == exp, (c, w, n, pattern, r)
+                    assert pat == exp, (c, w, n, pattern, r)
 
 
 def test_pattern_n_rejects_column(spark):
@@ -276,6 +272,22 @@ def test_topk_plan_evaluates_each_mindist_sum_once(spark, w):
                        tiebreakers=["series_key"])
     plan = top._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("element_at(") == 2 * w, plan
+
+
+@pytest.mark.parametrize("w, c", [(4, 8), (8, 16)])
+@pytest.mark.parametrize("n_col", ["n", None])
+def test_allpairs_plan_evaluates_each_mindist_sum_once(spark, w, c, n_col):
+    """The optimized all-pairs plan holds 4w per-position MINDIST
+    lookups: 2w in the nested-loop condition (the ``dist <= delta`` test
+    every distinct word pair pays) and 2w in the projection over the
+    surviving pairs, not the 6w of a struct that spells ``dist`` out of
+    both sums."""
+    words = spark.createDataFrame(
+        [(1, "A" * w, 32), (2, "B" * w, 32)], "series_key int, sax_word string, n int"
+    )
+    pairs = allpairs_within(words, w=w, c=c, delta=1.0, n_col=n_col)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("element_at(") == 4 * w, plan
 
 
 def test_topk_plan_root_is_take_ordered_on_multi_file_input(spark, tmp_path):

@@ -232,11 +232,10 @@ def test_per_row_compatibility_gates(spark):
     NULL, the 0/NULL wildcard adopts the other side's n, both-wildcard
     means compression 1 — and empty/NULL words parse to NULL instead of
     a fabricated descending-sequence array. Malformed words (NULL,
-    empty, short, long, foreign letter) are NULL in the array, string
-    and literal-pattern forms alike, with and without ANSI mode, and
+    empty, short, long, foreign letter) are NULL in the array and
+    literal-pattern forms alike, with and without ANSI mode, and
     never raise; topk_nearest's scorable-word predicate keeps exactly
     the rows the pattern form scores."""
-    from symtseries_spark.functions.sax import sax_word_mindist
     from symtseries_spark.operators import mindist_to_pattern, topk_nearest
 
     c = 8
@@ -265,24 +264,18 @@ def test_per_row_compatibility_gates(spark):
                 n=F.col("na"),
                 n_b=F.col("nb"),
             ).alias("arr"),
-            sax_word_mindist(
-                F.col("wa"), F.col("wb"), w=2, c=c,
-                n=F.col("na"), n_b=F.col("nb"),
-            ).alias("lit"),
         ).collect()
     }
     for i, (wa, wb, na, nb, expect_null) in enumerate(rows):
         r = got[i]
         if expect_null:
             assert r["arr"] is None, (i, r)
-            assert r["lit"] is None, (i, r)
         else:
             exp = pk.mindist_parts(
                 pk.parse(wa, c), pk.parse(wb, c), c=c,
                 n_a=na or 0, n_b=nb or 0,
             )
             assert abs(r["arr"]["dist"] - exp[0]) < 1e-5, (i, r, exp)
-            assert abs(r["lit"]["dist"] - exp[0]) < 1e-5, (i, r, exp)
 
     parsed = spark.createDataFrame(
         [("",), (None,), ("FC",)], "w string"
@@ -313,14 +306,13 @@ def test_per_row_compatibility_gates(spark):
                     F.col("mindist_above").alias("above"),
                     F.col("mindist_below").alias("below"),
                 ).alias("pat"),
-                sax_word_mindist(F.col("wa"), F.lit(pattern), w=4, c=c, n=n_col).alias("str"),
                 sax_mindist_parts(
                     sax_parse(F.col("wa"), c), sax_parse(F.lit(pattern), c), c=c, n=n_col
                 ).alias("arr"),
             ).collect()
             assert len(out) == len(words)
             for r in out:
-                for form in ("pat", "str", "arr"):
+                for form in ("pat", "arr"):
                     m = r[form]
                     got = (None,) * 3 if m is None else (m["dist"], m["above"], m["below"])
                     if r["wa"] in valid:
@@ -369,7 +361,9 @@ def test_zeuclidean_fixed_n_matches_generic(spark):
 def test_one_pair_table_and_one_letter_rule():
     """Under ``functions/`` and ``operators/``, the MINDIST table is read
     only by the pair-table builder and the breakpoints only by the letter
-    rule: every distance form and every encoder goes through those two."""
+    rule: every distance form and every encoder goes through those two.
+    The pair table has two builders of MINDIST on top of it: one
+    unrolled form (the SQL renderer) and one array form."""
     import ast
     import pathlib
 
@@ -378,6 +372,7 @@ def test_one_pair_table_and_one_letter_rule():
     owners = {"MINDIST_LUT": {"_contrib_const"}, "BREAKPOINTS": {"frame_letter_index"}}
     root = pathlib.Path(symtseries_spark.__file__).parent
     readers: dict[str, set[str]] = {name: set() for name in owners}
+    table_callers: set[str] = set()
 
     def visit(node, scope):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -389,6 +384,10 @@ def test_one_pair_table_and_one_letter_rule():
         )
         if name in owners:
             readers[name].add(scope or "<module>")
+        if isinstance(node, ast.Call):
+            func = node.func
+            if getattr(func, "id", getattr(func, "attr", None)) == "_contrib_const":
+                table_callers.add(scope or "<module>")
         for child in ast.iter_child_nodes(node):
             visit(child, scope)
 
@@ -396,3 +395,4 @@ def test_one_pair_table_and_one_letter_rule():
         for path in sorted((root / sub).glob("*.py")):
             visit(ast.parse(path.read_text()), None)
     assert readers == owners
+    assert table_callers == {"_mindist_sums", "sax_mindist_parts"}

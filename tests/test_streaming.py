@@ -467,6 +467,26 @@ class TestShardedSlidingStream:
             shutil.rmtree(root, ignore_errors=True)
 
 
+def test_sliding_stream_echoes_nan_value_as_null(spark, tmp_path):
+    """The stream's words equal the batch words over NaN, NULL and
+    ±Inf values, across two micro-batches; the echoed value is NULL
+    for NaN (pyspark's Arrow writer masks it) and ±Inf is kept."""
+    vals = [1.0, math.nan, 3.0, None, math.inf, 2.0, -math.inf]
+    df = spark.createDataFrame(
+        [(1, t, v, t // 4) for t, v in enumerate(vals)], "k int, t int, v double, b int"
+    )
+    kw = dict(key="k", order=["t"], value="v", n=4, w=2, c=4)
+    rows = _replay_batches(spark, df, str(tmp_path), lambda s: sliding_sax_stream(s, **kw))
+    got = {r.t: r for r in rows}
+    batch = {r.t: r for r in sliding_sax(df, **kw).collect()}
+    assert sorted(got) == sorted(batch) == list(range(len(vals)))
+    assert {t: r.sax_word for t, r in got.items()} == {t: r.sax_word for t, r in batch.items()}
+    assert math.isnan(batch[1].v) and got[1].v is None
+    assert batch[3].v is None and got[3].v is None
+    for t in (0, 2, 4, 5, 6):
+        assert got[t].v == batch[t].v == vals[t]
+
+
 class TestKeyedStateHelper:
     @pytest.mark.parametrize("shards", [7, 16, 64])
     def test_integer_min_hash_lands_in_range(self, spark, shards):
