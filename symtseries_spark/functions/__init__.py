@@ -6,7 +6,6 @@ from .sax import (
     sax_encode,
     sax_format,
     sax_letters,
-    sax_mindist,
     sax_mindist_parts,
     sax_parse,
     sax_parse_literal,
@@ -39,7 +38,6 @@ __all__ = [
     "sax_encode",
     "sax_format",
     "sax_letters",
-    "sax_mindist",
     "sax_mindist_parts",
     "sax_parse",
     "sax_parse_literal",

@@ -387,18 +387,6 @@ def sax_zeuclidean(za: Column, zb: Column, n: int | None = None) -> Column:
     ).otherwise(hof)
 
 
-def sax_mindist(
-    a: Column,
-    b: Column,
-    *,
-    c: int,
-    n: Column | int | None = None,
-    n_b: Column | int | None = None,
-) -> Column:
-    """Scalar MINDIST (the reference's ``sts_mindist`` wrapper)."""
-    return sax_mindist_parts(a, b, c=c, n=n, n_b=n_b)["dist"]
-
-
 def sax_coarsen(word: Column, c: int, c2: int) -> Column:
     """Reduce a SAX word's cardinality from ``c`` to ``c2`` (both powers
     of two, ``c2 | c``) — the iSAX idea: the reference's breakpoint

@@ -271,9 +271,12 @@ def isax_topk(
     yet land in different buckets (at c=8, ``AAAD``/``AAAE`` coarsen to
     ``AAAB``/``AAAC`` at c=4), so the prune can drop exact matches and
     return fewer than ``k`` rows. Ranking is exact only within the bucket.
-    The prefilter is a plan-time string constant -> parquet-pushable
-    predicate; the scan reads ~1/coarse_c^w of the data. ``n`` is as in
-    :func:`mindist_to_pattern`."""
+    The prune compares ``translate(word)`` with a plan-time constant,
+    which Spark does not push into a parquet scan: the scan still reads
+    every row, and the prune only keeps the rows outside the bucket from
+    being scored. To skip files of data at rest, read the pattern's
+    bucket chain with :func:`..sources.read_words_multilevel` first.
+    ``n`` is as in :func:`mindist_to_pattern`."""
     coarse_pattern = pk.coarsen(pattern, c, coarse_c)
     pruned = words.where(
         sax_coarsen(F.col(word_col), c, coarse_c) == coarse_pattern

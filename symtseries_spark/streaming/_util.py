@@ -13,10 +13,11 @@ runs that one kernel in either state layout:
 * ``shards=None``: one state row per key, holding that key's value in
   the stream's per-key schema. The kernel sees one key's rows.
 * ``shards=N``: rows are hash-sharded into N state keys and each shard
-  keeps the map of all its keys. The kernel runs once per shard instead
-  of once per key, which is what a micro-batch touching many keys pays
-  for: each handler call carries its own Arrow chunk, pandas frame and
-  state round trip.
+  keeps the map of all its keys, as one array per key column and one
+  per value field. The kernel runs once per shard instead of once per
+  key, which is what a micro-batch touching many keys pays for: each
+  handler call carries its own Arrow chunk, pandas frame and state
+  round trip.
 
 Map keys are the key column's value (a tuple for several key columns),
 map values are the per-key state field (a tuple for several fields),
@@ -26,10 +27,9 @@ all plain Python scalars.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ArrayType, IntegralType, StructField, StructType
@@ -44,40 +44,6 @@ def shard_of(h: Column, shards: int) -> Column:
     ``abs(h) % shards`` is negative for ``Integer.MIN_VALUE``, whose
     absolute value overflows back to itself."""
     return F.pmod(h, F.lit(shards))
-
-
-@dataclass(frozen=True)
-class ShardLayout:
-    """How a shard's ``{key -> value}`` map is stored: the state schema
-    and the conversions between a state row and the map."""
-
-    schema: StructType
-    decode: Callable[[Row], dict]
-    encode: Callable[[dict], tuple]
-
-
-def columnar_layout(key_fields: list[StructField], value: StructType) -> ShardLayout:
-    """One array per key column and one per value field, named after
-    them. Flat arrays of scalars: ``GroupState`` passes them to the JVM
-    without converting element by element."""
-    nk, nv = len(key_fields), len(value.fields)
-
-    def columns(items, n: int) -> list[list]:
-        items = list(items)
-        return [items] if n == 1 else [[t[i] for t in items] for i in range(n)]
-
-    def decode(row: Row) -> dict:
-        ks = row[0] if nk == 1 else zip(*row[:nk])
-        vs = row[nk] if nv == 1 else zip(*row[nk:])
-        return dict(zip(ks, vs))
-
-    return ShardLayout(
-        StructType(
-            [StructField(f.name, ArrayType(f.dataType)) for f in [*key_fields, *value.fields]]
-        ),
-        decode,
-        lambda m: (*columns(m.keys(), nk), *columns(m.values(), nv)),
-    )
 
 
 class _StateMap(dict):
@@ -99,19 +65,20 @@ def keyed_state_stream(
     order: list[str],
     out_schema: StructType,
     shards: int | None,
-    value_schema: StructType | None = None,
-    layout: ShardLayout | None = None,
+    value_schema: StructType,
 ) -> DataFrame:
     """Run ``kernel`` over ``rows`` with ``{key -> value}`` state per
     ``keys`` (see the module docstring).
 
     ``value_schema`` is the per-key state schema. With ``shards=N`` the
     shard key is ``pmod(hash(*keys), N)``, and a shard's map is stored
-    in ``layout`` (default: :func:`columnar_layout` of
-    ``value_schema``). A shard the batch touches and the kernel changes
-    rewrites its whole map: O(keys per shard) per batch. The shard
-    count is part of the plan and of the checkpoint, so it cannot
-    change between restarts."""
+    as one array per key column and one per value field, named after
+    them. An array of scalars, ``BinaryType`` values included, crosses
+    to the JVM without being converted element by element. A shard the
+    batch touches and the kernel changes rewrites its whole map:
+    O(keys per shard) per batch. The shard count and the state schema
+    are part of the plan and of the checkpoint, so neither can change
+    between restarts."""
     # pandas turns a nullable integer column into float64, which rounds
     # keys past 2**53 in a shard that also holds a NULL key; integer
     # keys travel NULL-free next to a NULL flag instead
@@ -158,20 +125,28 @@ def keyed_state_stream(
 
         grouped, state_schema = rows.groupBy(*keys), value_schema
     else:
-        if layout is None:
-            layout = columnar_layout([rows.schema[k] for k in keys], value_schema)
+        nk, nv = len(keys), len(value_schema.fields)
+
+        def columns(items, n: int) -> list[list]:
+            items = list(items)
+            return [items] if n == 1 else [[t[i] for t in items] for i in range(n)]
 
         def handle(_key, pdfs, state: GroupState) -> Iterator[pd.DataFrame]:
             pdf = sorted_rows(pdfs)
             if pdf is None:
                 return
             del pdf[_SHARD]
-            m = _StateMap(layout.decode(state.get) if state.exists else {})
+            m = _StateMap()
+            if state.exists:
+                row = state.get
+                ks = row[0] if nk == 1 else zip(*row[:nk])
+                vs = row[nk] if nv == 1 else zip(*row[nk:])
+                m.update(zip(ks, vs))
             out = kernel(pdf, m)
             if out is not None:
                 yield out
             if m.changed:
-                state.update(layout.encode(m))
+                state.update((*columns(m.keys(), nk), *columns(m.values(), nv)))
 
         grouped = rows.select(
             *[
@@ -180,7 +155,12 @@ def keyed_state_stream(
             ],
             shard_of(F.hash(*keys), shards).alias(_SHARD),
         ).groupBy(_SHARD)
-        state_schema = layout.schema
+        state_schema = StructType(
+            [
+                StructField(f.name, ArrayType(f.dataType))
+                for f in [*[rows.schema[k] for k in keys], *value_schema.fields]
+            ]
+        )
     return grouped.applyInPandasWithState(
         handle,
         outputStructType=out_schema,

@@ -16,18 +16,29 @@ semantics with ``applyInPandasWithState``:
 Checkpointing of the state (the reference's ``serialize_sax``,
 lua/lua_sax.c:293-342) comes free from the streaming checkpoint dir.
 
-The word computation reuses the batch path's breakpoint tables, so
-batch ≡ streaming by construction (the reference's own metamorphic
-test, src/symtseries.c:816-850).
+Every SAX path letters a frame from the same partials (sum and non-NaN
+count) by the same rule, ``functions/sax.py::frame_letter_index``, but
+each computes the window statistics its own way: this module with
+sequential two-pass NumPy sums, ``pykernel.mu_std`` with ``math.fsum``,
+and ``sliding_sax`` with Spark's ``avg``/``stddev_pop``. So stream and
+batch words (the reference's own metamorphic test,
+src/symtseries.c:816-850) can differ only where z lies within rounding
+of a breakpoint. ``tests/test_streaming.py`` checks this against
+``pykernel`` (``TestEncodeWindowsKernel``,
+``TestShardedSlidingStream``) and against ``sliding_sax``
+(``TestStreamingParity``, ``test_sliding_stream_echoes_nan_value_as_null``).
 
 Scale notes.
 
 * Layout: series keys are hash-sharded into a fixed 16 state keys
   (:data:`_SHARDS`, ``pmod(hash(key), 16)``). Each shard stores its
-  series' keys as one array plus all their buffers packed into one
-  float64 ``BinaryType`` blob; ``array<array<double>>`` would move
-  every value as its own pickled float and boxed JVM ``Double`` on each
-  state write. Per micro-batch the handler runs once per touched
+  series in ``keyed_state_stream``'s columnar layout: ``<key>:
+  array<key type>`` and ``buf: array<binary>``, one float64 buffer of
+  ``n`` values per series, each crossing to the JVM as one ``byte[]``;
+  ``array<array<double>>`` would move every value as its own pickled
+  float and boxed JVM ``Double`` on each state write. This schema is
+  the checkpoint's, so a checkpoint written in an earlier layout does
+  not resume. Per micro-batch the handler runs once per touched
   shard, not once per touched series, and encodes all of the shard's
   new events in one vectorized ``_encode_windows`` call over the
   series' ``[buffer ‖ new values]`` segments laid end to end.
@@ -39,9 +50,9 @@ Scale notes.
   parallelism at 8 partitions, and 64 shards cost 13–16 % more: each
   handler call has a fixed cost of about 7 ms, of which the kernel
   itself is under 2 ms.
-* State rewrite: a touched shard rewrites its whole blob, which is
+* State rewrite: a touched shard rewrites all its buffers, which is
   O(series per shard × n × 8 B) per batch (400 series at n = 64 make
-  about 13 kB per shard).
+  about 13 kB per shard when spread over all 16).
 * The floor this layout cannot remove: every Python task of a batch
   pays about 0.1–0.16 CPU-s in pyspark's
   ``worker_util.setup_spark_files``, where
@@ -59,7 +70,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     StringType,
@@ -67,7 +77,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ._util import ShardLayout, keyed_state_stream
+from ._util import keyed_state_stream
 from ..constants import BREAKPOINTS, LETTERS, MISSING, STAT_EPS, validate_params
 
 #: state shards of :func:`sliding_sax_stream` (see "Scale notes")
@@ -89,8 +99,13 @@ def _encode_windows(
 ) -> list[str]:
     """Words for the length-``n`` windows of ``history`` that begin at
     ``starts`` (default: every window, i.e. positions n-1 .. len-1).
-    Vectorized: one strided view + per-frame nan-aware means; matches
-    pykernel.encode exactly."""
+    Vectorized: one strided view, finite-only window stats, and each
+    frame lettered from its partials (sum and non-NaN count) by the
+    letter rule of :func:`..functions.sax.frame_letter_index`. The stats
+    are sequential two-pass NumPy sums, where ``pykernel.mu_std`` uses
+    ``math.fsum``, so a word can differ from ``pykernel.encode`` only
+    where z lies within rounding of a breakpoint
+    (``tests/test_streaming.py::TestEncodeWindowsKernel``)."""
     f = n // w
     windows = np.lib.stride_tricks.sliding_window_view(history, n)  # (m, n)
     if starts is not None:
@@ -105,26 +120,16 @@ def _encode_windows(
     frames = windows.reshape(-1, w, f)
     nonnan = ~np.isnan(frames)
     fcnt = nonnan.sum(axis=2)
-    with np.errstate(invalid="ignore"):
-        fsum = _seqsum(np.where(nonnan, frames, 0.0), axis=2)
-        # ±Inf in a frame: np.where(...,0.0).sum keeps inf; Inf + -Inf -> nan
-        has_pinf = np.logical_and(nonnan, np.isposinf(frames)).any(axis=2)
-        has_ninf = np.logical_and(nonnan, np.isinf(frames) & (frames < 0)).any(axis=2)
-    breaks = np.array(BREAKPOINTS[c])
-    flat_std = std[:, None]
-    flat_mu = mu[:, None]
-    z = np.where(
-        flat_std < STAT_EPS,
-        0.0,
-        np.where(fcnt > 0, (fsum - fcnt * flat_mu), 0.0)
-        / np.where(fcnt > 0, fcnt * np.where(flat_std < STAT_EPS, 1.0, flat_std), 1.0),
+    with np.errstate(invalid="ignore", divide="ignore"):
+        fsum = _seqsum(np.where(nonnan, frames, 0.0), axis=2)  # Inf - Inf -> NaN
+        z = (fsum - fcnt * mu[:, None]) / (fcnt * std[:, None])
+    z[std < STAT_EPS] = 0.0
+    ix = np.select(
+        [(fcnt == 0) | np.isnan(fsum), fsum == math.inf, fsum == -math.inf],
+        [c, c - 1, 0],
+        (z[:, :, None] >= np.array(BREAKPOINTS[c])).sum(axis=2),
     )
-    bucket_ix = (z[:, :, None] >= breaks[None, None, :]).sum(axis=2)
-    letter_arr = np.array(list(LETTERS[:c]))
-    letters = letter_arr[np.clip(bucket_ix, 0, c - 1)]
-    letters = np.where((fcnt == 0) | (has_pinf & has_ninf), MISSING, letters)
-    letters = np.where(has_pinf & ~has_ninf, LETTERS[c - 1], letters)
-    letters = np.where(has_ninf & ~has_pinf, LETTERS[0], letters)
+    letters = np.array(list(LETTERS[:c] + MISSING))[ix]
     # each row's w one-letter cells, read as one w-letter string
     return np.ascontiguousarray(letters).view(f"<U{w}").ravel().tolist()
 
@@ -145,8 +150,9 @@ def sliding_sax_stream(
     covers the last ``n`` values of that series (NaN-padded while the
     series is shorter than ``n``).
 
-    The word equals the batch word for every value, NaN and ±Inf
-    included, but a NaN ``value`` is echoed as NULL: pyspark's Arrow
+    The word follows the batch word's letter rule for every value, NaN
+    and ±Inf included (see the module docstring for where rounding can
+    part them), but a NaN ``value`` is echoed as NULL: pyspark's Arrow
     writer masks NaN as null on the way out of the state handler, and
     the handler cannot tell the two apart (a NULL value reads as NaN
     too). ±Inf is echoed as is."""
@@ -160,14 +166,7 @@ def sliding_sax_stream(
             StructField(out, StringType()),
         ]
     )
-    blank = np.full(n, math.nan)
-    layout = ShardLayout(
-        StructType(
-            [StructField("keys", ArrayType(key_type)), StructField("bufs", BinaryType())]
-        ),
-        lambda row: dict(zip(row[0], np.frombuffer(row[1], "float64").reshape(-1, n))),
-        lambda bufs: (list(bufs), np.concatenate(list(bufs.values())).tobytes()),
-    )
+    blank = np.full(n, math.nan).tobytes()
 
     def kernel(rows: pd.DataFrame, bufs: dict) -> pd.DataFrame:
         vals = rows[value].to_numpy(dtype="float64", na_value=math.nan)
@@ -178,13 +177,15 @@ def sliding_sax_stream(
         begins = np.cumsum(counts + n) - counts - n
         buf_at = begins[:, None] + np.arange(n)
         history = np.empty(len(vals) + n * len(series))
-        history[buf_at] = np.stack([bufs.get(s, blank) for s in series])
+        history[buf_at] = np.frombuffer(
+            b"".join([bufs.get(s, blank) for s in series]), "float64"
+        ).reshape(-1, n)
         at = np.arange(len(vals)) + n * (seg + 1)
         history[at] = vals
         # only windows ending on a new value, so none straddles two series
         words = _encode_windows(history, n, w, c, starts=at - n + 1)
         for s, buf in zip(series, history[buf_at + counts[:, None]]):
-            bufs[s] = buf
+            bufs[s] = buf.tobytes()
         return pd.DataFrame(
             {key: rows[key], **{o: rows[o] for o in order}, value: vals, out: words}
         )
@@ -196,5 +197,5 @@ def sliding_sax_stream(
         order=order,
         out_schema=out_schema,
         shards=_SHARDS,
-        layout=layout,
+        value_schema=StructType([StructField("buf", BinaryType())]),
     )

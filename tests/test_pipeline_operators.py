@@ -292,6 +292,31 @@ class TestISax:
         assert (pk.coarsen(a, 8, 4), pk.coarsen(b, 8, 4)) == ("AAAB", "AAAC")
         assert (pk.coarsen(a, 8, 2), pk.coarsen(b, 8, 2)) == ("AAAA", "AAAB")
 
+    def test_isax_topk_prune_is_not_pushed_to_parquet(self, spark, tmp_path):
+        """isax_topk's coarse-bucket prune is a Filter over every row the
+        scan reads, not a parquet pushed filter: it saves scoring, not
+        reading. Skipping files takes read_words_multilevel."""
+        import re
+
+        from symtseries_spark.operators import isax_topk
+
+        path = str(tmp_path / "words")
+        spark.createDataFrame(
+            list(enumerate(["AAAC", "AAAD", "ABCD", "HHHH", "AAAE"])),
+            "series_key int, sax_word string",
+        ).write.parquet(path)
+        top = isax_topk(spark.read.parquet(path), "AAAD", c=8, coarse_c=4, k=2)
+        plan = top._jdf.queryExecution().executedPlan().toString().splitlines()
+        (scan,) = [ln for ln in plan if "FileScan parquet" in ln]
+        assert re.search(r"PushedFilters: \[([^\]]*)\]", scan).group(1) == (
+            "IsNotNull(sax_word)"
+        )
+        prune = [i for i, ln in enumerate(plan) if " Filter (" in ln and "translate(" in ln]
+        scoring = [i for i, ln in enumerate(plan) if "element_at(" in ln]
+        # the prune sits between the scan and the MINDIST scoring
+        assert len(prune) == 1 and max(scoring) < prune[0] < plan.index(scan)
+        assert sorted(r.series_key for r in top.collect()) == [0, 1]
+
     def test_topk_drops_unscorable_rows(self, spark):
         """Words mindist cannot score (NULL, empty, short, long, foreign
         letter) never appear in a top-k, even when k exceeds the scorable

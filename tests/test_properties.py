@@ -11,10 +11,12 @@ from __future__ import annotations
 import math
 import random
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from symtseries_spark import pykernel as pk
+from symtseries_spark.constants import BREAKPOINTS, MINDIST_LUT, MINDIST_OVERSHOOT
 
 
 def _znorm(vals: list[float]) -> list[float]:
@@ -45,6 +47,38 @@ class TestMindistLowerBound:
         true_d = _euclid(_znorm(a), _znorm(b))
         # float32 tables + per-frame aggregation: small tolerance
         assert d <= true_d + 1e-4, (a, b, wa, wb, d, true_d)
+
+    @pytest.mark.parametrize("c", [4, 8, 16])
+    def test_mindist_at_breakpoint_gaps_within_overshoot_bound(self, c):
+        """Frame means placed just inside the two breakpoints of each
+        letter pair (i, j >= i + 2) whose pair-table entry exceeds their
+        gap: a = [p, q, r, s] and b = [q, p, r, s], one value per frame
+        repeated n/w times, z-normalized already (mean 0, sigma 1). The
+        exact distance is sqrt(2n/w) * (q - p), MINDIST sqrt(2n/w) times
+        the table entry, so MINDIST exceeds it, by at most
+        sqrt(n) * MINDIST_OVERSHOOT[c]."""
+        n, w, eps = 16, 4, 1e-6
+        brk, lut = BREAKPOINTS[c], MINDIST_LUT[c]
+        excess = []
+        for i in range(c):
+            for j in range(i + 2, c):
+                p, q = brk[i] - eps, brk[j - 1] + eps
+                rs_sum, rs_sq = -(p + q), w - p * p - q * q
+                spread = 2 * rs_sq - rs_sum * rs_sum
+                if lut[i * c + j] <= brk[j - 1] - brk[i] or spread < 0:
+                    continue  # no overshoot, or no sigma-1 r, s
+                r = (rs_sum + math.sqrt(spread)) / 2
+                s = rs_sum - r
+                a = [x for x in (p, q, r, s) for _ in range(n // w)]
+                b = [x for x in (q, p, r, s) for _ in range(n // w)]
+                wa, wb = pk.encode(a, w, c), pk.encode(b, w, c)
+                assert (pk.parse(wa, c)[:2], pk.parse(wb, c)[:2]) == ([i, j], [j, i])
+                d = pk.mindist(pk.parse(wa, c), pk.parse(wb, c), c=c, n_a=n, n_b=n)
+                exact = _euclid(_znorm(a), _znorm(b))
+                assert d <= exact + math.sqrt(n) * MINDIST_OVERSHOOT[c], (i, j, d, exact)
+                excess.append(d - exact)
+        # the pair that sets MINDIST_OVERSHOOT[c] is among the cases
+        assert max(excess) > math.sqrt(2 * n / w) * (MINDIST_OVERSHOOT[c] - 3 * eps) > 0
 
     @given(series_strategy, st.sampled_from([4, 8]))
     @settings(max_examples=100, deadline=None)

@@ -15,6 +15,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from symtseries_spark import pykernel as pk
+from symtseries_spark.constants import STAT_EPS
 from symtseries_spark.operators import sliding_sax
 from symtseries_spark.streaming import sliding_sax_stream
 from symtseries_spark.streaming.sliding import _encode_windows
@@ -22,14 +23,49 @@ from symtseries_spark.streaming.sliding import _encode_windows
 N, W, C = 8, 4, 8
 
 
+def _random_series() -> np.ndarray:
+    rng = np.random.default_rng(42)
+    vals = rng.normal(size=200)
+    # inject missing/infinite values like the reference's property test
+    vals[rng.random(200) < 0.08] = math.nan
+    vals[rng.random(200) < 0.04] = math.inf
+    vals[rng.random(200) < 0.04] = -math.inf
+    return vals
+
+
+def _alternating(s: float) -> np.ndarray:
+    """Frames of -s and +s: population sigma s in every window."""
+    return np.tile([-s, -s, s, s], 6)
+
+
+_NAN, _INF = math.nan, math.inf
+# edge inputs of the letter rule; frames are N // W = 2 values wide
+ENCODER_SERIES = {
+    "random": _random_series,
+    "integer": lambda: np.random.default_rng(5).integers(-3, 4, size=60).astype(float),
+    "flat": lambda: np.full(20, 2.5),
+    "sigma_under_eps": lambda: _alternating(STAT_EPS * (1 - 1e-3)),
+    "sigma_over_eps": lambda: _alternating(STAT_EPS * (1 + 1e-3)),
+    "nan_frame": lambda: np.array(
+        [1.0, 4.0, _NAN, _NAN, -2.0, 0.5, 3.0, -1.0, 2.0, _NAN, _NAN, 0.0, 1.5]
+    ),
+    "pos_inf_frame": lambda: np.array(
+        [1.0, _INF, -2.0, 0.5, 3.0, -1.0, 2.0, _INF, 0.0, 1.5, -0.5, 2.5]
+    ),
+    "neg_inf_frame": lambda: np.array(
+        [1.0, -_INF, -2.0, 0.5, 3.0, -1.0, 2.0, -_INF, 0.0, 1.5, -0.5, 2.5]
+    ),
+    "both_inf_frame": lambda: np.array(
+        [1.0, 2.0, _INF, -_INF, 3.0, -1.0, -_INF, _INF, 0.0, 1.5, _INF, _NAN, -_INF]
+    ),
+    "finite_in_one_frame": lambda: np.array([_NAN] * 6 + [0.3, -1.7] + [_NAN] * 6),
+}
+
+
 class TestEncodeWindowsKernel:
-    def test_matches_pykernel_random(self):
-        rng = np.random.default_rng(42)
-        vals = rng.normal(size=200)
-        # inject missing/infinite values like the reference's property test
-        vals[rng.random(200) < 0.08] = math.nan
-        vals[rng.random(200) < 0.04] = math.inf
-        vals[rng.random(200) < 0.04] = -math.inf
+    @pytest.mark.parametrize("series", list(ENCODER_SERIES))
+    def test_matches_pykernel_random(self, series):
+        vals = ENCODER_SERIES[series]()
         words = _encode_windows(vals, N, W, C)
         for i, word in enumerate(words):
             window = list(vals[i : i + N])
@@ -465,6 +501,26 @@ class TestShardedSlidingStream:
             assert not wrong, list(wrong.items())[:5]
         finally:
             shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_sliding_state_schema_is_the_checkpoint_contract(spark, tmp_path, key_type):
+    """The state schema ``sliding_sax_stream`` stores in a checkpoint:
+    per shard one array of series keys and one array of binary ring
+    buffers. The analyzed plan's FlatMapGroupsInPandasWithState node
+    prints it; a change here stops old checkpoints from resuming
+    (docs/MIGRATION.md)."""
+    stream = spark.readStream.schema(f"sid {key_type}, t long, v double").parquet(
+        str(tmp_path)
+    )
+    words = sliding_sax_stream(stream, key="sid", order=["t"], value="v", n=N, w=W, c=C)
+    plan = words._jdf.queryExecution().analyzed().toString()
+    (node,) = [ln for ln in plan.splitlines() if "FlatMapGroupsInPandasWithState" in ln]
+    spark_type = {"long": "LongType", "string": "StringType"}[key_type]
+    assert (
+        f"[StructField(sid,ArrayType({spark_type},true),true), "
+        "StructField(buf,ArrayType(BinaryType,true),true)]"
+    ) in node, node
 
 
 def test_sliding_stream_echoes_nan_value_as_null(spark, tmp_path):
