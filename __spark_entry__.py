@@ -29,8 +29,6 @@ from symtseries_spark.operators import (
     allpairs_within,
     ann_lsh_topk,
     tumbling_values,
-    isax_buckets,
-    isax_topk,
     cosine_topk,
     embedding_near_dup,
     exact_dedup_map,
@@ -561,39 +559,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum(revenue).cast("double"), 2).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
-    )
-
-
-ISAX_COARSE_BUCKETS = 2
-ISAX_COARSE_SEARCH = 2
-
-
-def q_sax_isax_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = tumbling_sax(
-        load(spark, sf_dir, "events"),
-        key="user_id", order=["ts", "event_id"], value="value", **TUMBLE_DIST,
-    )
-    return isax_buckets(words, c=TUMBLE_DIST["c"], coarse_c=ISAX_COARSE_BUCKETS)
-
-
-def q_sax_isax_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words = tumbling_sax(
-        load(spark, sf_dir, "events"),
-        key="user_id", order=["ts", "event_id"], value="value", **TUMBLE_DIST,
-    )
-    return isax_topk(
-        words,
-        DIST_PATTERN,
-        c=TUMBLE_DIST["c"],
-        coarse_c=ISAX_COARSE_SEARCH,
-        k=TOPK,
-        n=TUMBLE_DIST["n"],
-        tiebreakers=["series_key", "window_id"],
-    ).select(
-        "series_key",
-        "window_id",
-        "sax_word",
-        F.round("mindist", 4).alias("dist"),
     )
 
 
@@ -8441,8 +8406,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sax_sliding_stream": q_sax_sliding_stream,
         "sax_event_windows": q_sax_event_windows,
         "sax_event_windows_stream": q_sax_event_windows_stream,
-        "sax_isax_buckets": q_sax_isax_buckets,
-        "sax_isax_topk": q_sax_isax_topk,
         "sax_isax_ml_build": q_sax_isax_ml_build,
         "sax_isax_ml_probe": q_sax_isax_ml_probe,
         "tpch_q1": q_tpch_q1,
@@ -9439,17 +9402,6 @@ LIMIT {SAX_MOTIF_K}
             f"round({m_c16['above']}, 4) AS dist_above, "
             f"round({m_c16['below']}, 4) AS dist_below "
             f"FROM ({c16_words})"
-        ),
-        "sax_isax_buckets": (
-            f"SELECT translate(sax_word, '{_l8}', '{_coarse_map(ISAX_COARSE_BUCKETS)}') AS bucket, "
-            f"count(*) AS n_words FROM ({dist_words}) GROUP BY 1"
-        ),
-        "sax_isax_topk": (
-            f"SELECT series_key, window_id, sax_word, round({m_dist['dist']}, 4) AS dist "
-            f"FROM ({dist_words}) "
-            f"WHERE translate(sax_word, '{_l8}', '{_coarse_map(ISAX_COARSE_SEARCH)}') = "
-            f"'{pk.coarsen(DIST_PATTERN, TUMBLE_DIST['c'], ISAX_COARSE_SEARCH)}' "
-            f"ORDER BY dist, series_key, window_id LIMIT {TOPK}"
         ),
         # nested-level pruning == pruning at the finest level (power-of-two
         # breakpoint tables nest exactly, so l1 equality implies l0)

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .. import pykernel as pk
 from ..constants import LETTERS, MINDIST_OVERSHOOT, MISSING, validate_params
-from ..functions.sax import _mindist_sums, sax_coarsen, sax_zeuclidean, sax_znorm
+from ..functions.sax import _mindist_sums, sax_zeuclidean, sax_znorm
 
 
 def _finish_mindist(scored: DataFrame, dist: str, above: str, below: str) -> DataFrame:
@@ -175,16 +175,19 @@ def discords(
     window relation, so the corpus-sized side is never shuffled for
     the refine; the per-candidate argmin collapses map-side. Windows
     materialize n<=4096 doubles per row (the reference's own cap).
-    Series with a single full window have no neighbor and are not
-    reported. Assumes finite values (NaN-bearing windows would need a
-    finite-only prefilter; the SAX word itself handles NaN natively).
+    A window holding a NULL, NaN or ±Inf value is dropped before the
+    word histogram: it is neither a candidate nor a neighbor, and its
+    word is not counted. Series with a single full finite window have
+    no neighbor and are not reported.
     """
-    from ..functions.sax import sax_encode
+    from ..functions.sax import is_finite, sax_encode
     from .windows import tumbling_values
 
     if rare_words < 1 or top < 1:
         raise ValueError("discords needs rare_words >= 1, top >= 1")
-    wins = tumbling_values(df, key=key, order=order, value=value, n=n)
+    wins = tumbling_values(df, key=key, order=order, value=value, n=n).where(
+        F.forall("vals", is_finite)
+    )
     words = wins.select(
         "series_key",
         "window_id",
@@ -233,57 +236,6 @@ def discords(
     return scored.orderBy(
         F.desc("nn_dist"), "series_key", "window_id"
     ).limit(top)
-
-
-def isax_buckets(
-    words: DataFrame,
-    *,
-    c: int,
-    coarse_c: int,
-    word_col: str = "sax_word",
-) -> DataFrame:
-    """iSAX index statistics: occurrence count per cardinality-``coarse_c``
-    prefix word -> ``(bucket, n_words)``. The coarse word is the node key
-    of an iSAX prefix tree; at scale this is the partition/bucket column
-    to sort data by for pruned similarity scans."""
-    return (
-        words.where(F.col(word_col).isNotNull())
-        .groupBy(sax_coarsen(F.col(word_col), c, coarse_c).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("n_words"))
-    )
-
-
-def isax_topk(
-    words: DataFrame,
-    pattern: str,
-    *,
-    c: int,
-    coarse_c: int,
-    k: int,
-    word_col: str = "sax_word",
-    n: str | int | None = None,
-    tiebreakers: list[str] | None = None,
-) -> DataFrame:
-    """Indexed (approximate) top-k: prune to the query's iSAX bucket —
-    words whose coarse form equals the pattern's — then refine with exact
-    mindist. The probe is approximate across bucket edges: neighbouring
-    fine letters on opposite sides of a coarse boundary have mindist 0
-    yet land in different buckets (at c=8, ``AAAD``/``AAAE`` coarsen to
-    ``AAAB``/``AAAC`` at c=4), so the prune can drop exact matches and
-    return fewer than ``k`` rows. Ranking is exact only within the bucket.
-    The prune compares ``translate(word)`` with a plan-time constant,
-    which Spark does not push into a parquet scan: the scan still reads
-    every row, and the prune only keeps the rows outside the bucket from
-    being scored. To skip files of data at rest, read the pattern's
-    bucket chain with :func:`..sources.read_words_multilevel` first.
-    ``n`` is as in :func:`mindist_to_pattern`."""
-    coarse_pattern = pk.coarsen(pattern, c, coarse_c)
-    pruned = words.where(
-        sax_coarsen(F.col(word_col), c, coarse_c) == coarse_pattern
-    )
-    return topk_nearest(
-        pruned, pattern, c=c, k=k, word_col=word_col, n=n, tiebreakers=tiebreakers
-    )
 
 
 def allpairs_within(

@@ -327,9 +327,13 @@ def discords_sql(
     :func:`tumbling_words_sql` embedded as a CTE), global word
     histogram, the ``rare_words`` rarest words as candidates, exact
     same-series NN distance on the shared left-to-right squared-diff
-    fold, top ``top`` by quantized descending NN distance."""
+    fold, top ``top`` by quantized descending NN distance. ``fin``
+    reads a NULL for every NULL, NaN or ±Inf ``value`` (a column name),
+    ``wins`` keeps only windows of n non-NULL values, and ``wt`` joins
+    the words to it, so a window holding a non-finite value is neither
+    counted, a candidate nor a neighbor."""
     words_stmt = tumbling_words_sql(
-        n, w, c, table=table, key=key, order=order, value=value
+        n, w, c, table="fin", key=key, order=order, value=value
     )
     d2 = (
         f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
@@ -338,10 +342,14 @@ def discords_sql(
         f"(x, y) -> x + y)"
     )
     return f"""
-WITH base AS (
+WITH fin AS (
+  SELECT * REPLACE (
+    CASE WHEN isfinite(CAST({value} AS DOUBLE)) THEN {value} END AS {value}
+  ) FROM {table}
+), base AS (
   SELECT {key} AS series_key, {value} AS v,
          row_number() OVER (PARTITION BY {key} ORDER BY {order}) AS rn
-  FROM {table}
+  FROM fin
 ), pos AS (
   SELECT series_key, v,
          CAST(floor((rn - 1) / {n}) AS BIGINT) AS window_id,
@@ -349,7 +357,7 @@ WITH base AS (
   FROM base
 ), wins AS (
   SELECT series_key, window_id, list(CAST(v AS DOUBLE) ORDER BY p) AS vals
-  FROM pos GROUP BY series_key, window_id HAVING count(*) = {n}
+  FROM pos GROUP BY series_key, window_id HAVING count(v) = {n}
 ), words AS (
 {words_stmt}
 ), wt AS (

@@ -248,7 +248,10 @@ def read_words_multilevel(
     the rest of the index. It keeps one equality predicate per level on
     those partition columns (``PartitionFilters`` shows every level),
     passed as one SQL string. A chain the index does not hold gives an
-    empty frame with the stored schema that reads no file.
+    empty frame with the stored schema that reads no file. A top-k over
+    the chain (:func:`..operators.search.topk_nearest`) is exact only
+    within it: a word across a coarse boundary can be at MINDIST 0 from
+    the pattern and sit in another chain.
     """
     from pyspark.errors import AnalysisException
 

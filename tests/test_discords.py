@@ -1,5 +1,8 @@
 """Tests for operators/search.py:discords (HOT-SAX discord discovery)."""
 
+import math
+import random
+
 import pytest
 
 from symtseries_spark.operators.search import discords
@@ -65,3 +68,64 @@ class TestDiscords:
         for wid in (0, 1):
             if wid in by_win:
                 assert by_win[wid]["nn_dist"] == 0.0
+
+
+    def test_non_finite_windows_are_dropped(self, spark):
+        """A window holding a NULL or +Inf value is neither a candidate
+        nor a neighbor: with every word a candidate, the output is the
+        brute-force NN distance over the finite windows alone, and the
+        DuckDB oracle states the same rule."""
+        import duckdb
+
+        from symtseries_spark.oracle import discords_sql
+
+        rng = random.Random(3)
+        rows = []
+        for key in (1, 2):
+            vals = [round(rng.gauss(0.0, 1.0), 3) for _ in range(6 * N)]
+            if key == 1:
+                vals[2 * N + 3] = math.inf  # window 2
+                vals[4 * N] = None  # window 4
+            rows += [(key, i, v) for i, v in enumerate(vals)]
+
+        wins = {}
+        for key, ts, v in rows:
+            wins.setdefault((key, ts // N), []).append(v)
+        finite = {
+            kw: vs for kw, vs in wins.items()
+            if all(v is not None and math.isfinite(v) for v in vs)
+        }
+        assert len(finite) == len(wins) - 2
+
+        def d2(a, b):  # the engine's left-to-right fold
+            acc = 0.0
+            for x, y in zip(a, b):
+                acc += (x - y) * (x - y)
+            return acc
+
+        expected = sorted(
+            (
+                key,
+                wid,
+                math.floor(math.sqrt(min(
+                    d2(vs, other) for (k2, w2), other in finite.items()
+                    if k2 == key and w2 != wid
+                )) * 1e6 + 0.5) / 1e6,
+            )
+            for (key, wid), vs in finite.items()
+        )
+        expected.sort(key=lambda r: -r[2])  # stable: ties keep key order
+
+        got = discords(
+            _mk(spark, rows), key="user_id", order="ts", value="value",
+            n=N, w=W, c=C, rare_words=1000, top=100,
+        ).collect()
+        assert [(r.series_key, r.window_id, r.nn_dist) for r in got] == expected
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE ev (user_id BIGINT, ts BIGINT, value DOUBLE)")
+        con.executemany("INSERT INTO ev VALUES (?, ?, ?)", rows)
+        oracle = con.execute(
+            discords_sql(N, W, C, rare_words=1000, top=100, table="ev", order="ts")
+        ).fetchall()
+        assert oracle == [tuple(r) for r in got]

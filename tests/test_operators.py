@@ -14,7 +14,6 @@ from symtseries_spark.constants import MINDIST_OVERSHOOT
 from symtseries_spark.operators import (
     allpairs_refined,
     allpairs_within,
-    isax_topk,
     mindist_to_pattern,
     sliding_sax,
     topk_nearest,
@@ -242,7 +241,6 @@ def test_pattern_n_rejects_column(spark):
     for op in (
         lambda: mindist_to_pattern(words, "ABCD", c=8, n=F.col("n")),
         lambda: topk_nearest(words, "ABCD", c=8, k=1, n=F.col("n")),
-        lambda: isax_topk(words, "ABCD", c=8, coarse_c=4, k=1, n=F.col("n")),
     ):
         with pytest.raises(TypeError, match="column name"):
             op()

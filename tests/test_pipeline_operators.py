@@ -282,9 +282,10 @@ class TestISax:
                 )
 
     def test_coarse_inequality_allows_zero_mindist(self):
-        """Pins why isax_topk's bucket probe is approximate: adjacent fine
-        letters across a coarse boundary are at mindist 0 but fall into
-        different buckets."""
+        """Pins why read_words_multilevel's chain read is approximate as
+        the input of a top-k: adjacent fine letters across a coarse
+        boundary are at mindist 0 but fall into different chains, so the
+        pattern's chain can miss exact matches."""
         from symtseries_spark import pykernel as pk
 
         a, b = "AAAD", "AAAE"
@@ -292,38 +293,15 @@ class TestISax:
         assert (pk.coarsen(a, 8, 4), pk.coarsen(b, 8, 4)) == ("AAAB", "AAAC")
         assert (pk.coarsen(a, 8, 2), pk.coarsen(b, 8, 2)) == ("AAAA", "AAAB")
 
-    def test_isax_topk_prune_is_not_pushed_to_parquet(self, spark, tmp_path):
-        """isax_topk's coarse-bucket prune is a Filter over every row the
-        scan reads, not a parquet pushed filter: it saves scoring, not
-        reading. Skipping files takes read_words_multilevel."""
-        import re
-
-        from symtseries_spark.operators import isax_topk
-
-        path = str(tmp_path / "words")
-        spark.createDataFrame(
-            list(enumerate(["AAAC", "AAAD", "ABCD", "HHHH", "AAAE"])),
-            "series_key int, sax_word string",
-        ).write.parquet(path)
-        top = isax_topk(spark.read.parquet(path), "AAAD", c=8, coarse_c=4, k=2)
-        plan = top._jdf.queryExecution().executedPlan().toString().splitlines()
-        (scan,) = [ln for ln in plan if "FileScan parquet" in ln]
-        assert re.search(r"PushedFilters: \[([^\]]*)\]", scan).group(1) == (
-            "IsNotNull(sax_word)"
-        )
-        prune = [i for i, ln in enumerate(plan) if " Filter (" in ln and "translate(" in ln]
-        scoring = [i for i, ln in enumerate(plan) if "element_at(" in ln]
-        # the prune sits between the scan and the MINDIST scoring
-        assert len(prune) == 1 and max(scoring) < prune[0] < plan.index(scan)
-        assert sorted(r.series_key for r in top.collect()) == [0, 1]
-
     def test_topk_drops_unscorable_rows(self, spark):
         """Words mindist cannot score (NULL, empty, short, long, foreign
         letter) never appear in a top-k, even when k exceeds the scorable
         rows (ascending order puts NULLs first), and the query does not
-        raise."""
+        raise. With k below the scorable count and many ties at mindist
+        0, the rows and their order are the brute-force sort on
+        (mindist, series_key)."""
         from symtseries_spark import pykernel as pk
-        from symtseries_spark.operators import isax_topk, topk_nearest
+        from symtseries_spark.operators import topk_nearest
 
         c, n, pattern = 8, 32, "AAAA"
         good = ["AAAA", "AAAB", "AAA#", "BAAA", "HHHH"]
@@ -339,14 +317,24 @@ class TestISax:
         )
         top = topk_nearest(df, pattern, c=c, k=10, n=n, tiebreakers=["series_key"])
         assert [(r.mindist, r.series_key) for r in top.collect()] == ranked
-        coarse = pk.coarsen(pattern, c, 2)
-        in_bucket = [
-            (d, i) for d, i in ranked if pk.coarsen((bad + good)[i], c, 2) == coarse
-        ]
-        top = isax_topk(
-            df, pattern, c=c, coarse_c=2, k=10, n=n, tiebreakers=["series_key"]
+
+        rng = random.Random(12)
+        pattern, k = "CDEF", 20
+        # letters within one of the pattern's, so many words tie at 0;
+        # keys shuffled, so the tie order is not the insertion order
+        words = ["".join(rng.choice("BCDEFG") for _ in range(4)) for _ in range(500)]
+        keys = rng.sample(range(10_000), len(words))
+        df = spark.createDataFrame(
+            list(zip(keys, words)), "series_key int, sax_word string"
+        ).repartition(4)
+        p = pk.parse(pattern, c)
+        brute = sorted(
+            (pk.mindist(p, pk.parse(x, c), c=c, n_b=n), key)
+            for key, x in zip(keys, words)
         )
-        assert [(r.mindist, r.series_key) for r in top.collect()] == in_bucket
+        assert sum(d == 0.0 for d, _ in brute) > k  # the cut splits the 0 ties
+        top = topk_nearest(df, pattern, c=c, k=k, n=n, tiebreakers=["series_key"])
+        assert [(r.mindist, r.series_key) for r in top.collect()] == brute[:k]
 
     def test_sax_coarsen_column(self, spark):
         from pyspark.sql import Row

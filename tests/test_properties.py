@@ -3,7 +3,8 @@
 The headline invariant (the whole point of SAX/iSAX, README.md:27-34 of
 the reference): MINDIST between two SAX words NEVER overestimates the
 true Euclidean distance between the two z-normalized series. Every
-pruning operator in the engine (allpairs, isax_topk) relies on it.
+pruning operator in the engine (allpairs_within, allpairs_refined) relies
+on it.
 """
 
 from __future__ import annotations
