@@ -424,15 +424,10 @@ def q_sax_mindist_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events"),
         key="user_id", order=["ts", "event_id"], value="value", **TUMBLE_FINE,
     )
-    scored = mindist_to_pattern(
-        words, FINE_PATTERN, c=TUMBLE_FINE["c"], n=TUMBLE_FINE["n"]
-    ).select(
-        "series_key",
-        "window_id",
-        "sax_word",
-        F.round("mindist", 4).alias("dist"),
-    )
-    return scored.orderBy("dist", "series_key", "window_id").limit(TOPK)
+    return topk_nearest(
+        words, FINE_PATTERN, c=TUMBLE_FINE["c"], k=TOPK, n=TUMBLE_FINE["n"],
+        tiebreakers=["series_key", "window_id"],
+    ).select("series_key", "window_id", "sax_word", F.round("mindist", 4).alias("dist"))
 
 
 def q_sax_mindist_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -599,19 +594,10 @@ def _isax_ml_topk(spark: SparkSession, sf_dir: str, pattern: str) -> DataFrame:
         spark, _isax_ml_index(spark, sf_dir), pattern,
         c=TUMBLE_DIST["c"], levels=ISAX_ML_LEVELS,
     )
-    return (
-        mindist_to_pattern(
-            pruned, pattern, c=TUMBLE_DIST["c"], n=TUMBLE_DIST["n"]
-        )
-        .select(
-            "series_key",
-            "window_id",
-            "sax_word",
-            F.round("mindist", 4).alias("dist"),
-        )
-        .orderBy("dist", "series_key", "window_id")
-        .limit(TOPK)
-    )
+    return topk_nearest(
+        pruned, pattern, c=TUMBLE_DIST["c"], k=TOPK, n=TUMBLE_DIST["n"],
+        tiebreakers=["series_key", "window_id"],
+    ).select("series_key", "window_id", "sax_word", F.round("mindist", 4).alias("dist"))
 
 
 def q_sax_isax_ml_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -870,8 +856,10 @@ def q_sax_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming parity as a checkable query: run the stateful
     sliding-SAX stream over the events file (one micro-batch -> arrival
     order == sort order), drain to a memory sink, return the sink table.
-    Streaming == batch by construction, so the ORACLE is the batch
-    sliding-window SQL."""
+    The ORACLE is the batch sliding-window SQL: the stream applies the
+    batch letter rule to the same frame partials, but takes the window
+    stats by its own NumPy two-pass, so a word can differ from the
+    batch one only where a z-score is within rounding of a breakpoint."""
     import tempfile
     import uuid
 

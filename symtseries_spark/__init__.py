@@ -2,13 +2,14 @@
 
 Re-expresses the capabilities of Quadrocube/symtseries (SAX encoding,
 sliding-window words, MINDIST similarity search) as Spark DataFrame/SQL
-operators, plus the large-scale data-pipeline operations (dedup,
-similarity search, text analysis, multimodal columns) that a 100 TB
-deployment needs.
+operators, plus data-pipeline operations (dedup, similarity search, text
+analysis, multimodal columns).
 
-Everything on the hot path is a JVM-side Column expression (higher-order
-array functions); Python appears only in the streaming state handler and
-the multimodal decode stubs, always Arrow-batched.
+Everything on the hot path is a JVM-side Column expression: window
+aggregates, CASE chains, sums unrolled at a plan-time length, and
+higher-order array functions where no length is fixed. Python appears
+only in the streaming state handlers and the multimodal decode stubs,
+always Arrow-batched.
 
 Public surface::
 

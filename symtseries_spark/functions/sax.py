@@ -4,10 +4,11 @@ Everything here compiles to Catalyst expression trees — no Python
 UDFs, so the work scales with executors, not with the Python GIL. The
 array forms use built-in higher-order functions (``transform`` /
 ``aggregate`` / ``filter`` / ``zip_with`` / ``slice``), which Spark
-evaluates interpreted, outside whole-stage codegen; the MINDIST
-renderer at the end of the module unrolls the plan-time (w, c) into one
-flat SQL expression over SAX-string columns that does stay inside it
-(see "codegen-path variant" below).
+evaluates interpreted, outside whole-stage codegen. The two distances a
+search evaluates per row or per pair, :func:`sax_zeuclidean` and the
+MINDIST renderer :func:`_mindist_sums`, are flat unrolled sums when
+their plan-time length is at most :data:`UNROLL_MAX`, and folds above
+it.
 
 Parameters ``w`` (word length) and ``c`` (cardinality) are plan-time
 Python ints: the breakpoint and distance tables become literal arrays
@@ -35,6 +36,17 @@ from ..constants import (
 )
 
 _INF = float("inf")
+
+# The longest plan-time length (n values or w letters) a distance sum is
+# unrolled to a flat expression; longer sums are one fold. A flat sum
+# whole-stage-codegens, but its generated code grows with its length,
+# and past a few hundred terms the planner runs out of stack or memory;
+# the fold is interpreted per element, but its plan is the same size at
+# every length. On a 4-core host (local[4], project-then-filter, the
+# shape the refine runs) the fold beat the flat form at 16, 32 and 64
+# (CHANGES.md), so this is the smallest cap that keeps the registry's
+# short words (w <= 16) in their flat form.
+UNROLL_MAX = 16
 
 
 def _let(value: Column, body) -> Column:
@@ -343,48 +355,31 @@ def sax_znorm(arr: Column) -> Column:
     return _let(_stats(arr), with_stats)
 
 
-def sax_zeuclidean(za: Column, zb: Column, n: int | None = None) -> Column:
-    """Exact Euclidean distance between two z-normalized arrays — the
-    refine step of the reference's prune-then-refine story (its
-    README.md:29-34 and include/symtseries.h:5-7: MINDIST lower-bounds
-    this quantity, here up to the pair table's rounding,
-    ``MINDIST_OVERSHOOT``). Positions where either side is
-    non-finite contribute 0 (the exact-distance analogue of '#' frames);
-    NULL or length-mismatched inputs yield NULL.
+def sax_zeuclidean(za: Column, zb: Column, n: int) -> Column:
+    """Exact Euclidean distance between two z-normalized arrays of ``n``
+    values — the refine step of the reference's prune-then-refine story
+    (its README.md:29-34 and include/symtseries.h:5-7: MINDIST
+    lower-bounds this quantity, here up to the pair table's rounding,
+    ``MINDIST_OVERSHOOT``). Positions where either side is non-finite
+    contribute 0 (the exact-distance analogue of '#' frames); a NULL
+    side, or a side whose size is not ``n``, yields NULL.
 
-    ``n`` (r13): callers whose windows have a KNOWN fixed length may
-    pass it to unroll the per-pair sum into a flat n-term expression —
-    ``zip_with``/``aggregate`` are interpreted per element while the
-    flat form whole-stage-codegens (measured ~30% off the 14M-pair
-    refine fold at n=16; bit-identical output — same guarded term,
-    same left-to-right addition order as the fold). Arrays whose size
-    is not ``n`` fall back to the generic form, so the value contract
-    is unchanged; keep ``n`` well under the repo's documented
-    ~1000-term flat-expression cliff."""
-    d2 = F.zip_with(
-        za,
-        zb,
-        lambda x, y: F.when(
-            is_finite(x) & is_finite(y), (x - y) * (x - y)
-        ).otherwise(F.lit(0.0)),
-    )
-    ok = za.isNotNull() & zb.isNotNull() & (F.size(za) == F.size(zb))
-    hof = F.when(ok, F.sqrt(F.aggregate(d2, F.lit(0.0), lambda a, v: a + v)))
-    if n is None:
-        return hof
+    The squared differences are added left to right. Up to
+    :data:`UNROLL_MAX` they are one flat n-term sum, above it one
+    ``zip_with``/``aggregate`` fold (see :data:`UNROLL_MAX`); both read
+    the same guarded term in the same order, so the two forms give the
+    same bits."""
 
-    def term(i: int) -> Column:
-        x, y = F.element_at(za, i), F.element_at(zb, i)
-        return F.when(
-            is_finite(x) & is_finite(y), (x - y) * (x - y)
-        ).otherwise(F.lit(0.0))
+    def term(x: Column, y: Column) -> Column:
+        return F.when(is_finite(x) & is_finite(y), (x - y) * (x - y)).otherwise(F.lit(0.0))
 
-    flat = term(1)
-    for i in range(2, n + 1):
-        flat = flat + term(i)
-    return F.when(
-        ok & (F.size(za) == F.lit(int(n))), F.sqrt(flat)
-    ).otherwise(hof)
+    if 0 < n <= UNROLL_MAX:
+        total = term(F.element_at(za, 1), F.element_at(zb, 1))
+        for i in range(2, n + 1):
+            total = total + term(F.element_at(za, i), F.element_at(zb, i))
+    else:
+        total = F.aggregate(F.zip_with(za, zb, term), F.lit(0.0), lambda a, v: a + v)
+    return F.when((F.size(za) == n) & (F.size(zb) == n), F.sqrt(total))
 
 
 def sax_coarsen(word: Column, c: int, c2: int) -> Column:
@@ -403,18 +398,6 @@ def sax_coarsen(word: Column, c: int, c2: int) -> Column:
     src = LETTERS[:c]
     dst = "".join(LETTERS[i // k] for i in range(c))
     return F.translate(word, src, dst)
-
-
-# ---------------------------------------------------------------------------
-# codegen-path variant
-#
-# The array/HOF kernels above are the general form, but Spark evaluates
-# higher-order functions interpreted (outside whole-stage codegen), which
-# costs ~µs per call — too slow for per-row probes or per-pair all-pairs
-# joins at scale. The renderer below unrolls the fixed plan-time (w, c)
-# into flat scalar expressions (substring/instr/element_at on literal
-# arrays), which codegen compiles to tight JVM loops. It shares the pair
-# table, letter slot and gate of :func:`sax_mindist_parts`.
 
 
 def _mindist_sums(
@@ -444,8 +427,11 @@ def _mindist_sums(
     the :func:`_contrib_const` tables: a pattern reads its letter's
     (c+2)-entry column at the word letter's slot, a column reads the
     flat table at both letters' pair index (src/symtseries.c:585-636).
-    The sums fold left from 0.0 in position order, so the values are
-    bit-identical to :func:`sax_mindist_parts`'s fold.
+    Up to :data:`UNROLL_MAX` letters each sum is written out position by
+    position; above it each is one ``aggregate(sequence(1, w), ...)``
+    over the flat table, the pattern's letter slots read from a literal
+    array. Either way the sums add left from 0.0 in position order, so
+    the values are bit-identical to :func:`sax_mindist_parts`'s fold.
 
     Each sum appears once (2w lookups): Catalyst does not inline a
     non-cheap struct that the finishing projection reads several times,
@@ -469,33 +455,46 @@ def _mindist_sums(
     def dbl(v: float | None) -> str:
         return "CAST(NULL AS DOUBLE)" if v is None else repr(float(v)) + "D"
 
-    def slot(col: str, i: int) -> str:
+    def slot(col: str, i: int | str) -> str:
         # never NULL, never out of range: element_at cannot raise under ANSI
         return f"coalesce(instr('{LETTERS[:c]}{MISSING}', substring({col}, {i}, 1)), 0)"
 
     word = ident(word_col)
     size = c + 2
     tables = _contrib_const(c)
+    flat = [", ".join(map(dbl, t)) for t in tables]
+
+    def pair_lookup(k: int, i: int | str, other_slot: str) -> str:  # the flat table
+        return f"element_at(array({flat[k]}), {slot(word, i)} * {size} + {other_slot} + 1)"
+
     if other_col is None:
         indices = parse(pattern, c)
         w = len(indices)
         gate = f"length({word}) = {w}"
+        slots = ", ".join(str(x + 1) for x in indices)
 
-        def lookup(k: int, i: int) -> str:  # the pattern letter's column
+        def lookup(k: int, i: int | str) -> str:
+            if isinstance(i, str):  # the pattern's slot from a literal array
+                return pair_lookup(k, i, f"element_at(array({slots}), {i})")
             col = ", ".join(map(dbl, tables[k][indices[i - 1] + 1 :: size]))
-            return f"element_at(array({col}), {slot(word, i)} + 1)"
+            return f"element_at(array({col}), {slot(word, i)} + 1)"  # its column
     else:
         other = ident(other_col)
         gate = f"length({word}) = {w} AND length({other}) = {w}"
-        flat = [", ".join(map(dbl, t)) for t in tables]
 
-        def lookup(k: int, i: int) -> str:  # the flat table at the pair index
-            pair = f"{slot(word, i)} * {size} + {slot(other, i)} + 1"
-            return f"element_at(array({flat[k]}), {pair})"
-    above = below = "0.0D"
-    for i in range(1, w + 1):
-        above = f"({above} + {lookup(0, i)})"
-        below = f"({below} + {lookup(1, i)})"
+        def lookup(k: int, i: int | str) -> str:
+            return pair_lookup(k, i, slot(other, i))
+
+    if w <= UNROLL_MAX:
+        above = below = "0.0D"
+        for i in range(1, w + 1):
+            above = f"({above} + {lookup(0, i)})"
+            below = f"({below} + {lookup(1, i)})"
+    else:
+        above, below = (
+            f"aggregate(sequence(1, {w}), 0.0D, (__s, __i) -> __s + {lookup(k, '__i')})"
+            for k in (0, 1)
+        )
     # the wildcard rule of _resolve_n with the right operand's n = 0
     if isinstance(n, str):
         n0 = f"coalesce(CAST({ident(n)} AS BIGINT), 0)"

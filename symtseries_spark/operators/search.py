@@ -164,9 +164,9 @@ def discords(
     plays); each candidate's exact nearest-neighbor distance is then
     computed against every other full window of the SAME series, and
     the ``top`` candidates by descending NN distance are the reported
-    discords. Raw (not z-normed) Euclidean distance, on the engine's
-    repo-wide left-to-right fold so the DuckDB oracle matches
-    bit-for-bit; quantized 1e-6 after the sqrt.
+    discords. Raw (not z-normed) Euclidean distance by
+    :func:`sax_zeuclidean`, whose left-to-right sum the DuckDB oracle
+    matches bit-for-bit; quantized 1e-6.
 
     Scale shape: the word histogram is one map-side-combinable groupBy
     (word-space bounded: c^w keys); the rare-word table and the
@@ -210,26 +210,19 @@ def discords(
         F.col("window_id").alias("__oid"),
         F.col("vals").alias("__ovals"),
     )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("__cvals"), F.col("__ovals"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     nn = (
         F.broadcast(cand)
         .join(others, "series_key")
         .where(F.col("window_id") != F.col("__oid"))
         .groupBy("series_key", "window_id", "sax_word", "word_count")
-        .agg(F.min(d2).alias("__m"))
+        .agg(F.min(sax_zeuclidean(F.col("__cvals"), F.col("__ovals"), n)).alias("__m"))
     )
     scored = nn.select(
         "series_key",
         "window_id",
         "sax_word",
         "word_count",
-        (F.floor(F.sqrt(F.col("__m")) * 1e6 + F.lit(0.5)) / 1e6).alias(
+        (F.floor(F.col("__m") * 1e6 + F.lit(0.5)) / 1e6).alias(
             "nn_dist"
         ),
     )
@@ -278,7 +271,7 @@ def allpairs_within(
     reads every word as the wildcard n = 0, i.e. n = w.
 
     ``attach`` (optional): a per-key payload table (``attach_key`` ->
-    ``attach_col``) joined onto BOTH key sides BEFORE the pair
+    ``attach_col``) joined onto the word table BEFORE the pair
     expansion, emitted as ``payload_a``/``payload_b`` (flip-corrected).
     This exists for fused prune-then-refine: attaching the z-normalized
     windows here lets the caller compute the exact distance scan-stage
@@ -291,19 +284,18 @@ def allpairs_within(
     cols = [F.col(key_col).alias("k"), F.col(word_col).alias("wd")]
     if n_col:
         cols.append(F.col(n_col).alias("n"))
-    # the word table feeds three plan branches (distinct pairs + both
-    # expansion sides); materialize it once so the upstream window
-    # aggregation runs once — it is the compressed representation (key +
-    # w chars), orders of magnitude smaller than its source series.
+    # the word table (with its payload) feeds three plan branches
+    # (distinct pairs + both expansion sides); materialize it once so the
+    # upstream window aggregation and the payload join run once.
     # localCheckpoint (eager) rather than persist: same single-compute
     # guarantee, but the blocks are owned by the RDD and freed by the
     # ContextCleaner when the result DataFrame is released, instead of
     # sitting in the cache manager for the session lifetime.
-    base = (
-        words.where(F.col(word_col).isNotNull())
-        .select(*cols)
-        .localCheckpoint(eager=True)
-    )
+    base = words.where(F.col(word_col).isNotNull()).select(*cols)
+    if attach is not None:
+        pay = attach.select(F.col(attach_key).alias("__pk"), F.col(attach_col).alias("__pay"))
+        base = base.join(pay, F.col("k") == F.col("__pk"), "left").drop("__pk")
+    base = base.localCheckpoint(eager=True)
     if not n_col:
         # no n column: every word is the wildcard n = 0 (n = w). Added
         # after the checkpoint, the constant is visible to Catalyst,
@@ -343,28 +335,14 @@ def allpairs_within(
     # but the expansion fans each row out by its word-pair multiplicity —
     # downstream per-pair work inherits THIS side's partitioning, so
     # spread it across the cluster first (cheap: |keys| rows)
+    pay_a = [F.col("__pay").alias("__paya")] if attach is not None else []
+    pay_b = [F.col("__pay").alias("__payb")] if attach is not None else []
     a_keys = base.select(
-        F.col("k").alias("ka"), F.col("wd").alias("word_a"), F.col("n").alias("n_a")
+        F.col("k").alias("ka"), F.col("wd").alias("word_a"), F.col("n").alias("n_a"), *pay_a
     ).repartition(parallelism)
     b_keys = base.select(
-        F.col("k").alias("kb"), F.col("wd").alias("__wb"), F.col("n").alias("__nb")
+        F.col("k").alias("kb"), F.col("wd").alias("__wb"), F.col("n").alias("__nb"), *pay_b
     )
-    if attach is not None:
-        # payload feeds both sides — materialize once (same
-        # single-compute story as the word table above)
-        pay = attach.select(
-            F.col(attach_key).alias("__pk"), F.col(attach_col).alias("__pay")
-        ).localCheckpoint(eager=True)
-        a_keys = (
-            a_keys.join(pay, F.col("ka") == F.col("__pk"), "left")
-            .drop("__pk")
-            .withColumnRenamed("__pay", "__paya")
-        )
-        b_keys = (
-            b_keys.join(pay, F.col("kb") == F.col("__pk"), "left")
-            .drop("__pk")
-            .withColumnRenamed("__pay", "__payb")
-        )
     b_cond = (F.col("word_b") == F.col("__wb")) & (F.col("n_a") == F.col("__nb"))
     expanded = (
         a_keys.join(F.broadcast(word_pairs), ["word_a", "n_a"])
@@ -416,7 +394,7 @@ def allpairs_refined(
     :func:`..operators.windows.tumbling_values`). Each window is
     z-normalized once (:func:`sax_znorm`) and rides the
     :func:`allpairs_within` pair expansion as its payload, so the exact
-    distance (:func:`sax_zeuclidean`, unrolled at ``n``) is a projection
+    distance (:func:`sax_zeuclidean` at ``n``) is a projection
     over the expansion output with no join back to ``values``. The prune
     runs at ``delta + √n·MINDIST_OVERSHOOT[c]``, the most MINDIST can
     exceed the exact distance, so the answer is complete over all-finite
@@ -444,7 +422,7 @@ def allpairs_refined(
         "key_a",
         "key_b",
         (F.col("mindist") * scale).alias("mindist"),
-        sax_zeuclidean(F.col("payload_a"), F.col("payload_b"), n=n).alias(
+        sax_zeuclidean(F.col("payload_a"), F.col("payload_b"), n).alias(
             "exact_dist"
         ),
     ).where(F.col("exact_dist") <= delta)

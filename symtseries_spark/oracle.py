@@ -39,13 +39,18 @@ def bucket_case(z_expr: str, c: int) -> str:
 
 def frame_letter(sum_expr: str, cnt_expr: str, mu: str, sigma: str, c: int) -> str:
     """Letter for one PAA frame given its non-null sum/count and the
-    window-level stats (flat-series rule sigma < STAT_EPS -> z = 0)."""
+    window-level stats — the engine's rule: an empty frame or a NaN sum
+    (+Inf and -Inf in one frame) -> '#'; a ±Inf sum -> the extreme
+    letter; flat series (sigma < STAT_EPS) -> z = 0."""
     z = (
         f"CASE WHEN {sigma} < {STAT_EPS} THEN 0.0 "
         f"ELSE (({sum_expr}) - ({cnt_expr}) * {mu}) / (({cnt_expr}) * {sigma}) END"
     )
     return (
-        f"CASE WHEN ({cnt_expr}) = 0 THEN '{MISSING}' ELSE {bucket_case(z, c)} END"
+        f"CASE WHEN ({cnt_expr}) = 0 OR isnan({sum_expr}) THEN '{MISSING}' "
+        f"WHEN ({sum_expr}) = 'inf'::DOUBLE THEN '{LETTERS[c - 1]}' "
+        f"WHEN ({sum_expr}) = '-inf'::DOUBLE THEN '{LETTERS[0]}' "
+        f"ELSE {bucket_case(z, c)} END"
     )
 
 
@@ -106,15 +111,15 @@ def tumbling_words_sql(
     (series_key, window_id, sax_word). With ``keep_partial``, trailing
     windows shorter than n are kept — missing positions contribute
     nothing to any frame sum/count, which is exactly the engine's
-    NaN back-padding semantics."""
+    NaN back-padding semantics. As in the engine, the window stats read
+    only finite values and the frame sums and counts skip NULL and NaN
+    but keep ±Inf."""
     f = n // w
+    fin = f"CASE WHEN isfinite({value}) THEN {value} END"
     frame_aggs = []
     for j in range(w):
-        lo, hi = j * f, (j + 1) * f - 1
-        frame_aggs.append(
-            f"sum(CASE WHEN p BETWEEN {lo} AND {hi} THEN {value} END) AS s{j},\n"
-            f"         count(CASE WHEN p BETWEEN {lo} AND {hi} THEN {value} END) AS c{j}"
-        )
+        v = f"CASE WHEN p BETWEEN {j * f} AND {(j + 1) * f - 1} AND NOT isnan({value}) THEN {value} END"
+        frame_aggs.append(f"sum({v}) AS s{j},\n         count({v}) AS c{j}")
     letters = " || ".join(
         f"({frame_letter(f's{j}', f'c{j}', 'mu', 'sigma', c)})" for j in range(w)
     )
@@ -130,9 +135,8 @@ WITH ord AS (
   FROM ord
 ), grp AS (
   SELECT series_key, window_id,
-         count({value}) AS finite_cnt, count(*) AS total_cnt,
-         avg({value}) AS mu,
-         coalesce(stddev_pop({value}), 0.0) AS sigma,
+         avg({fin}) AS mu,
+         coalesce(stddev_pop({fin}), 0.0) AS sigma,
          {",".join(frame_aggs)}
   FROM pos
   GROUP BY series_key, window_id

@@ -89,8 +89,11 @@ def _seqsum(a: np.ndarray, axis: int) -> np.ndarray:
     summation (block size 128), which can differ from the batch path's
     sequential JVM fold by an ulp — enough to flip a letter when a
     z-value sits exactly on a breakpoint. cumsum accumulates in index
-    order, so streaming words match the batch plan bit-for-bit (masked
-    positions contribute +0.0, which is exact)."""
+    order, so each frame sum is the left-to-right sum of its values
+    (masked positions contribute +0.0, which is exact). The window stats
+    are still this module's own two-pass: the batch plan takes σ from
+    Spark's online ``stddev_pop``, so a stream word can differ from the
+    batch one where a z-value is within rounding of a breakpoint."""
     return np.cumsum(a, axis=axis).take(-1, axis=axis)
 
 

@@ -444,6 +444,69 @@ def test_allpairs_refined_matches_bruteforce_and_lower_bound(spark, n, dirty):
         assert set(refined(delta)) == expected
 
 
+@pytest.mark.parametrize("n", [512, 4096])
+def test_allpairs_refined_at_domain_edges(spark, n):
+    """Windows up to the n <= 4096 cap plan and run: the exact distances
+    of every pair equal a NumPy brute force, and a finite delta returns
+    exactly the brute-force set {exact <= delta}."""
+    import numpy as np
+
+    w, c = 4, 8
+    rng = np.random.default_rng(n)
+    series = {key: np.cumsum(rng.normal(size=n)).tolist() for key in range(4)}
+    words, vals = _refine_inputs(spark, series, n, w, c)
+
+    z = {k: (np.array(v) - np.mean(v)) / np.std(v) for k, v in series.items()}
+    exact = {
+        (ka, kb): float(np.sqrt(np.sum((z[ka] - z[kb]) ** 2)))
+        for ka in z for kb in z if ka < kb
+    }
+    got = {
+        (r["key_a"], r["key_b"]): r["exact_dist"]
+        for r in allpairs_refined(
+            words, vals, key="series_key", n=n, w=w, c=c, delta=1e9
+        ).collect()
+    }
+    assert set(got) == set(exact)
+    for pair, d in got.items():
+        assert abs(d - exact[pair]) < 1e-9, (pair, d, exact[pair])
+    delta = sorted(exact.values())[len(exact) // 2]
+    delta = (delta + max(d for d in exact.values() if d < delta)) / 2
+    expected = {pair for pair, d in exact.items() if d <= delta}
+    got = allpairs_refined(words, vals, key="series_key", n=n, w=w, c=c, delta=delta)
+    assert {(r["key_a"], r["key_b"]) for r in got.collect()} == expected
+
+
+@pytest.mark.parametrize("w", [512, 2048])
+def test_long_word_mindist_matches_pykernel(spark, w):
+    """Words up to the w <= 2048 cap plan and run: ``topk_nearest`` (the
+    pattern form) and ``allpairs_within`` (the two-column form) equal
+    pykernel bit for bit, '#' letters included."""
+    c, n = 8, 2 * w
+    rng = random.Random(w)
+    alphabet = [pk.letter_of(i, c) for i in range(c)] + ["#"]
+    words = ["".join(rng.choice(alphabet) for _ in range(w)) for _ in range(5)]
+    pattern = "".join(rng.choice(alphabet) for _ in range(w))
+    df = spark.createDataFrame(
+        [(i, x, n) for i, x in enumerate(words)], "series_key int, sax_word string, n int"
+    )
+
+    def parts(a, b):
+        return pk.mindist_parts(pk.parse(a, c), pk.parse(b, c), c=c, n_a=n, n_b=0)
+
+    top = topk_nearest(df, pattern, c=c, k=3, n="n", tiebreakers=["series_key"]).collect()
+    ranked = sorted(range(len(words)), key=lambda i: (parts(words[i], pattern)[0], i))
+    assert [r["series_key"] for r in top] == ranked[:3]
+    for r in top:
+        got = (r["mindist"], r["mindist_above"], r["mindist_below"])
+        assert got == parts(r["sax_word"], pattern), r["series_key"]
+
+    pairs = allpairs_within(df, w=w, c=c, delta=float("inf")).collect()
+    assert len(pairs) == len(words) * (len(words) - 1) // 2
+    for r in pairs:
+        assert (r["mindist"], r["above"], r["below"]) == parts(r["word_a"], r["word_b"])
+
+
 def test_mindist_overshoots_exact_distance_within_bound(spark):
     """The pair table is rounded while the breakpoints are truncated
     (2.301 against a gap of 2.300 at c=8), so MINDIST can exceed the
@@ -476,6 +539,44 @@ def test_mindist_overshoots_exact_distance_within_bound(spark):
     assert [(r["key_a"], r["key_b"]) for r in got] == [(1, 2)]
     assert abs(got[0]["exact_dist"] - exact) < 1e-9
     assert abs(got[0]["mindist"] - lb) < 1e-9
+
+
+def test_tumbling_non_finite_matches_oracle_and_pykernel(spark):
+    """Windows holding NULL, NaN, +Inf, -Inf, and +Inf with -Inf in one
+    frame: ``tumbling_sax`` equals ``pk.encode`` (NULL read as NaN) and
+    the DuckDB oracle, whose stats read finite values only, whose frame
+    sums and counts skip NULL and NaN, and whose NaN frame sum is '#'."""
+    import duckdb
+
+    from symtseries_spark.oracle import tumbling_words_sql
+
+    n, w, c = 8, 4, 8
+    rng = random.Random(11)
+    specials = [{}, {1: None}, {2: NAN}, {5: INF}, {0: -INF}, {6: INF, 7: -INF},
+                {0: NAN, 1: NAN, 3: INF}, {2: None, 4: -INF, 5: INF}]
+    rows = []
+    for wid, special in enumerate(specials):
+        vals = [round(rng.gauss(0.0, 1.0), 3) for _ in range(n)]
+        for pos, v in special.items():
+            vals[pos] = v
+        rows += [(1, wid * n + p, v) for p, v in enumerate(vals)]
+    df = spark.createDataFrame(rows, "user_id long, ts long, value double")
+    got = sorted(
+        (r["window_id"], r["sax_word"])
+        for r in tumbling_sax(df, key="user_id", order="ts", value="value", n=n, w=w, c=c).collect()
+    )
+    series = [NAN if v is None else v for _, _, v in rows]
+    assert got == [(k, pk.encode(series[k * n : (k + 1) * n], w, c)) for k in range(len(specials))]
+    assert got[3][1][2] == "H" and got[4][1][0] == "A" and got[5][1][3] == "#"
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ev (user_id BIGINT, ts BIGINT, value DOUBLE)")
+    con.executemany("INSERT INTO ev VALUES (?, ?, ?)", rows)
+    oracle = con.execute(
+        f"SELECT window_id, sax_word FROM ({tumbling_words_sql(n, w, c, table='ev', order='ts')})"
+        " ORDER BY window_id"
+    ).fetchall()
+    assert oracle == got
 
 
 class TestNullHandling:

@@ -331,31 +331,58 @@ def test_per_row_compatibility_gates(spark):
         spark.conf.set("spark.sql.ansi.enabled", prior)
 
 
-def test_zeuclidean_fixed_n_matches_generic(spark):
-    """r13: the flat fixed-length unroll must be bit-identical to the
-    HOF fold — including non-finite positions (contribute 0), NULL
-    sides, length mismatches, and the wrong-n fallback."""
+@pytest.mark.parametrize("form", ["unrolled", "fold"])
+def test_zeuclidean_forms_match_python_fold(spark, form):
+    """Both forms of ``sax_zeuclidean``, one n on each side of
+    ``UNROLL_MAX``, equal a Python left-to-right fold bit for bit under
+    ANSI on and off: positions non-finite on either side add 0, and a
+    NULL side, a length mismatch or a size other than ``n`` give NULL.
+    At n <= UNROLL_MAX the plan holds no higher-order function."""
     from pyspark.sql import functions as F
 
-    from symtseries_spark.functions.sax import sax_zeuclidean
+    from symtseries_spark.functions.sax import UNROLL_MAX, sax_zeuclidean
 
+    n = UNROLL_MAX if form == "unrolled" else UNROLL_MAX + 1
+    rng = random.Random(n)
+
+    def vec(k):
+        return [rng.uniform(-3.0, 3.0) for _ in range(k)]
+
+    dirty_a, dirty_b = vec(n), vec(n)
+    dirty_a[0], dirty_b[1], dirty_a[2], dirty_b[2] = float("nan"), float("inf"), float("-inf"), float("nan")
+    dirty_a[n - 1] = float("inf")
     rows = [
-        ([1.0, 2.0, 3.0, 4.0], [4.0, 3.0, 2.0, 1.0]),
-        ([1.0, float("nan"), 3.0, 4.0], [1.0, 2.0, float("inf"), 4.0]),
-        ([0.0, 0.0, 0.0, 0.0], [0.0, 0.0, 0.0, 0.0]),
-        (None, [1.0, 2.0, 3.0, 4.0]),
-        ([1.0, 2.0], [1.0, 2.0]),          # size 2 != n=4 -> fallback
-        ([1.0, 2.0, 3.0], [1.0, 2.0]),     # mismatched -> NULL
+        (vec(n), vec(n)),
+        (dirty_a, dirty_b),
+        ([0.0] * n, [0.0] * n),
+        (None, vec(n)),
+        (vec(n), None),
+        (vec(n), vec(n - 1)),      # length mismatch
+        (vec(n - 1), vec(n - 1)),  # equal sizes, not n
+        (vec(n + 1), vec(n + 1)),
     ]
+
+    def fold(za, zb):
+        if za is None or zb is None or len(za) != n or len(zb) != n:
+            return None
+        acc = 0.0
+        for x, y in zip(za, zb):
+            if math.isfinite(x) and math.isfinite(y):
+                acc += (x - y) * (x - y)
+        return math.sqrt(acc)
+
     df = spark.createDataFrame(rows, "za array<double>, zb array<double>")
-    got = df.select(
-        sax_zeuclidean(F.col("za"), F.col("zb")).alias("g"),
-        sax_zeuclidean(F.col("za"), F.col("zb"), n=4).alias("f"),
-    ).collect()
-    for r in got:
-        assert (r["g"] is None) == (r["f"] is None), r
-        if r["g"] is not None:
-            assert r["g"] == r["f"], r
+    query = df.select(sax_zeuclidean(F.col("za"), F.col("zb"), n).alias("d"))
+    plan = query._jdf.queryExecution().optimizedPlan().toString()
+    assert ("zip_with" in plan or "aggregate" in plan) == (form == "fold"), plan
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = [r["d"] for r in query.collect()]
+            assert got == [fold(za, zb) for za, zb in rows], ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
 
 
 def test_one_pair_table_and_one_letter_rule():
